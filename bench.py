@@ -142,45 +142,12 @@ def main() -> None:
     ).persist()
     m = edges.count()
 
-    # broadcast is an API-parity mode (auto never selects it; its value is
-    # the zero-shuffle-per-iteration plan shape, pinned by
-    # tests/test_plans.py): 3 iterations like the dataframe row, so a mode
-    # that csr dominates no longer costs 30% of the bench wall (round-4
-    # verdict). Two ratios below: the legacy mean-over-all-iterations ratio
-    # (comparable to BENCH_r04's 0.912) swings 0.79-0.96 across runs because
-    # the dataframe mode's first iteration carries most of the setup; the
-    # _warm variant (median of post-warm-up iterations, same convention as
-    # the headline) is the steady-state comparison and reads ~0.65 —
-    # broadcast's per-iteration driver-side build of the O(V) rank relation
-    # costs more than the single shuffle it removes in single-JVM local mode
-    # (the r4 round notes' ">= 1.17" was a pre-rewrite measurement error).
-    res_bc = timed(
-        "pagerank_broadcast_3iter",
-        lambda: PageRank(mode="broadcast", max_iter=3, eps=0.0).run(edges, n_vertices),
-    )
-    extra["edges_per_sec_per_iter_broadcast"] = round(res_bc.edges_per_sec_per_iter, 1)
-
     res_df = timed(
         "pagerank_dataframe_3iter",
         lambda: PageRank(mode="dataframe", max_iter=3, eps=0.0).run(edges, n_vertices),
     )
     extra["edges_per_sec_per_iter_df"] = round(res_df.edges_per_sec_per_iter, 1)
-    # equal iteration counts, but the ratio is still the per-iteration
-    # comparison (≈1.0 means broadcast matches dataframe per iteration;
-    # csr dominates both)
-    extra["broadcast_per_iter_vs_df"] = round(
-        res_bc.edges_per_sec_per_iter / res_df.edges_per_sec_per_iter, 3
-    )
-    import statistics as _stats
-
-    if len(res_bc.iter_seconds) > 1 and len(res_df.iter_seconds) > 1:
-        extra["broadcast_per_iter_vs_df_warm"] = round(
-            _stats.median(res_df.iter_seconds[1:])
-            / _stats.median(res_bc.iter_seconds[1:]),
-            3,
-        )
     extra["edges_per_sec_per_iter"] = max(
-        extra["edges_per_sec_per_iter_broadcast"],
         extra["edges_per_sec_per_iter_csr"],
         extra["edges_per_sec_per_iter_df"],
     )

@@ -1,11 +1,11 @@
 #!/usr/bin/env python
 """Kernel-only attribution for the CSR PageRank iteration (no Spark).
 
-Runs the byte-identical per-file read + RLE-expand + gather + bincount loop
-that ``PageRank._iterate_csr``'s ``spmv_files`` executes inside Arrow workers
-(pagerank_spark/algorithms/pagerank.py), over an existing ``csr:files`` pack,
-with plain ``multiprocessing`` — isolating the NumPy kernel from the Spark
-harness (job submission, Python-task launch, broadcast, Arrow pull).
+Runs the engine's own chunk reader and SpMV kernel (``ChunkReader`` and
+``spmv_chunk`` in pagerank_spark/algorithms/pagerank.py, the loop every csr
+iteration task executes inside Arrow workers) over an existing ``csr:files``
+pack, with plain ``multiprocessing`` — isolating the NumPy kernel from the
+Spark harness (job submission, Python-task launch, broadcast, Arrow pull).
 
 Why this exists (round 5): the per-iteration engine wall is kernel + a
 Python-STAGE floor that is structural to PySpark on this host — measured
@@ -39,20 +39,9 @@ from multiprocessing import Pool
 
 import numpy as np
 
+from pagerank_spark.algorithms.pagerank import ChunkReader, spmv_chunk
+
 _G: dict = {}
-
-
-def _read_exact(f, mv: memoryview) -> None:
-    got = f.readinto(mv)
-    if got != len(mv):
-        raise EOFError(f"short read: {got} != {len(mv)}")
-
-
-def _read_bytes(f, n: int) -> bytes:
-    b = f.read(n)
-    if len(b) != n:
-        raise EOFError(f"short read: {len(b)} != {n}")
-    return b
 
 
 def _init(pack: str, sub_override: int | None) -> None:
@@ -79,71 +68,35 @@ def _run_shard(paths: list[str]):
 
 
 def run_shard_acc(paths: list[str]):
-    """Same loop as spmv_files (file header -> RLE src runs or plain src +
-    u16/idx dst slots -> sub-chunked gather + bincount scatter-add into the
-    block accumulator); returns the raw accumulator so
-    tests/test_bench_kernel.py can pin byte-identical parity with the
-    engine's in-Spark kernel output."""
-    rwv = _G["rw"]
-    ml = _G["ml"]
-    idx_t = _G["idx_t"]
-    sub = _G["sub_override"] or min(1 << 21, max(1 << 16, 4 * ml))
-    wbuf = np.empty(sub, dtype=rwv.dtype)
-    sbuf = np.empty(sub, dtype=idx_t)
-    d16 = np.empty(sub, dtype=np.uint16)
-    dxx = np.empty(sub, dtype=idx_t)
-    isz = np.dtype(idx_t).itemsize
-    a = np.zeros(ml)
+    """The engine's iteration loop over one shard of chunk files (read each
+    into a reused buffer, then ``spmv_chunk`` into the block accumulator);
+    returns the raw accumulator so tests/test_bench_kernel.py can pin parity
+    with the NumPy ground truth."""
+    rwv, idx_t, sub = _G["rw"], _G["idx_t"], _G["sub_override"]
+    reader = ChunkReader()
+    a = np.zeros(_G["ml"])
     edges = 0
     t0 = time.time()
     for path in paths:
-        with open(path, "rb", buffering=0) as f:
-            hdr = _read_bytes(f, 20)
-            k = int(np.frombuffer(hdr, np.int64, 1, 0)[0])
-            nu = int(np.frombuffer(hdr, np.int64, 1, 8)[0])
-            u16 = bool(np.frombuffer(hdr, np.int32, 1, 16)[0])
-            edges += k
-            if nu:
-                uniq = np.frombuffer(_read_bytes(f, nu * isz), idx_t)
-                counts = np.frombuffer(_read_bytes(f, nu * 4), np.int32)
-                w_runs = rwv[uniq]
-                ends = np.cumsum(counts)
-                dst_off = 20 + nu * (isz + 4)
-            else:
-                dst_off = 20 + k * isz
-            dsz = 2 if u16 else isz
-            dbuf = d16 if u16 else dxx
-            for lo in range(0, k, sub):
-                clen = min(sub, k - lo)
-                if nu:
-                    i0 = int(np.searchsorted(ends, lo, "right"))
-                    i1 = int(np.searchsorted(ends, lo + clen, "left"))
-                    cw = counts[i0 : i1 + 1].astype(np.int64)
-                    start0 = int(ends[i0]) - int(counts[i0])
-                    cw[0] -= lo - start0
-                    over = int(ends[i1]) - (lo + clen)
-                    if over > 0:
-                        cw[-1] -= over
-                    w = np.repeat(w_runs[i0 : i1 + 1], cw)
-                else:
-                    f.seek(20 + lo * isz)
-                    _read_exact(f, memoryview(sbuf)[:clen].cast("B"))
-                    w = wbuf[:clen]
-                    np.take(rwv, sbuf[:clen], out=w)
-                f.seek(dst_off + lo * dsz)
-                _read_exact(f, memoryview(dbuf)[:clen].cast("B"))
-                a += np.bincount(dbuf[:clen], weights=w, minlength=ml)
+        edges += spmv_chunk(reader.read(path, idx_t), rwv, a, idx_t, sub)
     return edges, time.time() - t0, a
 
 
-def main() -> None:
+def _positive_int(text: str) -> int:
+    v = int(text)
+    if v < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {v}")
+    return v
+
+
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pack", default="/tmp/prbench_pack_100000_1000000000_s42_c32")
     ap.add_argument("--procs", default="32,8,4,1")
     ap.add_argument("--trials", type=int, default=3)
-    ap.add_argument("--sub-chunk", type=int, default=None,
+    ap.add_argument("--sub-chunk", type=_positive_int, default=None,
                     help="override the L2-resident sub-chunk length (edges)")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     with open(os.path.join(args.pack, "manifest.json")) as fh:
         man = json.load(fh)

@@ -59,7 +59,7 @@ if mode == "pipeline":
     pages = generate_pages(spark, n, seed=42, num_partitions=cores * 4).persist()
     pages.count()
     g = build_link_graph(pages)
-    res = PageRank(mode="broadcast", max_iter=5, eps=0.0).run(g.edges, g.n)
+    res = PageRank(mode="auto", max_iter=5, eps=0.0).run(g.edges, g.n)
     res.ranks.count()
     wall = time.time() - t0
     print(json.dumps({{"cores": cores, "iter_sec_med": wall,

@@ -16,7 +16,7 @@ rank-1 term are the two scalars the reference folds algebraically
 exact arithmetic; tracking it reproduces the reference's matrix-vector product
 bit-for-bit to within fp tolerance).
 
-Three physical strategies:
+Two physical strategies:
 
 - ``mode="dataframe"`` — the fully distributed path: the SpMV is the
   edges⋈ranks equi-join + groupBy(dst) sum (the distributed analog of the
@@ -35,31 +35,24 @@ Three physical strategies:
   into a single aggregate, mirroring the reference's fused `getDelta`
   copy+residual kernel).
 
-- ``mode="broadcast"`` — the zero-shuffle path, all JVM-side: weighted
-  edges are hash-partitioned by ``dst`` once and persisted; each iteration
-  broadcast-hash-joins the non-dangling rank rows against them, aggregates
-  by ``dst`` with NO exchange (the persisted partitioning already satisfies
-  the aggregate's distribution requirement), and the rank-update join
-  consumes hash(id) × hash(dst) — zero shuffle exchanges per iteration,
-  entirely inside whole-stage codegen (audited by
-  tests/test_plans.py::test_pagerank_broadcast_iteration_zero_shuffle).
-  The rank state stays JVM-side (same checkpointed-state machinery as the
-  dataframe mode); the driver pulls only the 3 per-iteration scalars
-  (delta, dangling mass, total mass). Appropriate while the rank relation
-  fits in a broadcast (~1e8 vertices); kept for API parity — csr dominates
-  on throughput and is what `mode="auto"` picks at that vertex scale.
-
 - ``mode="csr"`` — the throughput path: edges are blocked by interleaved
-  destination stripes (``dst % nblocks``; hubs further split by src — see
-  ``split_blocks``), packed once into binary cells (JVM cache) or
-  executor-local files, then each iteration is a single map-only stage in
-  which every task runs a NumPy scatter-add (partition-local CSR SpMV) over
-  a broadcast rank vector, emitting one packed float64 partial block per
-  task. Driver assembles the next vector. This is the SIMD analog of the
-  reference's NASM kernels (getVectorPik_*.nasm): vectorized inner loop, no
-  per-iteration shuffle. Measured 590M edges/s/iter on 8 cores at 1B edges.
-  Appropriate while the rank vector fits in executor memory (~1e8-1e9
-  vertices at 8 bytes each); beyond that, use "dataframe".
+  destination stripes (``dst % nblocks``; hubs further split by src), sorted
+  by src and encoded once into compact chunks (``encode_chunk``: RLE or
+  plain src, uint16 slots when they fit, ~2.6 B/edge). One byte format,
+  two storage carriers (``csr_storage``): "cells" keeps the chunks as binary
+  rows in the JVM cache (no executor-local storage needed), "files" writes
+  them once to executor-local files so an iteration moves only the rank
+  vector. Each iteration is a single map-only stage in which every task
+  runs the same NumPy scatter-add (``spmv_chunk``, partition-local CSR
+  SpMV) over a broadcast rank vector, emitting one float64 partial block
+  per task. Driver assembles the next vector. This is the SIMD analog of
+  the reference's NASM kernels (getVectorPik_*.nasm): vectorized inner
+  loop, no per-iteration shuffle. Measured 590M edges/s/iter on 8 cores at
+  1B edges. Appropriate while the rank vector fits in executor memory
+  (~1e8-1e9 vertices at 8 bytes each); beyond that, use "dataframe".
+
+``mode="auto"`` picks csr up to ``AUTO_CSR_MAX_VERTICES`` and dataframe
+beyond.
 """
 
 from __future__ import annotations
@@ -104,10 +97,112 @@ def _read_exact(f, mv: memoryview) -> None:
         got += k
 
 
-def _read_bytes(f, n: int) -> bytes:
-    buf = bytearray(n)
-    _read_exact(f, memoryview(buf))
-    return bytes(buf)
+# Packed chunk layout (one format for both csr_storage carriers). Per-edge
+# DRAM traffic is the scaling ceiling for SpMV, so the raw 8 B/edge int32
+# pairs are encoded to ~2-3 B/edge:
+#   int64 k | int64 n_uniq (0 = plain src) | int32 u16 (slots are uint16)
+#   [rle: n_uniq src idx_t, n_uniq run counts int32 | plain: k src idx_t]
+#   k slots (uint16 when u16, else idx_t)
+# src is sorted within a chunk, so the rank gather rwv[src] is
+# (near-)sequential — the cache-locality analog of the reference's srcSparse
+# reduced-matrix layout, paid once at pack time.
+_CHUNK_HEADER = 20
+
+
+def encode_chunk(src_s: np.ndarray, slot_s: np.ndarray, idx_t, u16: bool) -> bytes:
+    """Encode one block's src-sorted (src, slot) edges as a packed chunk."""
+    k = src_s.shape[0]
+    uniq, counts = np.unique(src_s, return_counts=True)
+    use_rle = uniq.shape[0] <= k // 4
+    parts = [
+        np.int64(k).tobytes(),
+        np.int64(uniq.shape[0] if use_rle else 0).tobytes(),
+        np.int32(1 if u16 else 0).tobytes(),
+    ]
+    if use_rle:
+        parts += [uniq.astype(idx_t).tobytes(), counts.astype(np.int32).tobytes()]
+    else:
+        parts.append(src_s.astype(idx_t).tobytes())
+    parts.append(slot_s.astype(np.uint16 if u16 else idx_t).tobytes())
+    return b"".join(parts)
+
+
+def _chunk_fields(buf, idx_t) -> tuple[int, int, bool, int]:
+    """(k, n_uniq, u16, total byte length) from a chunk's header."""
+    k, nu = (int(x) for x in np.frombuffer(buf, np.int64, 2, 0))
+    u16 = bool(np.frombuffer(buf, np.int32, 1, 16)[0])
+    isz = np.dtype(idx_t).itemsize
+    src_len = nu * (isz + 4) if nu else k * isz
+    return k, nu, u16, _CHUNK_HEADER + src_len + k * (2 if u16 else isz)
+
+
+class ChunkReader:
+    """Reads chunk files into one reused buffer, grown when a larger chunk
+    arrives (np.load/mmap would re-fault every page every iteration)."""
+
+    def __init__(self):
+        self._buf = np.empty(1 << 20, dtype=np.uint8)
+
+    def read(self, path: str, idx_t) -> memoryview:
+        with open(path, "rb", buffering=0) as f:
+            _read_exact(f, memoryview(self._buf)[:_CHUNK_HEADER])
+            need = _chunk_fields(self._buf, idx_t)[3]
+            if self._buf.shape[0] < need:
+                grown = np.empty(need, dtype=np.uint8)
+                grown[:_CHUNK_HEADER] = self._buf[:_CHUNK_HEADER]
+                self._buf = grown
+            _read_exact(f, memoryview(self._buf)[_CHUNK_HEADER:need])
+        return memoryview(self._buf)[:need]
+
+
+def spmv_chunk(
+    buf, rwv: np.ndarray, acc: np.ndarray, idx_t, sub: int | None = None
+) -> int:
+    """Scatter-add one packed chunk into ``acc``: acc[slot] += rwv[src] per
+    edge (np.bincount = the NumPy analog of the reference's SIMD
+    getVectorPik kernel). Returns the chunk's edge count.
+
+    The chunk is processed in ``sub``-edge pieces so the expand/gather/
+    bincount working set stays L2-resident and DRAM only streams the chunk.
+    Measured with bench_kernel.py over the 1B-edge bench pack (round 5):
+    2M-edge pieces run 0.95B edges/s aggregate at 32 procs, 64k pieces
+    2.7-2.8B edges/s (1p 0.15B / 4p 0.58B / 8p ~1.0B) — kernel-only scaling
+    1->4 ~0.93 and 8->32 ~0.6-0.7, the box's DRAM wall (BENCH/BASELINE.md).
+    Each bincount also zeroes+adds an O(ml) output, so the default ``sub``
+    grows with ml to keep that amortized when blocks are big."""
+    k, nu, u16, _ = _chunk_fields(buf, idx_t)
+    ml = acc.shape[0]
+    if sub is None:
+        sub = min(1 << 21, max(1 << 16, 4 * ml))
+    isz = np.dtype(idx_t).itemsize
+    if nu:
+        uniq = np.frombuffer(buf, idx_t, nu, _CHUNK_HEADER)
+        counts = np.frombuffer(buf, np.int32, nu, _CHUNK_HEADER + nu * isz)
+        w_runs = rwv[uniq]
+        ends = np.cumsum(counts)
+        slot_off = _CHUNK_HEADER + nu * (isz + 4)
+    else:
+        src = np.frombuffer(buf, idx_t, k, _CHUNK_HEADER)
+        wbuf = np.empty(min(sub, k), dtype=rwv.dtype)
+        slot_off = _CHUNK_HEADER + k * isz
+    slots = np.frombuffer(buf, np.uint16 if u16 else idx_t, k, slot_off)
+    for lo in range(0, k, sub):
+        clen = min(sub, k - lo)
+        if nu:
+            # expand the RLE runs covering [lo, lo+clen)
+            i0 = int(np.searchsorted(ends, lo, "right"))
+            i1 = int(np.searchsorted(ends, lo + clen, "left"))
+            cw = counts[i0 : i1 + 1].astype(np.int64)
+            cw[0] -= lo - (int(ends[i0]) - int(counts[i0]))
+            over = int(ends[i1]) - (lo + clen)
+            if over > 0:
+                cw[-1] -= over
+            w = np.repeat(w_runs[i0 : i1 + 1], cw)
+        else:
+            w = wbuf[:clen]
+            np.take(rwv, src[lo : lo + clen], out=w)
+        acc += np.bincount(slots[lo : lo + clen], weights=w, minlength=ml)
+    return k
 
 
 def _block_aligned(df: DataFrame, nblocks: int, spark) -> DataFrame:
@@ -189,6 +284,14 @@ class PageRank:
         initial_ranks: DataFrame | None = None,
         rank_dtype: str = "float64",
     ):
+        # reject unknown strategies here: run() would otherwise fall through
+        # to the dataframe path (and _run_csr to cells) without a word
+        if mode not in ("auto", "dataframe", "csr"):
+            raise ValueError(f"mode must be auto|dataframe|csr, got {mode!r}")
+        if csr_storage not in ("cells", "files"):
+            raise ValueError(
+                f"csr_storage must be cells|files, got {csr_storage!r}"
+            )
         self.c = c
         self.eps = eps
         self.max_iter = max_iter
@@ -201,11 +304,13 @@ class PageRank:
         # runs as a salted two-stage sum (graph/skew.py) so no reduce task
         # owns more than 1/salt_partitions of a hot dst key's rows.
         self.salt_partitions = salt_partitions
-        # csr_storage="cells": packed binary cells cached in the JVM (default;
-        # no external storage needed). "files": blocks spilled once to .npy
-        # files under scratch_dir — per-iteration data movement is then ONLY
-        # the rank vector, the analog of executor-local shuffle files; demands
-        # storage shared/local to executors (trivially true in local mode).
+        # csr_storage chooses only WHERE the packed chunks live (the byte
+        # format is the same, see encode_chunk). "cells": binary rows cached
+        # in the JVM (default; no external storage needed). "files": chunks
+        # written once to b*.bin files under scratch_dir — per-iteration data
+        # movement is then ONLY the rank vector, the analog of
+        # executor-local shuffle files; demands storage shared/local to
+        # executors (trivially true in local mode).
         self.csr_storage = csr_storage
         self.scratch_dir = scratch_dir
         # reuse_pack=True + scratch_dir: if scratch_dir holds a manifest from a
@@ -252,7 +357,7 @@ class PageRank:
         # mode (src/pagerank32c.c:933-938): its fp32 ACCUMULATION under
         # nondeterministic reduce order is what breaks 1e-6 reproducibility
         # (SURVEY §1.2), not the fp32 operand width. Ignored by the
-        # dataframe/broadcast modes (their ranks live in Spark doubles).
+        # dataframe mode (its ranks live in Spark doubles).
         if rank_dtype not in ("float32", "float64"):
             raise ValueError(f"rank_dtype must be float32|float64, got {rank_dtype!r}")
         self.rank_dtype = np.float32 if rank_dtype == "float32" else np.float64
@@ -311,8 +416,6 @@ class PageRank:
             mode = self.dispatch_mode(n)
         if mode == "csr":
             return self._run_csr(edges, n, run_id, resume)
-        if mode == "broadcast":
-            return self._run_broadcast(edges, n, run_id, resume)
         return self._run_dataframe(edges, n, run_id, resume)
 
     # vertices above which the driver-resident rank vector (8 B/vertex, plus
@@ -325,10 +428,7 @@ class PageRank:
     def dispatch_mode(cls, n: int) -> str:
         """mode="auto" resolution: csr (driver-assembled rank vector, fastest
         measured throughput) while the vector comfortably fits driver/executor
-        memory; dataframe (nothing driver-resident, 1 shuffle/iter) beyond.
-        The broadcast mode is never auto-chosen: it is dominated by csr on
-        throughput and by dataframe on scalability (kept for API parity and
-        as the JVM-only execution path)."""
+        memory; dataframe (nothing driver-resident, 1 shuffle/iter) beyond."""
         return "csr" if n <= cls.AUTO_CSR_MAX_VERTICES else "dataframe"
 
     # vertex count above which the O(n) sides of the setup/iteration joins
@@ -343,37 +443,22 @@ class PageRank:
     # ------------------------------------------------------- dataframe path
     def _df_iteration(
         self, ew, state, n: int, dmass: float, total: float, no_bcast,
-        bcast: bool = False,
     ):
         """One power-iteration step as a DataFrame plan.
 
-        ``bcast=False`` (dataframe mode): physical cost is a SINGLE shuffle
-        exchange (the contribution aggregation): the contribution join
-        consumes the edge cache's hash(src) and the state checkpoint's
-        hash(id) partitionings, and the rank-update left join consumes
-        hash(id) × the aggregation output's hash(dst) — EnsureRequirements
-        inserts no exchange for either, PROVIDED the state checkpoint was
-        compiled under util.static_plan (AQE-compiled checkpoints record
-        UnknownPartitioning and regress this plan to 3 exchanges). Audited
-        by tests/test_plans.py::test_pagerank_df_iteration_single_exchange.
-
-        ``bcast=True`` (broadcast mode): ZERO shuffle exchanges — the
-        contribution join broadcasts the non-dangling rank rows against the
-        hash(dst)-partitioned edge cache, the groupBy(dst) aggregates on the
-        cache's partitioning in place (broadcast joins preserve the streamed
-        side's partitioning), and the rank-update join consumes hash(id) ×
-        hash(dst) as above. Dangling rows never match an edge src, so they
-        are filtered out of the broadcast relation rather than shipped.
-        Audited by test_pagerank_broadcast_iteration_zero_shuffle."""
+        Physical cost is a SINGLE shuffle exchange (the contribution
+        aggregation): the contribution join consumes the edge cache's
+        hash(src) and the state checkpoint's hash(id) partitionings, and the
+        rank-update left join consumes hash(id) × the aggregation output's
+        hash(dst) — EnsureRequirements inserts no exchange for either,
+        PROVIDED the state checkpoint was compiled under util.static_plan
+        (AQE-compiled checkpoints record UnknownPartitioning and regress
+        this plan to 3 exchanges). Audited by
+        tests/test_plans.py::test_pagerank_df_iteration_single_exchange."""
         c = self.c
-        if bcast:
-            ranks_in = F.broadcast(
-                state.filter(F.col("non_dangling")).select("id", "rank")
-            )
-        else:
-            ranks_in = no_bcast(state.select("id", "rank"))
+        ranks_in = no_bcast(state.select("id", "rank"))
         joined = ew.join(ranks_in, ew.src == F.col("id"))
-        if self.salt_partitions and not bcast:
+        if self.salt_partitions:
             from pagerank_spark.graph.skew import salted_sum
 
             contribs = salted_sum(
@@ -399,8 +484,7 @@ class PageRank:
         )
 
     def _run_dataframe(
-        self, edges: DataFrame, n: int, run_id: str, resume: bool,
-        bcast: bool = False,
+        self, edges: DataFrame, n: int, run_id: str, resume: bool
     ) -> PageRankResult:
         spark = edges.sparkSession
         eps = self.eps
@@ -409,16 +493,13 @@ class PageRank:
         def no_bcast(df: DataFrame) -> DataFrame:
             return df if n <= self.BROADCASTABLE_N else df.hint("shuffle_hash")
 
-        # outdegree + edge weights, built once. Dataframe mode partitions
-        # edges by src so the per-iteration contribution join only shuffles
-        # the (small) rank side; broadcast mode partitions by dst so the
-        # contribution groupBy(dst) aggregates on the cache's partitioning
-        # with no exchange at all (the rank side arrives via broadcast).
+        # outdegree + edge weights, built once, partitioned by src so the
+        # per-iteration contribution join only shuffles the (small) rank side
         degrees = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
         ew = (
             edges.join(no_bcast(degrees), "src")
             .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
-            .repartition(shuffle_p, "dst" if bcast else "src")
+            .repartition(shuffle_p, "src")
             .persist()
         )
         m = ew.count()  # materialize; also the per-iteration shuffle volume
@@ -478,7 +559,7 @@ class PageRank:
             # this iteration's rank-update join plan no state re-exchange
             with _util.static_plan(spark):
                 new_state = self._df_iteration(
-                    ew, state, n, dmass, total, no_bcast, bcast=bcast
+                    ew, state, n, dmass, total, no_bcast
                 ).localCheckpoint(eager=True)
             # single fused scan over the checkpoint: residual + next
             # dangling/total mass (getDelta analog)
@@ -495,8 +576,7 @@ class PageRank:
             wall = time.time() - t0
             iter_secs.append(wall)
             self._checkpoint_and_log(
-                spark, run_id, it, state, delta, dmass, total, m, wall,
-                mode="broadcast" if bcast else "dataframe",
+                spark, run_id, it, state, delta, dmass, total, m, wall
             )
             if delta < eps:
                 break
@@ -505,26 +585,6 @@ class PageRank:
         ew.unpersist()
         tput = m / (sum(iter_secs) / len(iter_secs)) if iter_secs else 0.0
         return PageRankResult(ranks, it, deltas, run_id, tput, iter_secs)
-
-    # -------------------------------------------------------- broadcast path
-    def _run_broadcast(
-        self, edges: DataFrame, n: int, run_id: str, resume: bool
-    ) -> PageRankResult:
-        """Broadcast mode = the dataframe driver with the broadcast physical
-        strategy (see _df_iteration bcast=True): edges cached hash(dst), the
-        rank rows shipped per iteration via a JVM broadcast exchange, zero
-        shuffle exchanges per iteration, and the driver pulling only the 3
-        per-iteration scalars (delta, dangling mass, total mass).
-
-        Earlier versions kept the rank vector driver-resident (numpy) and
-        pulled the full O(V) contribution table back through Arrow every
-        iteration — measured at 0.785x dataframe-mode per-iteration
-        throughput at sf0.1 and a scale ceiling by construction. The rank
-        state now stays JVM-side end to end; only the broadcast of the O(V)
-        rank relation bounds the mode (~1e8 vertices at 16 B/row), which is
-        the same bound the old design had, without the per-iteration driver
-        round-trip."""
-        return self._run_dataframe(edges, n, run_id, resume, bcast=True)
 
     # -------------------------------------------------------------- csr path
     def _run_csr(
@@ -611,7 +671,7 @@ class PageRank:
             # persisted by a previous pack of the SAME graph. ``edges`` is
             # never evaluated on this path.
             nblocks = int(manifest["nblocks"])
-            block_size = bs = int(manifest["block_size"])
+            block_size = int(manifest["block_size"])
             m = int(manifest["m"])
             hub_ids = np.load(_os.path.join(scratch, "hub_ids.npy"))
             n_hubs = int(hub_ids.shape[0])
@@ -638,11 +698,11 @@ class PageRank:
         )
         block_size = (n + nblocks - 1) // nblocks
 
-        # One-time layout: block edges by dst range, then PACK each block's
-        # (src, dst_local) arrays into raw binary cells (<=64 MiB chunks).
-        # Iterations then stream a handful of memcpy-able blobs through Arrow
-        # instead of millions of rows — per-row serde was measured at ~5M
-        # rows/s/core, the packed path is ~2 GB/s/core. This is the
+        # One-time layout: route edges to interleaved dst blocks, then ENCODE
+        # each block's src-sorted (src, slot) arrays into compact chunks
+        # (encode_chunk). Iterations then stream a handful of memcpy-able
+        # blobs instead of millions of rows — per-row serde was measured at
+        # ~5M rows/s/core, the packed path is ~2 GB/s/core. This is the
         # "partition-local CSR" layout: build once, reuse every iteration.
         degrees = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
         m = edges.count()
@@ -667,207 +727,113 @@ class PageRank:
         hub_ids = np.sort(hub_rows.column("dst").to_numpy().astype(np.int64))
         n_hubs = int(hub_ids.shape[0])
 
-        idx_t = np.int32 if n < 2**31 else np.int64
-        # 8 MiB cells: big enough to amortize per-row serde, small enough to
-        # stay GC-friendly in the JVM block cache (64 MiB cells measured 2-4x
-        # noisier iteration times under memory pressure)
+        # chunk cap: 8 MiB of int32 pairs (1M edges) — big enough to amortize
+        # per-row serde, small enough to stay GC-friendly as a JVM cell
+        # (64 MiB cells measured 2-4x noisier iteration times under memory
+        # pressure)
         chunk_edges = (8 << 20) // (2 * np.dtype(idx_t).itemsize)
         bs = block_size
+        u16 = (bs + n_hubs) < 65536
 
-        def split_blocks(src: np.ndarray, dst: np.ndarray):
-            """Route a batch of edges to (block, src, local_slot) groups.
+        def chunks(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[int, bytes]]:
+            """Route a task's edges to (block, chunk) pairs.
 
-            INTERLEAVED blocking (dst % nblocks, local = dst // nblocks):
-            web graphs put hubs at low dense ids, so contiguous ranges would
-            dump nearly all edges into block 0 (measured: one task did 99% of
-            the work). Hub destinations (top in-degree, see hub_ids) are
-            further split: routed by src % nblocks into reserved slots
-            bs+hub_pos, partial-summed per block, finalized driver-side.
-            """
-            if n_hubs:
-                pos = np.clip(np.searchsorted(hub_ids, dst), 0, n_hubs - 1)
-                is_hub = hub_ids[pos] == dst
-            else:
-                is_hub = None
-            groups = []
-            nh_src, nh_dst = (src, dst) if is_hub is None else (
-                src[~is_hub], dst[~is_hub]
-            )
-            if nh_src.shape[0]:
-                blk = nh_dst % nblocks
-                for b in np.unique(blk):
-                    sel = blk == b
-                    groups.append((int(b), nh_src[sel], nh_dst[sel] // nblocks))
-            if is_hub is not None and is_hub.any():
-                h_src = src[is_hub]
-                h_slot = bs + np.clip(
-                    np.searchsorted(hub_ids, dst[is_hub]), 0, n_hubs - 1
-                )
-                blk = h_src % nblocks
-                for b in np.unique(blk):
-                    sel = blk == b
-                    groups.append((int(b), h_src[sel], h_slot[sel]))
-            return groups
-
-        def pack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            acc: dict[int, list[np.ndarray]] = {}
+            INTERLEAVED blocking (dst % nblocks, slot = dst // nblocks): web
+            graphs put hubs at low dense ids, so contiguous ranges would dump
+            nearly all edges into block 0 (measured: one task did 99% of the
+            work). Hub destinations (top in-degree, see hub_ids) are further
+            split: routed by src % nblocks into reserved slots bs+hub_pos,
+            partial-summed per block, finalized driver-side. Raw batches
+            accumulate untouched; ALL routing happens once per flush as a
+            single vectorized lexsort (a per-batch nblocks-way mask split
+            dominated pack time ~4:1)."""
+            parts: list[np.ndarray] = []
             pending = 0
 
-            def emit(b: int, srcs: np.ndarray, dsts: np.ndarray) -> pa.RecordBatch:
-                return pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([b], type=pa.int64()),
-                        pa.array([srcs.astype(idx_t).tobytes()]),
-                        pa.array([dsts.astype(idx_t).tobytes()]),
-                    ],
-                    names=["block", "src_bin", "dst_bin"],
-                )
-
-            def drain():
-                for b, lst in list(acc.items()):
-                    if lst:
-                        cat = np.concatenate(lst, axis=1)
-                        yield emit(b, cat[0], cat[1])
-                        acc[b] = []
+            def flush() -> Iterator[tuple[int, bytes]]:
+                cat = np.concatenate(parts, axis=1)
+                src, dst = cat[0], cat[1]
+                if n_hubs:
+                    pos = np.clip(np.searchsorted(hub_ids, dst), 0, n_hubs - 1)
+                    is_hub = hub_ids[pos] == dst
+                    blk = np.where(is_hub, src % nblocks, dst % nblocks)
+                    slot = np.where(is_hub, bs + pos, dst // nblocks)
+                else:
+                    blk = dst % nblocks
+                    slot = dst // nblocks
+                order = np.lexsort((src, blk))
+                src_s, slot_s = src[order], slot[order]
+                bounds = np.searchsorted(blk[order], np.arange(nblocks + 1))
+                for b in range(nblocks):
+                    for lo in range(int(bounds[b]), int(bounds[b + 1]), chunk_edges):
+                        hi = min(lo + chunk_edges, int(bounds[b + 1]))
+                        yield b, encode_chunk(src_s[lo:hi], slot_s[lo:hi], idx_t, u16)
 
             for batch in batches:
                 src = batch.column("src").to_numpy(zero_copy_only=False)
                 dst = batch.column("dst").to_numpy(zero_copy_only=False)
-                for b, s_arr, l_arr in split_blocks(src, dst):
-                    acc.setdefault(b, []).append(np.stack([s_arr, l_arr]))
-                    pending += s_arr.shape[0]
-                if pending >= chunk_edges:
-                    yield from drain()
-                    pending = 0
-            yield from drain()
-
-        packed_schema = StructType(
-            [
-                StructField("block", LongType(), False),
-                StructField("src_bin", BinaryType(), False),
-                StructField("dst_bin", BinaryType(), False),
-            ]
-        )
+                parts.append(np.stack([src, dst]))
+                pending += src.shape[0]
+                # ~17M pending edges -> ~500k-edge per-block chunks (RLE
+                # engages), ~1 GB transient per task during the flush
+                if pending >= chunk_edges * 16:
+                    yield from flush()
+                    parts, pending = [], 0
+            if pending:
+                yield from flush()
 
         if self.csr_storage == "files":
-            # spill blocks once to binary files; iterations move only the rank
+            # write chunks once to files; iterations move only the rank
             # vector (the executor-local-storage analog of shuffle files)
-            import uuid as _uuid
-
-            def pack_files(
-                batches: Iterator[pa.RecordBatch],
-            ) -> Iterator[pa.RecordBatch]:
-                # Accumulate raw batches untouched; ALL routing happens once
-                # per flush as a single vectorized lexsort over ~17M edges
-                # (the previous per-batch 32-way mask split did nblocks
-                # passes over every 64k-row Arrow batch and dominated pack
-                # time ~4:1 over generation+transfer).
-                acc_parts: list[np.ndarray] = []
-                out_blocks: list[int] = []
-                out_paths: list[str] = []
-                pending = 0
-                u16 = (bs + n_hubs) < 65536
-
-                def write_file(b: int, src_s: np.ndarray, slot_s: np.ndarray) -> str:
-                    # src_s is already sorted (lexsort minor key): the rank
-                    # gather rwv[src] is (near-)sequential at read time — the
-                    # cache-locality analog of the reference's srcSparse
-                    # reduced-matrix layout (one-time cost at pack time).
-                    # Chunk layout (per-edge DRAM traffic is the scaling
-                    # ceiling for SpMV; 8 B/edge raw -> ~2-3 B/edge):
-                    #   int64 k | int64 n_uniq (0 = plain src) | int32 u16dst
-                    #   [rle: n_uniq src idx_t, n_uniq counts int32 | plain:
-                    #    k src idx_t] | k dst (uint16 when slots fit, idx_t)
-                    # Read back via readinto() into REUSED buffers (np.load/
-                    # mmap would re-fault every page every iteration).
-                    k = src_s.shape[0]
+            def pack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+                blocks: list[int] = []
+                paths: list[str] = []
+                for b, chunk in chunks(batches):
                     path = _os.path.join(
-                        scratch, f"b{b:06d}_{_uuid.uuid4().hex[:10]}.bin"
+                        scratch, f"b{b:06d}_{uuid.uuid4().hex[:10]}.bin"
                     )
-                    uniq, counts = np.unique(src_s, return_counts=True)
-                    use_rle = uniq.shape[0] <= k // 4
                     with open(path, "wb") as f:
-                        f.write(np.int64(k).tobytes())
-                        f.write(np.int64(uniq.shape[0] if use_rle else 0).tobytes())
-                        f.write(np.int32(1 if u16 else 0).tobytes())
-                        if use_rle:
-                            f.write(uniq.astype(idx_t).tobytes())
-                            f.write(counts.astype(np.int32).tobytes())
-                        else:
-                            f.write(src_s.astype(idx_t).tobytes())
-                        f.write(slot_s.astype(np.uint16 if u16 else idx_t).tobytes())
-                    return path
-
-                def flush_all() -> None:
-                    nonlocal acc_parts, pending
-                    if not pending:
-                        return
-                    cat = np.concatenate(acc_parts, axis=1)
-                    acc_parts = []
-                    pending = 0
-                    src, dst = cat[0], cat[1]
-                    if n_hubs:
-                        pos = np.clip(np.searchsorted(hub_ids, dst), 0, n_hubs - 1)
-                        is_hub = hub_ids[pos] == dst
-                        blk = np.where(is_hub, src % nblocks, dst % nblocks)
-                        slot = np.where(is_hub, bs + pos, dst // nblocks)
-                    else:
-                        blk = dst % nblocks
-                        slot = dst // nblocks
-                    order = np.lexsort((src, blk))
-                    blk_s = blk[order]
-                    src_s = src[order]
-                    slot_s = slot[order]
-                    bounds = np.searchsorted(blk_s, np.arange(nblocks + 1))
-                    for b in range(nblocks):
-                        lo_i, hi_i = int(bounds[b]), int(bounds[b + 1])
-                        if hi_i > lo_i:
-                            out_blocks.append(b)
-                            out_paths.append(
-                                write_file(b, src_s[lo_i:hi_i], slot_s[lo_i:hi_i])
-                            )
-
-                for batch in batches:
-                    src = batch.column("src").to_numpy(zero_copy_only=False)
-                    dst = batch.column("dst").to_numpy(zero_copy_only=False)
-                    acc_parts.append(np.stack([src, dst]))
-                    pending += src.shape[0]
-                    # ~17M pending edges -> ~500k-edge per-block chunks (RLE
-                    # engages), ~1 GB transient per task during the flush
-                    if pending >= chunk_edges * 16:
-                        flush_all()
-                flush_all()
+                        f.write(chunk)
+                    blocks.append(b)
+                    paths.append(path)
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(out_blocks, type=pa.int64()), pa.array(out_paths)],
+                    [pa.array(blocks, type=pa.int64()), pa.array(paths)],
                     names=["block", "path"],
                 )
 
-            # _block_aligned: co-locate each block's files on ONE task.
-            # Every source partition emits partials for every block it
-            # touches, so without this the iteration's contribution transport
-            # is O(P * n) — each of P tasks ships a full O(n) accumulator set
-            # (measured: 7.7 GB/iteration at n=3e7, P=32; Java heap OOM).
-            # Block-aligned tasks merge a block's partials locally and ship
-            # each block ONCE: O(n + P * n_hubs) per iteration. Explicit
-            # numPartitions keeps AQE from coalescing the tiny path rows.
-            packed = _block_aligned(
-                _balanced(edges.select("src", "dst"), nblocks).mapInArrow(
-                    pack_files, "block long, path string"
-                ),
-                nblocks,
-                spark,
-            ).localCheckpoint(eager=True)
+            schema = "block long, path string"
         else:
-            # same block co-location for in-JVM cells: the binary cells
-            # shuffle ONCE here (pack time) so each iteration task owns one
-            # block outright — O(n) contribution transport (see above)
-            packed = _block_aligned(
-                _balanced(edges.select("src", "dst"), nblocks).mapInArrow(
-                    pack, packed_schema
-                ),
-                nblocks,
-                spark,
-            ).persist()
+
+            def pack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+                for b, chunk in chunks(batches):
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            pa.array([b], type=pa.int64()),
+                            pa.array([chunk], type=pa.binary()),
+                        ],
+                        names=["block", "chunk"],
+                    )
+
+            schema = "block long, chunk binary"
+
+        # _block_aligned: co-locate each block's chunks on ONE task. Every
+        # source partition emits partials for every block it touches, so
+        # without this the iteration's contribution transport is O(P * n) —
+        # each of P tasks ships a full O(n) accumulator set (measured:
+        # 7.7 GB/iteration at n=3e7, P=32; Java heap OOM). Block-aligned
+        # tasks merge a block's partials locally and ship each block ONCE:
+        # O(n + P * n_hubs) per iteration. For cells the chunks shuffle ONCE
+        # here, at pack time. Explicit numPartitions keeps AQE from
+        # coalescing the tiny path rows.
+        packed = _block_aligned(
+            _balanced(edges.select("src", "dst"), nblocks).mapInArrow(pack, schema),
+            nblocks,
+            spark,
+        )
+        if self.csr_storage == "files":
+            packed = packed.localCheckpoint(eager=True)
+        else:
+            packed = packed.persist()
             packed.count()
 
         # outdeg vector -> dangling mask, collected once via Arrow.
@@ -972,119 +938,32 @@ class PageRank:
             b_rw = sc.broadcast(rw.astype(self.rank_dtype, copy=False))
 
             def spmv(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+                # one kernel for both carriers: a cells row holds the chunk
+                # bytes, a files row the path of a file holding the same bytes
                 acc: dict[int, np.ndarray] = {}
                 rwv = b_rw.value
-                # L2-resident chunking (see spmv_files): bound the per-call
-                # expand/convert working set so DRAM only streams the cell.
-                # Each bincount also zeroes+adds an O(ml) output, so sub must
-                # grow with ml or tiny chunks pay O(ml) per 64k edges when
-                # blocks are large (review finding, round 2).
                 ml = block_size + n_hubs
-                sub = min(1 << 21, max(1 << 16, 4 * ml))
-                wbuf = np.empty(sub, dtype=rwv.dtype)  # matches rank_dtype
+                reader = ChunkReader() if scratch is not None else None
                 for batch in batches:
                     blocks = batch.column("block").to_pylist()
-                    srcs = batch.column("src_bin")
-                    dsts = batch.column("dst_bin")
+                    col = batch.column(1)
                     for i, b in enumerate(blocks):
-                        src = np.frombuffer(srcs[i].as_py(), dtype=idx_t)
-                        dstl = np.frombuffer(dsts[i].as_py(), dtype=idx_t)
                         a = acc.get(b)
                         if a is None:
                             a = acc.setdefault(b, np.zeros(ml))
-                        # np.bincount = vectorized scatter-add (the NumPy
-                        # analog of the reference's SIMD getVectorPik kernel)
-                        k = src.shape[0]
-                        for lo in range(0, k, sub):
-                            clen = min(sub, k - lo)  # chunk length (NOT the
-                            # damping factor c from the enclosing scope)
-                            w = wbuf[:clen]
-                            np.take(rwv, src[lo : lo + clen], out=w)
-                            a += np.bincount(
-                                dstl[lo : lo + clen], weights=w, minlength=ml
-                            )
+                        buf = col[i].as_py()
+                        if reader is not None:
+                            buf = reader.read(buf, idx_t)
+                        spmv_chunk(buf, rwv, a, idx_t)
                 if acc:
                     yield from emit_contrib_chunks(acc, rwv.dtype)
 
-            def spmv_files(
-                batches: Iterator[pa.RecordBatch],
-            ) -> Iterator[pa.RecordBatch]:
-                acc: dict[int, np.ndarray] = {}
-                rwv = b_rw.value
-                # L2-resident chunking: at 64k edges the weight/dst working
-                # set is ~0.7 MB, so the expand+bincount traffic stays in
-                # cache and the only DRAM stream is the ~2.5 B/edge file
-                # read. Measured on this host with bench_kernel.py (this
-                # exact loop, multiprocessing, the 1B-edge bench pack,
-                # round 5): 2M-edge chunks run 0.95B edges/s aggregate at
-                # 32 procs; 64k chunks run 2.7-2.8B edges/s at 32 procs
-                # (1p 0.15B / 4p 0.58B / 8p ~1.0B), kernel-only scaling
-                # 1->4 ~0.93 and 8->32 ~0.6-0.7 (the box's DRAM wall —
-                # even plain memcpy scales 8->32 at 0.18-0.42 here, see
-                # BENCH/BASELINE.md).
-                # bincount zeroes+adds an O(ml) output per call, so sub also
-                # scales with ml to keep that amortized when blocks are big.
-                ml = block_size + n_hubs
-                sub = min(1 << 21, max(1 << 16, 4 * ml))
-                wbuf = np.empty(sub, dtype=rwv.dtype)  # matches rank_dtype
-                sbuf = np.empty(sub, dtype=idx_t)
-                d16 = np.empty(sub, dtype=np.uint16)
-                dxx = np.empty(sub, dtype=idx_t)
-                isz = np.dtype(idx_t).itemsize
-                for batch in batches:
-                    blocks = batch.column("block").to_pylist()
-                    paths = batch.column("path").to_pylist()
-                    for b, path in zip(blocks, paths):
-                        a = acc.get(b)
-                        if a is None:
-                            a = acc.setdefault(b, np.zeros(ml))
-                        with open(path, "rb", buffering=0) as f:
-                            hdr = _read_bytes(f, 20)
-                            k = int(np.frombuffer(hdr, np.int64, 1, 0)[0])
-                            nu = int(np.frombuffer(hdr, np.int64, 1, 8)[0])
-                            u16 = bool(np.frombuffer(hdr, np.int32, 1, 16)[0])
-                            if nu:
-                                uniq = np.frombuffer(_read_bytes(f, nu * isz), idx_t)
-                                counts = np.frombuffer(_read_bytes(f, nu * 4), np.int32)
-                                w_runs = rwv[uniq]
-                                ends = np.cumsum(counts)
-                                dst_off = 20 + nu * (isz + 4)
-                            else:
-                                dst_off = 20 + k * isz
-                            dsz = 2 if u16 else isz
-                            dbuf = d16 if u16 else dxx
-                            for lo in range(0, k, sub):
-                                clen = min(sub, k - lo)  # chunk length (NOT
-                                # the damping factor c)
-                                if nu:
-                                    # expand the RLE runs covering [lo, lo+clen)
-                                    i0 = int(np.searchsorted(ends, lo, "right"))
-                                    i1 = int(np.searchsorted(ends, lo + clen, "left"))
-                                    cw = counts[i0 : i1 + 1].astype(np.int64)
-                                    start0 = int(ends[i0]) - int(counts[i0])
-                                    cw[0] -= lo - start0
-                                    over = int(ends[i1]) - (lo + clen)
-                                    if over > 0:
-                                        cw[-1] -= over
-                                    w = np.repeat(w_runs[i0 : i1 + 1], cw)
-                                else:
-                                    f.seek(20 + lo * isz)
-                                    _read_exact(f, memoryview(sbuf)[:clen].cast("B"))
-                                    w = wbuf[:clen]
-                                    np.take(rwv, sbuf[:clen], out=w)
-                                f.seek(dst_off + lo * dsz)
-                                _read_exact(f, memoryview(dbuf)[:clen].cast("B"))
-                                a += np.bincount(dbuf[:clen], weights=w, minlength=ml)
-                if acc:
-                    yield from emit_contrib_chunks(acc, rwv.dtype)
-
-            fn = spmv_files if scratch is not None else spmv
             # Arrow batch pull, NOT collect(): the contribution payload is
             # O(V) (nblocks x ml values/iter — 240 MB fp64 at n=3e7) and Row
             # materialization of binary columns serializes it through the
             # driver one object at a time. Same convention as
             # _try_resume_vector / _checkpoint_vector.
-            tbl = packed.mapInArrow(fn, out_schema).toArrow()
+            tbl = packed.mapInArrow(spmv, out_schema).toArrow()
             contrib = np.zeros(n)
             blk_col = tbl.column("block").to_pylist()
             off_col = tbl.column("off").to_pylist()
@@ -1141,8 +1020,7 @@ class PageRank:
         return ranks.select("id", (F.col("rank") / F.lit(total)).alias("rank"))
 
     def _checkpoint_and_log(
-        self, spark, run_id, it, state, delta, dmass, total, m, wall,
-        mode: str = "dataframe",
+        self, spark, run_id, it, state, delta, dmass, total, m, wall
     ) -> None:
         snap = None
         if self.catalog is not None and it % self.checkpoint_interval == 0:
@@ -1161,7 +1039,9 @@ class PageRank:
             self.lineage.log_iteration(
                 run_id, it, rows_shuffled=m, residual_l1=delta, wall_time_s=wall,
                 snapshot=str(snap) if snap is not None else None,
-                extra={"dangling_mass": dmass, "total_mass": total, "mode": mode},
+                extra={
+                    "dangling_mass": dmass, "total_mass": total, "mode": "dataframe",
+                },
                 partition_counts=self.lineage.partition_counts(state)
                 if self.lineage.per_partition
                 else None,
@@ -1173,33 +1053,31 @@ class PageRank:
         if meta is None:
             return None
         s = meta.summary
-        # dataframe/broadcast state is (id, rank, non_dangling) + dmass/total
-        # in the summary; csr (and pre-round-4 broadcast) checkpoints are the
-        # bare vector (id, rank) with only {iteration}. Resuming the wrong
-        # format used to surface as KeyError('dmass') / missing-column errors
-        # deep inside _df_iteration (round-4 ADVICE) — fail loud instead.
+        # dataframe state is (id, rank, non_dangling) + dmass/total in the
+        # summary; csr checkpoints are the bare vector (id, rank) with only
+        # {iteration}. Resuming the wrong format used to surface as
+        # KeyError('dmass') / missing-column errors deep inside
+        # _df_iteration (round-4 ADVICE) — fail loud instead.
         if "dmass" not in s or "total" not in s:
             raise ValueError(
                 f"checkpoint '{table}' was written by a vector-mode run "
-                "(csr, or a pre-0.4 broadcast engine): its summary has no "
-                "dmass/total. Resume it with mode='csr', or restart the run "
-                "(delete the checkpoint table) to use dataframe/broadcast "
-                "mode."
+                "(csr): its summary has no dmass/total. Resume it with "
+                "mode='csr', or restart the run (delete the checkpoint "
+                "table) to use dataframe mode."
+            )
+        # schema check on the read plan (driver-side metadata, no job)
+        # BEFORE the O(V) repartition + eager checkpoint below
+        df = self.catalog.read(spark, table)
+        if "non_dangling" not in df.columns:
+            raise ValueError(
+                f"checkpoint '{table}' is missing the non_dangling column "
+                "expected by dataframe state — it was written by a "
+                "vector-mode run; resume with mode='csr' or restart."
             )
         # statically planned checkpoint keeps the hash(id) partitioning so
         # the resumed iteration chain stays 1-shuffle (see _df_iteration)
         with _util.static_plan(spark):
-            df = (
-                self.catalog.read(spark, table)
-                .repartition(shuffle_p, "id")
-                .localCheckpoint(eager=True)
-            )
-        if "non_dangling" not in df.columns:
-            raise ValueError(
-                f"checkpoint '{table}' is missing the non_dangling column "
-                "expected by dataframe/broadcast state — it was written by "
-                "a vector-mode run; resume with mode='csr' or restart."
-            )
+            df = df.repartition(shuffle_p, "id").localCheckpoint(eager=True)
         return df, int(s["iteration"]), float(s["dmass"]), float(s["total"])
 
     def _checkpoint_vector(self, spark: SparkSession, run_id: str, it: int, pi: np.ndarray):

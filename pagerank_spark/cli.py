@@ -543,7 +543,7 @@ def main(argv: list[str] | None = None) -> int:
     pr.add_argument("--eps", type=float, default=1e-5)
     pr.add_argument("--max-iter", type=int, default=200)
     pr.add_argument("--mode", default="auto",
-                    choices=["auto", "dataframe", "broadcast", "csr"])
+                    choices=["auto", "dataframe", "csr"])
     pr.add_argument("--run-id", default=None)
     pr.add_argument("--resume", action="store_true")
     pr.add_argument("--text-output", default=None)

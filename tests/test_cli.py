@@ -15,6 +15,8 @@ import sys
 
 import pytest
 
+from tests.conftest import GOLDEN_FACTS, GOLDEN_GRAPH, GOLDEN_RANKS
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -65,14 +67,12 @@ def test_cli_pipeline_end_to_end(tmp_path):
 def test_cli_golden_graph_file(tmp_path):
     out_txt = str(tmp_path / "ranks.txt")
     r = run_cli(
-        "pagerank", "--graph-file",
-        "/root/reference/Pagerank/src/test1.graph",
-        "--text-output", out_txt,
+        "pagerank", "--graph-file", GOLDEN_GRAPH, "--text-output", out_txt,
     )
     assert r["iterations"] == 7
     import numpy as np
 
-    golden = np.loadtxt("/root/reference/Pagerank/src/test1_pageranks.txt")
+    golden = np.loadtxt(GOLDEN_RANKS)
     mine = np.loadtxt(out_txt)
     assert np.abs(mine - golden).max() < 1e-6
 
@@ -106,14 +106,18 @@ def test_spark_submit_py_files(tmp_path):
         "spark.sparkContext.setLogLevel('ERROR')\n"
         "from pagerank_spark.sources.graphfile import read_graph_file\n"
         "from pagerank_spark.algorithms.pagerank import PageRank\n"
-        "edges, n = read_graph_file(spark, "
-        "'/root/reference/Pagerank/src/test1.graph')\n"
+        f"edges, n = read_graph_file(spark, {GOLDEN_GRAPH!r})\n"
         "res = PageRank(mode='auto').run(edges, n)\n"
         "print('RESULT iters=%d rows=%d' % (res.iterations, res.ranks.count()))\n"
         "spark.stop()\n"
     )
     out = subprocess.run(
-        [spark_submit, "--master", "local[4]", "--py-files", zip_path, str(job)],
+        # 4 shuffle partitions like run_cli: the bare session's default 200
+        # would pack the 2319-vertex graph into 200 csr blocks (200 Python
+        # tasks per iteration, minutes of suite time for a launch-path test)
+        [spark_submit, "--master", "local[4]",
+         "--conf", "spark.sql.shuffle.partitions=4",
+         "--py-files", zip_path, str(job)],
         capture_output=True, text=True, timeout=420,
         env={k: v for k, v in os.environ.items() if k != "PYTHONPATH"},
     )
@@ -158,7 +162,7 @@ def test_cli_default_durable_resume(tmp_path):
 def test_cli_linkanalysis_subcommands(tmp_path):
     """hits / ppr / bfs / clustering are drivable from the CLI over the
     golden .graph and agree with the numpy oracles' headline facts."""
-    gf = "/root/reference/Pagerank/src/test1.graph"
+    gf = GOLDEN_GRAPH
 
     r = run_cli("hits", "--graph-file", gf, "--max-iter", "2")
     assert r["iterations"] == 2 and r["top_auth_id"] is not None
@@ -177,10 +181,10 @@ def test_cli_linkanalysis_subcommands(tmp_path):
 def test_cli_structure_subcommands():
     """kcore / scc / summary are drivable from the CLI over the golden
     .graph; headline facts pinned by the in-session numpy-oracled runs."""
-    gf = "/root/reference/Pagerank/src/test1.graph"
+    gf = GOLDEN_GRAPH
 
     r = run_cli("kcore", "--graph-file", gf)
-    assert r["n_vertices"] == 2319 and r["k_max"] == 14
+    assert r["n_vertices"] == 2319 and r["k_max"] == GOLDEN_FACTS["k_max"]
 
     r = run_cli("scc", "--graph-file", gf)
     assert r["n_sccs"] == 2319  # the golden random graph is acyclic
@@ -194,7 +198,7 @@ def test_cli_hyperball_subcommand():
     """hyperball is drivable from the CLI over the golden .graph: NF is
     monotone, NF(0) == n_vertices exactly is NOT required (HLL estimate)
     but must land within the m=64 small-range regime."""
-    gf = "/root/reference/Pagerank/src/test1.graph"
+    gf = GOLDEN_GRAPH
 
     r = run_cli("hyperball", "--graph-file", gf, "--t-max", "4", "--harmonic")
     assert len(r["nf"]) == 5 and r["iterations"] == 4
@@ -207,18 +211,19 @@ def test_cli_hyperball_subcommand():
 def test_cli_walks_and_cocite_subcommands():
     """walks / cocite drivable from the CLI over the golden .graph;
     headline facts pinned by the in-session exact-twin runs (272 distinct
-    sources; 10950 uncapped co-citation pairs at min_count=2)."""
-    gf = "/root/reference/Pagerank/src/test1.graph"
+    sources; the uncapped co-citation pair count at min_count=2, which is
+    GOLDEN_FACTS["cocite_pairs"] for the resolved golden graph)."""
+    gf = GOLDEN_GRAPH
 
     r = run_cli("walks", "--graph-file", gf, "--walk-length", "3", "--seed", "11")
     assert r["starts"] == 272 and r["max_step"] == 3 and r["rows"] >= r["starts"]
 
     r = run_cli("cocite", "--graph-file", gf, "--max-src-fanout", "1000000")
-    assert r["pairs"] == 10950 and r["max_common"] >= 2
+    assert r["pairs"] == GOLDEN_FACTS["cocite_pairs"] and r["max_common"] >= 2
 
 
 def test_cli_salsa_and_spam_mass():
-    gf = "/root/reference/Pagerank/src/test1.graph"
+    gf = GOLDEN_GRAPH
     r = run_cli("hits", "--graph-file", gf, "--max-iter", "2", "--salsa")
     assert r["iterations"] == 2 and r["top_auth_id"] is not None
 
@@ -233,14 +238,14 @@ def test_cli_bowtie_adamic_adar_graph_diff(tmp_path):
     class counts on the golden acyclic graph contain no CORE > 1 (largest
     SCC is a single vertex), adamic-adar pair count matches the co-citation
     pair universe, and graph-diff reports a hand-built delta."""
-    gf = "/root/reference/Pagerank/src/test1.graph"
+    gf = GOLDEN_GRAPH
 
     r = run_cli("bowtie", "--graph-file", gf)
     assert sum(r.values()) == 2319
     assert r["CORE"] == 1  # acyclic: every SCC is a singleton; min-id tie
 
     r = run_cli("adamic-adar", "--graph-file", gf, "--max-src-fanout", "1000000")
-    assert r["pairs"] == 10950 and r["max_score"] > 0
+    assert r["pairs"] == GOLDEN_FACTS["cocite_pairs"] and r["max_score"] > 0
 
     import pyspark.sql  # noqa: F401  (session fixture not needed; build via CLI-less spark)
     from pagerank_spark.session import get_spark
@@ -258,7 +263,7 @@ def test_cli_bowtie_adamic_adar_graph_diff(tmp_path):
 
 
 def test_cli_katz_and_node2vec():
-    gf = "/root/reference/Pagerank/src/test1.graph"
+    gf = GOLDEN_GRAPH
     r = run_cli("katz", "--graph-file", gf, "--max-iter", "3")
     assert r["n"] == 2319 and 0.0 < r["top_katz"] <= 1.0
 

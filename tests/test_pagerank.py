@@ -19,7 +19,7 @@ def ranks_to_numpy(df, n):
     return out
 
 
-@pytest.mark.parametrize("mode", ["dataframe", "csr", "broadcast"])
+@pytest.mark.parametrize("mode", ["dataframe", "csr"])
 def test_golden_test1(spark, golden, mode):
     """Engine reproduces the reference golden ranks to allclose 1e-6."""
     arr, n, expected = golden
@@ -179,9 +179,10 @@ def test_pack_key_binds_graph_identity(spark, tmp_path):
 
 
 def test_csr_files_multichunk_rle_boundaries(spark):
-    """Force each block file to span several 64k-edge sub-chunks so the RLE
-    run-splitting math at chunk boundaries is exercised, and compare against
-    the NumPy oracle."""
+    """Force each block chunk to span several 64k-edge sub-chunks so the RLE
+    run-splitting math at sub-chunk boundaries is exercised, and compare
+    against the NumPy oracle — in both storage carriers (one chunk format,
+    one kernel)."""
     import numpy as np
 
     from pagerank_spark.oracle import pagerank_numpy
@@ -193,12 +194,11 @@ def test_csr_files_multichunk_rle_boundaries(spark):
     e_np = np.stack([pdf["src"].to_numpy(), pdf["dst"].to_numpy()], axis=1)
     want, want_iters, _ = pagerank_numpy(e_np, n)
 
-    res = PageRank(mode="csr", csr_storage="files", num_blocks=2).run(edges, n)
-    got = (
-        res.ranks.orderBy("id").toPandas()["rank"].to_numpy()
-    )
-    assert res.iterations == want_iters
-    assert np.abs(got - want).max() < 1e-9
+    for storage in ("files", "cells"):
+        res = PageRank(mode="csr", csr_storage=storage, num_blocks=2).run(edges, n)
+        got = res.ranks.orderBy("id").toPandas()["rank"].to_numpy()
+        assert res.iterations == want_iters, storage
+        assert np.abs(got - want).max() < 1e-9, storage
 
 
 @pytest.mark.parametrize("storage", ["cells", "files"])
@@ -227,6 +227,22 @@ def test_rank_dtype_float32_golden_parity(spark, golden, storage):
 def test_rank_dtype_validation():
     with pytest.raises(ValueError, match="rank_dtype"):
         PageRank(rank_dtype="float16")
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        {"mode": "broadcast"},
+        {"mode": "CSR"},
+        {"mode": "csr", "csr_storage": "file"},
+        {"mode": "csr", "csr_storage": None},
+    ],
+)
+def test_mode_and_storage_validation(kwargs):
+    """An unknown mode or csr_storage fails at construction instead of
+    silently running the dataframe path or packing into cells."""
+    with pytest.raises(ValueError, match="must be"):
+        PageRank(**kwargs)
 
 
 def test_block_aligned_exact_placement(spark):
@@ -326,7 +342,7 @@ def test_dataframe_mode_hints_on_large_n(spark, monkeypatch):
     assert calls.count("shuffle_hash") == 0
 
 
-@pytest.mark.parametrize("mode", ["dataframe", "csr", "broadcast"])
+@pytest.mark.parametrize("mode", ["dataframe", "csr"])
 def test_warm_start_all_modes(spark, mode):
     """initial_ranks warm start: re-running from converged ranks stops
     after ONE iteration, and the fixed point is identical (the iteration

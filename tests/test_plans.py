@@ -215,69 +215,6 @@ def test_pagerank_df_iteration_single_exchange(spark, monkeypatch):
     ew.unpersist()
 
 
-def test_pagerank_broadcast_iteration_zero_shuffle(spark, monkeypatch):
-    """Broadcast-mode PageRank iteration: ZERO shuffle exchanges and exactly
-    one broadcast exchange (the rank relation). The contribution groupBy(dst)
-    must aggregate on the edge cache's persisted hash(dst) partitioning (a
-    broadcast hash join preserves the streamed side's partitioning), and the
-    rank-update left join must reuse the state checkpoint's hash(id) × the
-    aggregation's hash(dst). This is the zero-shuffle/iter contract
-    _run_broadcast keeps after dropping the old per-iteration O(V) Arrow
-    contribution pull (round-3 perf item): the driver now sees only the
-    3-scalar stats aggregate."""
-    from pagerank_spark.algorithms.pagerank import PageRank
-    from pagerank_spark.sources.synthetic import synthetic_edges
-    from pagerank_spark.util import static_plan
-
-    monkeypatch.setattr(PageRank, "BROADCASTABLE_N", 10)  # at-scale hints on
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = 300
-    edges = synthetic_edges(spark, n, 3000, seed=7, num_partitions=4)
-    degrees = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ew = (
-        edges.join(degrees.hint("shuffle_hash"), "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
-        .repartition(p, "dst")  # broadcast mode partitions the cache by dst
-        .persist()
-    )
-    ew.count()
-    state0 = (
-        spark.range(0, n, 1, p)
-        .select(
-            "id",
-            F.lit(1.0 / n).alias("rank"),
-            (F.col("id") % 7 != 0).alias("non_dangling"),
-        )
-        .repartition(p, "id")
-    )
-    with static_plan(spark):
-        state = state0.localCheckpoint(eager=True)
-
-    pr = PageRank()
-
-    def no_bcast(df):
-        return df.hint("shuffle_hash")
-
-    step = pr._df_iteration(ew, state, n, 0.0, 1.0, no_bcast, bcast=True)
-    sh, bc = _exchanges(step)
-    assert sh == 0, f"broadcast iteration planned {sh} shuffle exchanges, want 0"
-    assert bc == 1, f"broadcast iteration planned {bc} broadcast exchanges, want 1"
-
-    # chain property: the next iteration off the checkpointed result stays
-    # zero-shuffle (fresh plan object — see the dataframe test's AQE pitfall)
-    with static_plan(spark):
-        nxt = pr._df_iteration(
-            ew, state, n, 0.0, 1.0, no_bcast, bcast=True
-        ).localCheckpoint(eager=True)
-    step2 = pr._df_iteration(
-        ew, nxt.select("id", "rank", "non_dangling"), n, 0.0, 1.0, no_bcast,
-        bcast=True,
-    )
-    sh2, bc2 = _exchanges(step2)
-    assert (sh2, bc2) == (0, 1), f"chained broadcast iteration planned {(sh2, bc2)}"
-    ew.unpersist()
-
-
 def test_labelprop_big_round_single_exchange(spark):
     """Big-graph label-propagation round: exactly ONE shuffle exchange (the
     repartition("a") feeding both aggregates). The neighbor join must reuse

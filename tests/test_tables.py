@@ -73,7 +73,7 @@ def test_resume_matches_uninterrupted(spark, cat, golden):
 
 def test_resume_rejects_vector_checkpoint_with_clear_error(spark, cat, golden):
     """A checkpoint written by a vector-mode run (csr: bare (id, rank),
-    summary={iteration}) must make a dataframe/broadcast-mode resume fail
+    summary={iteration}) must make a dataframe-mode resume fail
     LOUD with a mode-mismatch message — not a KeyError('dmass') deep inside
     _df_iteration (round-4 ADVICE)."""
     arr, n, _ = golden
@@ -83,6 +83,27 @@ def test_resume_rejects_vector_checkpoint_with_clear_error(spark, cat, golden):
         PageRank(mode="dataframe", catalog=cat).run(
             edges, n, run_id="mix", resume=True
         )
+
+
+def test_resume_checks_columns_before_checkpoint(spark, cat, monkeypatch):
+    """A checkpoint whose summary carries dmass/total but whose table lacks
+    the non_dangling column must be rejected from the read plan's schema,
+    before the O(V) repartition + eager localCheckpoint runs."""
+    from pyspark.sql.classic.dataframe import DataFrame as SparkDF
+
+    state = spark.createDataFrame([(0, 0.5), (1, 0.5)], "id long, rank double")
+    cat.write(
+        state, "pagerank_ckpt_nocol",
+        summary={"iteration": 2, "delta": 0.1, "dmass": 0.0, "total": 1.0},
+    )
+
+    def boom(self, *a, **k):
+        raise AssertionError("localCheckpoint ran before the column check")
+
+    monkeypatch.setattr(SparkDF, "localCheckpoint", boom)
+    pr = PageRank(mode="dataframe", catalog=cat)
+    with pytest.raises(ValueError, match="non_dangling"):
+        pr._try_resume(spark, "nocol", 2)
 
 
 def test_resume_vector_uses_arrow_not_collect(spark, cat, golden):
