@@ -993,11 +993,13 @@ class PageRank:
             deltas.append(delta)
             wall = time.time() - t0
             iter_secs.append(wall)
+            snap = None
             if self.catalog is not None and it % self.checkpoint_interval == 0:
-                self._checkpoint_vector(spark, run_id, it, pi)
+                snap = self._checkpoint_vector(run_id, it, pi)
             if self.lineage is not None:
                 self.lineage.log_iteration(
                     run_id, it, rows_shuffled=m, residual_l1=delta, wall_time_s=wall,
+                    snapshot=str(snap) if snap is not None else None,
                     extra={"dangling_mass": dmass, "mode": "csr"},
                 )
             if delta < eps:
@@ -1080,10 +1082,12 @@ class PageRank:
             df = df.repartition(shuffle_p, "id").localCheckpoint(eager=True)
         return df, int(s["iteration"]), float(s["dmass"]), float(s["total"])
 
-    def _checkpoint_vector(self, spark: SparkSession, run_id: str, it: int, pi: np.ndarray):
+    def _checkpoint_vector(self, run_id: str, it: int, pi: np.ndarray) -> int:
+        """Commit the driver's rank vector (pyarrow writer, no Spark job);
+        returns the committed snapshot id."""
         tbl = pa.table({"id": np.arange(pi.shape[0], dtype=np.int64), "rank": pi})
-        df = spark.createDataFrame(tbl.to_pandas())
-        self.catalog.write(df, f"pagerank_ckpt_{run_id}", summary={"iteration": it})
+        meta = self.catalog.write(tbl, f"pagerank_ckpt_{run_id}", summary={"iteration": it})
+        return meta.snapshot_id
 
     def _try_resume_vector(self, spark: SparkSession, run_id: str, n: int):
         table = f"pagerank_ckpt_{run_id}"

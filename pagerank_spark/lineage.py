@@ -10,10 +10,22 @@ from __future__ import annotations
 
 import json
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_TABLE = "lineage"
+# FIXTURES.md §5 types: string, int, int, long, double, double, string, string
+LINEAGE_SCHEMA = pa.schema([
+    ("run_id", pa.string()),
+    ("iteration", pa.int32()),
+    ("partition_id", pa.int32()),
+    ("rows_shuffled", pa.int64()),
+    ("residual_l1", pa.float64()),
+    ("wall_time_s", pa.float64()),
+    ("snapshot", pa.string()),
+    ("extra", pa.string()),
+])
 
 
 class LineageWriter:
@@ -41,29 +53,18 @@ class LineageWriter:
         extra: dict | None = None,
         partition_counts: list[tuple[int, int]] | None = None,
     ) -> None:
-        rows = [
-            (
-                run_id,
-                iteration,
-                -1,
-                int(rows_shuffled),
-                float(residual_l1),
-                float(wall_time_s),
-                snapshot,
-                json.dumps(extra or {}),
-            )
-        ]
-        for pid, cnt in partition_counts or []:
-            rows.append(
-                (run_id, iteration, pid, cnt, float(residual_l1),
-                 float(wall_time_s), snapshot, "{}")
-            )
-        df = self.spark.createDataFrame(
-            rows,
-            "run_id string, iteration int, partition_id int, rows_shuffled long, "
-            "residual_l1 double, wall_time_s double, snapshot string, extra string",
+        shared = {
+            "run_id": run_id, "iteration": iteration, "residual_l1": float(residual_l1),
+            "wall_time_s": float(wall_time_s), "snapshot": snapshot,
+        }
+        rows = [{**shared, "partition_id": -1, "rows_shuffled": int(rows_shuffled),
+                 "extra": json.dumps(extra or {})}]
+        rows += [{**shared, "partition_id": pid, "rows_shuffled": cnt, "extra": "{}"}
+                 for pid, cnt in partition_counts or []]
+        # a few driver-resident rows: pyarrow writes them, no Spark job
+        self.catalog.write(
+            pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA), LINEAGE_TABLE, mode="append"
         )
-        self.catalog.write(df, LINEAGE_TABLE, mode="append")
 
     def read(self, run_id: str | None = None) -> DataFrame:
         df = self.catalog.read(self.spark, LINEAGE_TABLE)

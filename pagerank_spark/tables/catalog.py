@@ -19,6 +19,15 @@ snapshot dir, write the manifest, then ``os.replace`` the ``current.json``
 pointer — readers either see the old snapshot or the new one, never a torn
 write. A crash mid-commit leaves a dangling snap dir that the next commit
 ignores (the pointer was never flipped), which is exactly what resume needs.
+
+One commit protocol, two data writers: a Spark ``DataFrame`` (a distributed
+frame: edge tables, dataframe-mode state, CC checkpoints) is written by a
+Spark parquet job; a ``pyarrow.Table`` the driver already holds (csr rank
+vector checkpoints, lineage rows) is written by ``pyarrow.parquet`` in the
+driver with no Spark job. Both then take the same manifest claim and pointer
+flip, and record the same Spark schema JSON, so readers cannot tell which
+writer produced a snapshot. The warehouse is a driver-local path either way:
+the driver already writes every manifest and pointer itself.
 """
 
 from __future__ import annotations
@@ -29,7 +38,10 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 
 class CommitConflictError(RuntimeError):
@@ -111,7 +123,7 @@ class Catalog:
     # -- write (atomic commit) --------------------------------------------
     def write(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         table: str,
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
@@ -120,30 +132,31 @@ class Catalog:
     ) -> TableMeta:
         """Commit ``df`` as a new snapshot of ``table``.
 
+        ``df`` is a Spark DataFrame (written by a Spark job) or a
+        ``pyarrow.Table`` the driver already holds (written by pyarrow in
+        this process, no Spark job); both then take the same commit.
         mode="overwrite" replaces contents; mode="append" unions the parent
         snapshot's files (files are immutable, so append = new files + old
         file list in the new manifest). ``bucket_by=(n, col)`` repartitions by
         hash of ``col`` into n buckets before writing, recording the spec so
         readers know the physical distribution (the iceberg-ish analog of a
-        bucket partition transform).
+        bucket partition transform). Bucketing and ``partition_by`` need a
+        Spark DataFrame; with a pyarrow Table they raise ValueError.
         """
+        arrow = isinstance(df, pa.Table)
+        if arrow and (bucket_by is not None or partition_by):
+            raise ValueError(
+                "bucket_by/partition_by need a Spark DataFrame: a pyarrow "
+                "Table is committed as one unpartitioned file"
+            )
         prev = self.current_meta(table)
         snapshot_id = (prev.snapshot_id + 1) if prev else 0
         data_rel = os.path.join("data", f"snap-{snapshot_id}-{uuid.uuid4().hex[:8]}")
         data_dir = os.path.join(self.warehouse, table, data_rel)
-        os.makedirs(self._meta_dir(table), exist_ok=True)
-
-        out = df
-        spec: dict = {}
-        if bucket_by is not None:
-            nbuckets, col = bucket_by
-            out = out.repartition(nbuckets, col)
-            spec["bucket"] = {"n": nbuckets, "column": col}
-        writer = out.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-            spec["identity"] = list(partition_by)
-        writer.parquet(data_dir)
+        if arrow:
+            schema_json, spec = _write_arrow(df, data_dir)
+        else:
+            schema_json, spec = _write_spark(df, data_dir, partition_by, bucket_by)
 
         data_dirs = [data_rel]
         if mode == "append" and prev is not None:
@@ -152,15 +165,21 @@ class Catalog:
             ]
             data_dirs = data_dirs + [data_rel]
 
-        manifest = {
+        return self._commit(table, {
             "snapshot_id": snapshot_id,
             "parent_id": prev.snapshot_id if prev else None,
             "timestamp_ms": int(time.time() * 1000),
-            "schema_json": df.schema.json(),
+            "schema_json": schema_json,
             "partition_spec": spec,
             "data_dir": data_rel,
             "summary": {**(summary or {}), "data_dirs": json.dumps(data_dirs)},
-        }
+        })
+
+    def _commit(self, table: str, manifest: dict) -> TableMeta:
+        """Claim ``v<snapshot_id>.json`` and flip the pointer to it — the
+        one commit routine behind both data writers."""
+        snapshot_id = manifest["snapshot_id"]
+        os.makedirs(self._meta_dir(table), exist_ok=True)
         # atomic manifest CLAIM, not a plain write: two concurrent writers
         # that both read parent k race to create v<k+1>.json, and open("w")
         # would let the second silently clobber the first's committed
@@ -179,7 +198,11 @@ class Catalog:
         except FileExistsError:
             raise CommitConflictError(
                 f"table {table!r}: snapshot {snapshot_id} was committed by a "
-                "concurrent writer; re-read the table and retry the write"
+                "concurrent writer; re-read the table and retry the write. "
+                "If that writer crashed between its manifest claim and its "
+                f"pointer flip, no retry can succeed until expire_snapshots("
+                f"{table!r}) clears the orphaned v{snapshot_id}.json once it "
+                "is older than orphan_ttl_s (default 24 h)"
             ) from None
         finally:
             os.unlink(mtmp)
@@ -315,3 +338,34 @@ class Catalog:
             "deleted_dirs": deleted,
             "kept_snapshots": sorted(retained),
         }
+
+
+def _write_spark(
+    df: DataFrame,
+    data_dir: str,
+    partition_by: list[str] | None,
+    bucket_by: tuple[int, str] | None,
+) -> tuple[str, dict]:
+    """Data step for a distributed frame: a Spark parquet write job.
+    Returns the schema JSON and partition spec for the manifest."""
+    spec: dict = {}
+    out = df
+    if bucket_by is not None:
+        nbuckets, col = bucket_by
+        out = out.repartition(nbuckets, col)
+        spec["bucket"] = {"n": nbuckets, "column": col}
+    writer = out.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+        spec["identity"] = list(partition_by)
+    writer.parquet(data_dir)
+    return df.schema.json(), spec
+
+
+def _write_arrow(tbl: pa.Table, data_dir: str) -> tuple[str, dict]:
+    """Data step for a driver-resident table: one parquet file written by
+    pyarrow, no Spark job. The manifest gets the Spark JSON of the same
+    schema, so readers cannot tell the two writers apart."""
+    os.makedirs(data_dir)
+    pq.write_table(tbl, os.path.join(data_dir, f"part-00000-{uuid.uuid4().hex}.parquet"))
+    return from_arrow_schema(tbl.schema).json(), {}
