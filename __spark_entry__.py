@@ -2860,7 +2860,7 @@ FROM c, rc, ag
     # ---- host-rollup weighted PageRank: contract pages to hosts
     # (id % N_HOSTS, intra-host edges dropped, weight = parallel-edge
     # count), then 3 unrolled weighted power iterations mirroring
-    # linkanalysis.weighted_pagerank / _ppr_iteration term-for-term
+    # linkanalysis.weighted_pagerank / _teleport_iteration term-for-term
     # (tele literal, dm * tele, ((1-c) * tm) * tele) so doubles agree
     TELE = repr(1.0 / N_HOSTS)
     wpr_iters = []

@@ -1,24 +1,27 @@
-"""Link-analysis extensions beyond the reference surface: HITS
-(hubs/authorities), personalized (topic-sensitive) PageRank, and local
-clustering coefficients.
+"""Link-analysis extensions beyond the reference surface: HITS/SALSA,
+teleport PageRank, Katz centrality, clustering coefficients, BFS/ego
+networks, co-citation pair scores and host link features.
 
 The reference engine (/root/reference/Pagerank/src/pagerank32c.c:893-946)
-computes only uniform-teleport PageRank; these operators round out the
-link-graph analytics surface a Common-Crawl-scale engine needs, re-using
-the same execution discipline the audited PageRank/label-propagation loops
-established (PLANS.md "statically planned checkpoints"):
+computes only uniform-teleport PageRank. Its iteration with a general
+teleport vector runs here in ONE loop, :func:`_teleport_pagerank`, which
+steps K vectors at once: K=1 for :func:`personalized_pagerank`,
+:func:`trustrank` and :func:`spam_mass` (1/|S| on the seeds) and for
+:func:`weighted_pagerank` (uniform, weight-normalized edges), K topics for
+:func:`personalized_pagerank_batch`. Every operator re-uses the execution
+discipline the audited PageRank/label-propagation loops established
+(PLANS.md "statically planned checkpoints"):
 
 - state checkpoints are compiled under ``util.static_plan`` so the
   LogicalRDD keeps its hash(id) partitioning and each iteration plans ONE
   shuffle exchange (the contribution aggregation);
 - O(V)-sized join sides are broadcast below ``util.BROADCAST_SAFE_ROWS``
-  vertices and forced to shuffle-hash joins above it (the auto-broadcast
-  driver-OOM hazard class, PLANS.md);
+  vertices and forced to shuffle-hash joins above it (``util.no_bcast_fn``;
+  the auto-broadcast driver-OOM hazard class, PLANS.md);
 - nothing O(V) or O(E) is ever collected to the driver.
 
-All three operators are deterministic (fixed iteration counts or exact
-closed forms) so they carry full DuckDB SQL oracles in
-``__spark_entry__.py``.
+The operators are deterministic (fixed iteration counts or exact closed
+forms) so they carry DuckDB SQL oracles in ``__spark_entry__.py``.
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pagerank_spark import util as _util
@@ -75,8 +78,7 @@ def hits(
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_verts = _util.approx_vertex_count(edges)
 
-    def no_bcast(df: DataFrame) -> DataFrame:
-        return df if n_verts <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
+    no_bcast = _util.no_bcast_fn(n_verts)
 
     # two cached layouts of the same edges: hub-side join consumes hash(src),
     # auth-side join consumes hash(dst) — one-time cost, reused every
@@ -185,35 +187,157 @@ def salsa(
     return hits(edges, vertices, max_iter=max_iter, degree_normalized=True)
 
 
-def _ppr_iteration(ew, state, c: float, dmass: float, total: float, no_bcast):
-    """One personalized power-iteration step as a DataFrame plan.
+def _teleport_iteration(ew, state, K: int, c: float, dmass, total, no_bcast):
+    """One teleport power-iteration step for K rank vectors at once::
 
-    Same single-exchange contract as PageRank._df_iteration: the
-    contribution join consumes ew's hash(src) x the state checkpoint's
-    hash(id), the aggregation is the one shuffle, and the rank-update left
-    join consumes hash(id) x hash(dst). Audited by
-    tests/test_plans.py::test_ppr_iteration_single_exchange."""
-    joined = ew.join(no_bcast(state.select("id", "rank")), ew.src == F.col("id"))
-    contribs = joined.groupBy("dst").agg(
-        F.sum(F.col("rank") * F.col("w")).alias("contrib")
+        r_k' = c * (P^T r_k + dmass_k * t_k) + (1-c) * total_k * t_k
+
+    ``state`` is (id, non_dangling, t0.., r0..); the result adds the
+    previous ranks as o0.. for the delta. All K vectors ride one edge join
+    and ONE shuffle — the contribution groupBy computes K sums at once
+    (map-side partials for all K). The contribution join consumes ew's
+    hash(src) x the state checkpoint's hash(id), and the rank-update left
+    join consumes hash(id) x hash(dst) (PageRank._df_iteration's contract).
+    Audited by tests/test_plans.py::test_ppr_batch_iteration_single_exchange."""
+    joined = ew.join(
+        no_bcast(state.select("id", *[f"r{k}" for k in range(K)])),
+        ew.src == F.col("id"),
     )
-    return (
-        state.join(no_bcast(contribs), state.id == contribs.dst, "left")
-        .select(
-            state.id,
+    contribs = joined.groupBy("dst").agg(
+        *[F.sum(F.col(f"r{k}") * F.col("w")).alias(f"c{k}") for k in range(K)]
+    )
+    return state.join(no_bcast(contribs), state.id == contribs.dst, "left").select(
+        state.id,
+        "non_dangling",
+        *[F.col(f"t{k}") for k in range(K)],
+        *[
             (
                 F.lit(c)
                 * (
-                    F.coalesce(F.col("contrib"), F.lit(0.0))
-                    + F.lit(dmass) * F.col("tele")
+                    F.coalesce(F.col(f"c{k}"), F.lit(0.0))
+                    + F.lit(dmass[k]) * F.col(f"t{k}")
                 )
-                + F.lit((1.0 - c) * total) * F.col("tele")
-            ).alias("rank"),
-            state.rank.alias("old_rank"),
-            "tele",
-            "non_dangling",
-        )
+                + F.lit((1.0 - c) * total[k]) * F.col(f"t{k}")
+            ).alias(f"r{k}")
+            for k in range(K)
+        ],
+        *[state[f"r{k}"].alias(f"o{k}") for k in range(K)],
     )
+
+
+def _teleport_pagerank(
+    edges: DataFrame,
+    n: int,
+    teleports: list[Column],
+    c: float,
+    max_iter: int,
+    eps: float,
+    seeds: DataFrame | None = None,
+    weight_col: str | None = None,
+) -> DataFrame:
+    """The one power-iteration loop behind :func:`personalized_pagerank`,
+    :func:`trustrank`, :func:`weighted_pagerank` and
+    :func:`personalized_pagerank_batch`: the engine's uniform iteration
+    (pagerank.py._df_iteration; reference
+    /root/reference/Pagerank/src/pagerank32c.c:907-917) with the uniform
+    vector 1/n replaced by K teleport vectors v_k::
+
+        r0_k = v_k
+        r_k' = c * (P^T r_k + dangling_mass_k * v_k) + (1-c) * total_k * v_k
+
+    i.e. dangling mass re-teleports along v_k too. ``teleports`` holds one
+    Column per v_k, evaluated on every id in [0, n) after ``seeds`` (an
+    id-keyed frame, optional) is left-joined on. P is 1/outdeg, or
+    weight / sum-of-out-weights with ``weight_col``; dangling = no
+    out-edges. Returns (id, r0..r{K-1}), each vector L1-normalized.
+
+    Physical cost: ONE shuffle per iteration (the contribution
+    aggregation) — the row-normalized edge cache carries hash(src), the
+    state checkpoint keeps hash(id) (``util.static_plan``), and the
+    teleport columns ride in the state so the update join needs no extra
+    v lookup. The per-vector delta/dangling-mass/total scalars come from
+    one whole-state aggregate action (3K driver-side doubles); with
+    ``eps`` set, the loop stops when EVERY vector's L1 delta is below it.
+    """
+    spark = edges.sparkSession
+    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    no_bcast = _util.no_bcast_fn(n)
+    K = len(teleports)
+
+    # row-normalized edge cache: w / (the source's out-weight sum), with
+    # unit weights (w = 1/outdeg) when the graph is unweighted
+    w = F.lit(1.0) if weight_col is None else F.col(weight_col)
+    out = edges.groupBy("src").agg(F.sum(w).alias("out"))
+    ew = (
+        edges.join(no_bcast(out), "src")
+        .select("src", "dst", (w / F.col("out")).alias("w"))
+        .repartition(shuffle_p, "src")
+        .persist()
+    )
+    ew.count()
+
+    # state: (id, non_dangling, t0.., r0..) with r = t to start
+    ts = [f"t{k}" for k in range(K)]
+    rs = [f"r{k}" for k in range(K)]
+    with _util.static_plan(spark):
+        verts = spark.range(0, n, 1, shuffle_p).join(
+            no_bcast(out.select(F.col("src").alias("id"), F.lit(True).alias("nd"))),
+            "id",
+            "left",
+        )
+        if seeds is not None:
+            verts = verts.join(no_bcast(seeds), "id", "left")
+        state = (
+            verts.select(
+                "id",
+                F.coalesce(F.col("nd"), F.lit(False)).alias("non_dangling"),
+                *[v.alias(t) for v, t in zip(teleports, ts)],
+                *[v.alias(r) for v, r in zip(teleports, rs)],
+            )
+            .repartition(shuffle_p, "id")
+            .localCheckpoint(eager=True)
+        )
+
+    def sums(df: DataFrame, *per_vector) -> list[list[float]]:
+        # K driver-side doubles per aggregate template, in one action
+        row = df.agg(*[f(k) for f in per_vector for k in range(K)]).first()
+        vals = [float(v or 0.0) for v in row]
+        return [vals[i * K : (i + 1) * K] for i in range(len(per_vector))]
+
+    def dangling(k: int) -> Column:
+        return F.sum(F.when(~F.col("non_dangling"), F.col(f"r{k}")))
+
+    def mass(k: int) -> Column:
+        return F.sum(f"r{k}")
+
+    def delta(k: int) -> Column:
+        return F.sum(F.abs(F.col(f"r{k}") - F.col(f"o{k}")))
+
+    def l1(k: int) -> Column:
+        return F.sum(F.abs(F.col(f"r{k}")))
+
+    dmass, total = sums(state, dangling, mass)
+    for _ in range(max_iter):
+        with _util.static_plan(spark):
+            new_state = _teleport_iteration(
+                ew, state, K, c, dmass, total, no_bcast
+            ).localCheckpoint(eager=True)
+        dmass, total, deltas = sums(new_state, dangling, mass, delta)
+        state = new_state.select("id", "non_dangling", *ts, *rs)
+        if max(deltas) < eps:
+            break
+
+    ew.unpersist()
+    (norms,) = sums(state, l1)
+    return state.select(
+        "id", *[(F.col(r) / F.lit(norm)).alias(r) for r, norm in zip(rs, norms)]
+    )
+
+
+def _distinct_seeds(seeds: DataFrame) -> DataFrame:
+    # duplicates would both miscount |S| and duplicate state rows through
+    # the teleport's left join
+    return seeds.select(F.col("id").cast("long").alias("id")).distinct()
 
 
 def personalized_pagerank(
@@ -227,33 +351,15 @@ def personalized_pagerank(
     """Topic-sensitive PageRank: teleport lands on ``seeds`` instead of
     uniformly (Haveliwala 2002). ``seeds``: (id) long, non-empty.
 
-    Semantics mirror the engine's uniform path
-    (pagerank.py._df_iteration; reference
-    /root/reference/Pagerank/src/pagerank32c.c:907-917) with the uniform
-    vector 1/n replaced by v(id) = 1/|S| on the seed set and 0 elsewhere::
-
-        r0 = v
-        r' = c * (P^T r + dangling_mass * v) + (1-c) * total * v
-
-    i.e. dangling mass re-teleports to the seeds too, so sum(r) stays 1 and
-    scores are a probability distribution concentrated around the seeds.
-    Returns (id, rank) L1-normalized, for every vertex in [0, n).
-
-    Physical cost: ONE shuffle per iteration (the contribution aggregation)
-    — the edge cache carries hash(src), the state checkpoint keeps hash(id)
-    (``util.static_plan``), and the teleport column rides in the state so
-    the update join needs no extra v lookup.
+    :func:`_teleport_pagerank` with one teleport vector, v(id) = 1/|S| on
+    the seed set and 0 elsewhere, so the dangling mass re-teleports to
+    the seeds too, sum(r) stays 1 and scores are a probability
+    distribution concentrated around the seeds. Duplicate seeds count
+    once. Returns (id, rank) L1-normalized, for every vertex in [0, n);
+    one shuffle per iteration.
     """
-    spark = edges.sparkSession
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    def no_bcast(df: DataFrame) -> DataFrame:
-        return df if n <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
-
-    # seed hygiene: duplicates would both miscount |S| and duplicate state
-    # rows through the left join below; out-of-range ids would silently
-    # shrink the teleport sum. Dedup, then hard-error on range.
-    seeds = seeds.select(F.col("id").cast("long").alias("id")).distinct()
+    # out-of-range ids would silently shrink the teleport sum: hard error
+    seeds = _distinct_seeds(seeds)
     s_stats = seeds.agg(
         F.count(F.lit(1)).alias("k"), F.min("id").alias("lo"), F.max("id").alias("hi")
     ).first()
@@ -264,65 +370,10 @@ def personalized_pagerank(
         raise ValueError(
             f"seed ids outside [0, {n}): saw [{s_stats['lo']}, {s_stats['hi']}]"
         )
-
-    degrees = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ew = (
-        edges.join(no_bcast(degrees), "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
-        .repartition(shuffle_p, "src")
-        .persist()
-    )
-    ew.count()
-
-    src_ids = degrees.select(F.col("src").alias("id"))
-    seed_ids = seeds.select(F.col("id").cast("long").alias("id")).withColumn(
-        "s", F.lit(True)
-    )
-    # state: (id, rank, tele, non_dangling); tele = v(id), carried as a
-    # column so each iteration's rank update is join-free on the v side
-    with _util.static_plan(spark):
-        state = (
-            spark.range(0, n, 1, shuffle_p)
-            .join(no_bcast(src_ids.withColumn("nd", F.lit(True))), "id", "left")
-            .join(no_bcast(seed_ids), "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("nd"), F.lit(False)).alias("non_dangling"),
-                F.when(F.coalesce(F.col("s"), F.lit(False)), 1.0 / n_seeds)
-                .otherwise(0.0)
-                .alias("tele"),
-            )
-            .withColumn("rank", F.col("tele"))
-            .repartition(shuffle_p, "id")
-            .localCheckpoint(eager=True)
-        )
-
-    init = state.agg(
-        F.sum(F.when(~F.col("non_dangling"), F.col("rank"))).alias("dmass"),
-        F.sum("rank").alias("total"),
-    ).first()
-    dmass = float(init["dmass"] or 0.0)
-    total = float(init["total"])
-
-    for _ in range(max_iter):
-        with _util.static_plan(spark):
-            new_state = _ppr_iteration(
-                ew, state, c, dmass, total, no_bcast
-            ).localCheckpoint(eager=True)
-        stats = new_state.agg(
-            F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta"),
-            F.sum(F.when(~F.col("non_dangling"), F.col("rank"))).alias("dmass"),
-            F.sum("rank").alias("total"),
-        ).first()
-        dmass = float(stats["dmass"] or 0.0)
-        total = float(stats["total"])
-        state = new_state.select("id", "rank", "tele", "non_dangling")
-        if float(stats["delta"]) < eps:
-            break
-
-    ew.unpersist()
-    norm = state.agg(F.sum(F.abs(F.col("rank")))).first()[0]
-    return state.select("id", (F.col("rank") / F.lit(float(norm))).alias("rank"))
+    tele = F.when(F.col("s"), 1.0 / n_seeds).otherwise(0.0)
+    return _teleport_pagerank(
+        edges, n, [tele], c, max_iter, eps, seeds=seeds.withColumn("s", F.lit(True))
+    ).select("id", F.col("r0").alias("rank"))
 
 
 def trustrank(
@@ -362,7 +413,8 @@ def spam_mass(
         tr(p)  TrustRank from the core          (L1-normalized, sum 1)
         m(p)   = (pr(p) - (|S|/n) * tr(p)) / pr(p)    relative spam mass
 
-    The |S|/n scalar restates the paper's un-normalized core teleport
+    |S| counts distinct trusted ids, as the teleport does. The |S|/n
+    scalar restates the paper's un-normalized core teleport
     (1/n on each trusted page, 0 elsewhere) in terms of this engine's
     1/|S| normalized teleport — PageRank is linear in the teleport
     vector, so the rescaling is exact. m(p) near 1 means the page's rank
@@ -377,7 +429,7 @@ def spam_mass(
     """
     from pagerank_spark.algorithms.pagerank import PageRank
 
-    n_seeds = trusted.count()
+    n_seeds = _distinct_seeds(trusted).count()
     pr = (
         PageRank(c=c, eps=eps, max_iter=max_iter, mode="dataframe")
         .run(edges, n)
@@ -386,10 +438,7 @@ def spam_mass(
     tr = personalized_pagerank(
         edges, n, trusted, c=c, max_iter=max_iter, eps=eps
     )
-
-    def no_bcast(df: DataFrame) -> DataFrame:
-        return df if n <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
-
+    no_bcast = _util.no_bcast_fn(n)
     scale = float(n_seeds) / float(n)
     t = tr.select("id", F.col("rank").alias("tr"))
     return pr.join(no_bcast(t), "id").select(
@@ -438,8 +487,7 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     n_verts = _util.approx_vertex_count(edges)
     tri = triangle_counts_per_vertex(edges)
 
-    def no_bcast(df: DataFrame) -> DataFrame:
-        return df if n_verts <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
+    no_bcast = _util.no_bcast_fn(n_verts)
 
     return (
         deg.join(no_bcast(tri.withColumnRenamed("count", "n_triangles")), "id", "left")
@@ -482,8 +530,7 @@ def bfs_distances(
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_verts = _util.approx_vertex_count(edges)
 
-    def no_bcast(df: DataFrame) -> DataFrame:
-        return df if n_verts <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
+    no_bcast = _util.no_bcast_fn(n_verts)
 
     e = edges.select("src", "dst")
     if not directed:
@@ -529,8 +576,7 @@ def induced_subgraph(edges: DataFrame, vertex_ids: DataFrame) -> DataFrame:
     v = vertex_ids.select(F.col("id").cast("long").alias("id")).distinct()
     n_verts = _util.approx_vertex_count(vertex_ids, src="id", dst="id")
 
-    def no_bcast(df: DataFrame) -> DataFrame:
-        return df if n_verts <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
+    no_bcast = _util.no_bcast_fn(n_verts)
 
     e = edges.join(no_bcast(v), edges.src == v.id, "left_semi")
     return e.join(no_bcast(v), e.dst == v.id, "left_semi")
@@ -576,68 +622,13 @@ def weighted_pagerank(
     Dangling = no out-edges; teleport uniform. Returns (id, rank)
     L1-normalized for every vertex in [0, n).
 
-    Physical cost is identical to personalized_pagerank: one shuffle per
-    iteration (the contribution aggregation) — the row-normalized edge
-    cache carries hash(src), the state checkpoint keeps hash(id) under
-    ``util.static_plan``, and the uniform teleport rides as the ``tele``
-    state column so ``_ppr_iteration`` is reused verbatim.
+    :func:`_teleport_pagerank` with the weight-normalized edge cache and
+    one uniform teleport vector: one shuffle per iteration, the same plan
+    as personalized_pagerank.
     """
-    spark = edges.sparkSession
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    def no_bcast(df: DataFrame) -> DataFrame:
-        return df if n <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
-
-    wsum = edges.groupBy("src").agg(F.sum(weight_col).alias("wsum"))
-    ew = (
-        edges.join(no_bcast(wsum), "src")
-        .select("src", "dst", (F.col(weight_col) / F.col("wsum")).alias("w"))
-        .repartition(shuffle_p, "src")
-        .persist()
-    )
-    ew.count()
-
-    src_ids = wsum.select(F.col("src").alias("id"))
-    with _util.static_plan(spark):
-        state = (
-            spark.range(0, n, 1, shuffle_p)
-            .join(no_bcast(src_ids.withColumn("nd", F.lit(True))), "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("nd"), F.lit(False)).alias("non_dangling"),
-                F.lit(1.0 / n).alias("tele"),
-            )
-            .withColumn("rank", F.col("tele"))
-            .repartition(shuffle_p, "id")
-            .localCheckpoint(eager=True)
-        )
-
-    init = state.agg(
-        F.sum(F.when(~F.col("non_dangling"), F.col("rank"))).alias("dmass"),
-        F.sum("rank").alias("total"),
-    ).first()
-    dmass = float(init["dmass"] or 0.0)
-    total = float(init["total"])
-
-    for _ in range(max_iter):
-        with _util.static_plan(spark):
-            new_state = _ppr_iteration(
-                ew, state, c, dmass, total, no_bcast
-            ).localCheckpoint(eager=True)
-        stats = new_state.agg(
-            F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta"),
-            F.sum(F.when(~F.col("non_dangling"), F.col("rank"))).alias("dmass"),
-            F.sum("rank").alias("total"),
-        ).first()
-        dmass = float(stats["dmass"] or 0.0)
-        total = float(stats["total"])
-        state = new_state.select("id", "rank", "tele", "non_dangling")
-        if float(stats["delta"]) < eps:
-            break
-
-    ew.unpersist()
-    norm = state.agg(F.sum(F.abs(F.col("rank")))).first()[0]
-    return state.select("id", (F.col("rank") / F.lit(float(norm))).alias("rank"))
+    return _teleport_pagerank(
+        edges, n, [F.lit(1.0 / n)], c, max_iter, eps, weight_col=weight_col
+    ).select("id", F.col("r0").alias("rank"))
 
 
 def co_citation(
@@ -678,11 +669,10 @@ def co_citation(
     by_src = by_src.persist()
     m = by_src.count()
 
-    def no_bcast(df: DataFrame) -> DataFrame:
-        # both self-join sides are O(E): above the gate, never let Catalyst
-        # broadcast one (the standard driver-OOM guard); hinted SHJ reuses
-        # the cached hash(src) on both sides — zero extra exchange
-        return df if m <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
+    # both self-join sides are O(E): above the gate, never let Catalyst
+    # broadcast one (the standard driver-OOM guard); hinted SHJ reuses
+    # the cached hash(src) on both sides — zero extra exchange
+    no_bcast = _util.no_bcast_fn(m)
 
     a = by_src.select("src", F.col("dst").alias("a"))
     b = by_src.select("src", F.col("dst").alias("b"))
@@ -770,8 +760,7 @@ def adamic_adar(
     by_src = by_src.join(deg.select("src", w.alias("w")), "src").persist()
     m = by_src.count()
 
-    def no_bcast(df: DataFrame) -> DataFrame:
-        return df if m <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
+    no_bcast = _util.no_bcast_fn(m)
 
     a = by_src.select("src", F.col("dst").alias("a"), "w")
     b = by_src.select("src", F.col("dst").alias("b"))
@@ -791,38 +780,6 @@ def adamic_adar(
         pairs = pairs.localCheckpoint(eager=True)
         by_src.unpersist()
     return pairs
-
-
-def _ppr_batch_iteration(ew, state, K: int, c: float, dmass, total, no_bcast):
-    """One batched power-iteration step: K topic vectors through one edge
-    join and ONE shuffle — the contribution groupBy computes K sums at once
-    (map-side partials for all K). Same exchange contract as
-    _ppr_iteration; audited by
-    tests/test_plans.py::test_ppr_batch_iteration_single_exchange."""
-    joined = ew.join(
-        no_bcast(state.select("id", *[f"r{k}" for k in range(K)])),
-        ew.src == F.col("id"),
-    )
-    contribs = joined.groupBy("dst").agg(
-        *[F.sum(F.col(f"r{k}") * F.col("w")).alias(f"c{k}") for k in range(K)]
-    )
-    return state.join(no_bcast(contribs), state.id == contribs.dst, "left").select(
-        state.id,
-        "non_dangling",
-        *[F.col(f"t{k}") for k in range(K)],
-        *[
-            (
-                F.lit(c)
-                * (
-                    F.coalesce(F.col(f"c{k}"), F.lit(0.0))
-                    + F.lit(dmass[k]) * F.col(f"t{k}")
-                )
-                + F.lit((1.0 - c) * total[k]) * F.col(f"t{k}")
-            ).alias(f"r{k}")
-            for k in range(K)
-        ],
-        *[state[f"r{k}"].alias(f"o{k}") for k in range(K)],
-    )
 
 
 def personalized_pagerank_batch(
@@ -845,21 +802,14 @@ def personalized_pagerank_batch(
     seeds, r0 = v). Returns (topic: string, id, rank) with each topic's
     vector L1-normalized.
 
-    Physical plan: the state row carries K (rank, tele) column pairs; each
-    iteration is STILL one edge-join + one shuffle — the contribution
-    aggregation computes K sums in a single groupBy (map-side partials for
-    all K at once), and the per-topic dangling-mass/total/delta scalars come
-    from one whole-state aggregate action (3K aggregates, K driver-side
-    doubles — bounded by ``max_topics``). Shuffle bytes grow K-fold per row,
-    but rows, joins, stages, and edge-scan passes do not. With ``eps`` set,
-    the loop stops when EVERY topic's L1 delta is below it.
+    Physical plan: :func:`_teleport_pagerank` with K teleport columns, so
+    each iteration is STILL one edge-join + one shuffle — the contribution
+    aggregation computes K sums in a single groupBy, and the per-topic
+    scalars come from one aggregate action (3K driver-side doubles, bounded
+    by ``max_topics``). Shuffle bytes grow K-fold per row, but rows, joins,
+    stages, and edge-scan passes do not. With ``eps`` set, the loop stops
+    when EVERY topic's L1 delta is below it.
     """
-    spark = edges.sparkSession
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    def no_bcast(df: DataFrame) -> DataFrame:
-        return df if n <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
-
     seeds = seeds.select(
         F.col("topic").cast("string").alias("topic"),
         F.col("id").cast("long").alias("id"),
@@ -883,105 +833,26 @@ def personalized_pagerank_batch(
                 f"topic {r['topic']!r}: seed ids outside [0, {n}): "
                 f"[{r['lo']}, {r['hi']}]"
             )
-    K = len(topics)
-
-    degrees = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ew = (
-        edges.join(no_bcast(degrees), "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
-        .repartition(shuffle_p, "src")
-        .persist()
-    )
-    ew.count()
-
     # one vertex-side join builds all K teleport columns: seed membership
-    # arrives as a per-id set of topics, unpacked into t0..t{K-1}
+    # arrives as a per-id set of topics
     seed_sets = seeds.groupBy("id").agg(F.collect_set("topic").alias("ts"))
-    src_ids = degrees.select(F.col("src").alias("id"))
-    tele_cols = [
-        F.when(F.array_contains(F.col("ts"), t), 1.0 / sizes[t])
-        .otherwise(0.0)
-        .alias(f"t{k}")
-        for k, t in enumerate(topics)
+    teleports = [
+        F.when(F.array_contains(F.col("ts"), t), 1.0 / sizes[t]).otherwise(0.0)
+        for t in topics
     ]
-    with _util.static_plan(spark):
-        state = (
-            spark.range(0, n, 1, shuffle_p)
-            .join(no_bcast(src_ids.withColumn("nd", F.lit(True))), "id", "left")
-            .join(no_bcast(seed_sets), "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("nd"), F.lit(False)).alias("non_dangling"),
-                *tele_cols,
-            )
-            .select(
-                "id",
-                "non_dangling",
-                *[F.col(f"t{k}") for k in range(K)],
-                *[F.col(f"t{k}").alias(f"r{k}") for k in range(K)],
-            )
-            .repartition(shuffle_p, "id")
-            .localCheckpoint(eager=True)
-        )
-
-    def scalars(df: DataFrame) -> tuple[list[float], list[float]]:
-        row = df.agg(
-            *[
-                F.sum(F.when(~F.col("non_dangling"), F.col(f"r{k}"))).alias(f"d{k}")
-                for k in range(K)
-            ],
-            *[F.sum(f"r{k}").alias(f"s{k}") for k in range(K)],
-        ).first()
-        return (
-            [float(row[f"d{k}"] or 0.0) for k in range(K)],
-            [float(row[f"s{k}"]) for k in range(K)],
-        )
-
-    dmass, total = scalars(state)
-
-    for _ in range(max_iter):
-        with _util.static_plan(spark):
-            new_state = _ppr_batch_iteration(
-                ew, state, K, c, dmass, total, no_bcast
-            ).localCheckpoint(eager=True)
-        row = new_state.agg(
-            *[
-                F.sum(F.abs(F.col(f"r{k}") - F.col(f"o{k}"))).alias(f"del{k}")
-                for k in range(K)
-            ],
-            *[
-                F.sum(F.when(~F.col("non_dangling"), F.col(f"r{k}"))).alias(f"d{k}")
-                for k in range(K)
-            ],
-            *[F.sum(f"r{k}").alias(f"s{k}") for k in range(K)],
-        ).first()
-        dmass = [float(row[f"d{k}"] or 0.0) for k in range(K)]
-        total = [float(row[f"s{k}"]) for k in range(K)]
-        state = new_state.select(
-            "id", "non_dangling", *[f"t{k}" for k in range(K)], *[f"r{k}" for k in range(K)]
-        )
-        if max(float(row[f"del{k}"]) for k in range(K)) < eps:
-            break
-
-    ew.unpersist()
-    norm_row = state.agg(
-        *[F.sum(F.abs(F.col(f"r{k}"))).alias(f"n{k}") for k in range(K)]
-    ).first()
+    ranks = _teleport_pagerank(edges, n, teleports, c, max_iter, eps, seeds=seed_sets)
     # melt via explode of literal structs — topic labels are user data, so
     # they must never be spliced into a SQL string (quotes/backslashes in a
     # label would break or alter an F.expr stack())
     melted = F.explode(
         F.array(
             *[
-                F.struct(
-                    F.lit(t).alias("topic"),
-                    (F.col(f"r{k}") / F.lit(float(norm_row[f"n{k}"]))).alias("rank"),
-                )
+                F.struct(F.lit(t).alias("topic"), F.col(f"r{k}").alias("rank"))
                 for k, t in enumerate(topics)
             ]
         )
     )
-    return state.select("id", melted.alias("m")).select(
+    return ranks.select("id", melted.alias("m")).select(
         F.col("m.topic").alias("topic"), "id", F.col("m.rank").alias("rank")
     )
 
@@ -1011,8 +882,7 @@ def host_link_features(edges: DataFrame, mapping: DataFrame) -> DataFrame:
     """
     n_verts = _util.approx_vertex_count(edges)
 
-    def no_bcast(df: DataFrame) -> DataFrame:
-        return df if n_verts <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
+    no_bcast = _util.no_bcast_fn(n_verts)
 
     m_src = mapping.select(F.col("id").alias("src"), F.col("group").alias("hsrc"))
     m_dst = mapping.select(F.col("id").alias("dst"), F.col("group").alias("hdst"))
@@ -1098,8 +968,7 @@ def katz_centrality(
     spark = edges.sparkSession
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    def no_bcast(df: DataFrame) -> DataFrame:
-        return df if n <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
+    no_bcast = _util.no_bcast_fn(n)
 
     e = (
         edges.select("src", "dst")

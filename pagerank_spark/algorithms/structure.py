@@ -27,13 +27,6 @@ from pyspark.sql import functions as F
 from pagerank_spark import util as _util
 
 
-def _no_bcast_fn(n_verts: int):
-    def no_bcast(df: DataFrame) -> DataFrame:
-        return df if n_verts <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
-
-    return no_bcast
-
-
 def coreness(edges: DataFrame, max_rounds: int = 100) -> DataFrame:
     """k-core decomposition via iterated neighborhood h-index (Lu et al.,
     "The H-index of a network node", PNAS 2016): over the undirected simple
@@ -73,7 +66,7 @@ def coreness(edges: DataFrame, max_rounds: int = 100) -> DataFrame:
     spark = edges.sparkSession
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_verts = _util.approx_vertex_count(edges)
-    no_bcast = _no_bcast_fn(n_verts)
+    no_bcast = _util.no_bcast_fn(n_verts)
 
     canon = (
         edges.select(
@@ -180,7 +173,7 @@ def strongly_connected_components(
     spark = edges.sparkSession
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_verts = _util.approx_vertex_count(edges)
-    no_bcast = _no_bcast_fn(n_verts)
+    no_bcast = _util.no_bcast_fn(n_verts)
 
     e = (
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
@@ -362,7 +355,7 @@ def graph_summary(edges: DataFrame) -> DataFrame:
     sides are size-gated like every other O(V) join in the engine.
     """
     n_verts = _util.approx_vertex_count(edges)
-    no_bcast = _no_bcast_fn(n_verts)
+    no_bcast = _util.no_bcast_fn(n_verts)
 
     e = edges.select("src", "dst").distinct().persist()
     nonloop = e.filter(F.col("src") != F.col("dst"))
@@ -446,7 +439,7 @@ def contract_graph(
     shape for a 100 TB edge table since the output is |groups|-sized.
     """
     n_verts = _util.approx_vertex_count(edges)
-    no_bcast = _no_bcast_fn(n_verts)
+    no_bcast = _util.no_bcast_fn(n_verts)
     m_src = mapping.select(F.col("id").alias("src"), F.col("group").alias("gsrc"))
     m_dst = mapping.select(F.col("id").alias("dst"), F.col("group").alias("gdst"))
     out = (
@@ -541,7 +534,7 @@ def bowtie(
     spark = edges.sparkSession
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_verts = _util.approx_vertex_count(edges)
-    no_bcast = _no_bcast_fn(n_verts)
+    no_bcast = _util.no_bcast_fn(n_verts)
 
     e = (
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))

@@ -52,8 +52,7 @@ def random_walks(
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_verts = _util.approx_vertex_count(edges)
 
-    def no_bcast(df: DataFrame) -> DataFrame:
-        return df if n_verts <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
+    no_bcast = _util.no_bcast_fn(n_verts)
 
     e_src = (
         edges.select("src", "dst").distinct().repartition(shuffle_p, "src").persist()
@@ -151,8 +150,7 @@ def node2vec_walks(
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_verts = _util.approx_vertex_count(edges)
 
-    def no_bcast(df: DataFrame) -> DataFrame:
-        return df if n_verts <= _util.BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
+    no_bcast = _util.no_bcast_fn(n_verts)
 
     wp = int(round(weight_scale / p))
     w1 = int(weight_scale)

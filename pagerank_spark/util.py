@@ -16,6 +16,19 @@ from pyspark.sql import functions as F
 BROADCAST_SAFE_ROWS = 2_000_000
 
 
+def no_bcast_fn(n_rows: int):
+    """The size gate for a join side of ``n_rows`` rows: above
+    ``BROADCAST_SAFE_ROWS`` the returned function hints the side
+    ``shuffle_hash`` so Catalyst never broadcasts it; at or below the gate it
+    returns the side unchanged. The gate is read on each call, so a patched
+    ``BROADCAST_SAFE_ROWS`` takes effect."""
+
+    def no_bcast(df: DataFrame) -> DataFrame:
+        return df if n_rows <= BROADCAST_SAFE_ROWS else df.hint("shuffle_hash")
+
+    return no_bcast
+
+
 @contextmanager
 def static_plan(spark: SparkSession):
     """Compile and execute the wrapped queries with AQE disabled.

@@ -805,7 +805,7 @@ def test_ppr_batch_matches_single_runs(spark):
 def test_ppr_seed_hygiene(spark):
     """Duplicate seeds are deduped (same result as the distinct set);
     out-of-range seeds are a hard error, not a silently-shrunk teleport."""
-    from pagerank_spark.algorithms.linkanalysis import personalized_pagerank
+    from pagerank_spark.algorithms.linkanalysis import personalized_pagerank, spam_mass
 
     arr, n = micro_graphs()["cycle_8"]
     edges = edges_from_numpy(spark, arr)
@@ -816,6 +816,14 @@ def test_ppr_seed_hygiene(spark):
     got_dis = {r["id"]: r["rank"] for r in
                personalized_pagerank(edges, n, dis, max_iter=3).collect()}
     assert all(abs(got_dup[i] - got_dis[i]) < 1e-15 for i in range(n))
+
+    # spam_mass's |S|/n rescale counts the same distinct seeds the
+    # teleport does
+    sm_dup = {r["id"]: r["rel_mass"] for r in
+              spam_mass(edges, n, dup, max_iter=3).collect()}
+    sm_dis = {r["id"]: r["rel_mass"] for r in
+              spam_mass(edges, n, dis, max_iter=3).collect()}
+    assert all(abs(sm_dup[i] - sm_dis[i]) < 1e-12 for i in range(n))
 
     bad = spark.createDataFrame([(0,), (99,)], "id long")
     with pytest.raises(ValueError, match="outside"):

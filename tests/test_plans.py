@@ -10,6 +10,7 @@ broadcasting an O(V) table.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
@@ -280,60 +281,6 @@ def test_cached_repartition_feeds_exchange_free_aggregation(spark):
     part.unpersist()
 
 
-def test_ppr_iteration_single_exchange(spark):
-    """Personalized PageRank keeps the uniform path's 1-shuffle/iter
-    contract: contribution join consumes ew's hash(src) x the state
-    checkpoint's hash(id); the aggregation is the only exchange; the
-    rank-update left join consumes hash(id) x hash(dst)."""
-    from pagerank_spark.algorithms.linkanalysis import _ppr_iteration
-    from pagerank_spark.sources.synthetic import synthetic_edges
-    from pagerank_spark.util import static_plan
-
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = 300
-    edges = synthetic_edges(spark, n, 3000, seed=7, num_partitions=4)
-    degrees = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ew = (
-        edges.join(degrees.hint("shuffle_hash"), "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
-        .repartition(p, "src")
-        .persist()
-    )
-    ew.count()
-    state0 = (
-        spark.range(0, n, 1, p)
-        .select(
-            "id",
-            F.lit(1.0 / n).alias("rank"),
-            F.when(F.col("id") < 5, 0.2).otherwise(0.0).alias("tele"),
-            F.lit(True).alias("non_dangling"),
-        )
-        .repartition(p, "id")
-    )
-    with static_plan(spark):
-        state = state0.localCheckpoint(eager=True)
-
-    def no_bcast(df):
-        return df.hint("shuffle_hash")
-
-    sh, _bc = _exchanges(_ppr_iteration(ew, state, 0.85, 0.0, 1.0, no_bcast))
-    assert sh == 1, f"ppr iteration planned {sh} shuffle exchanges, want 1"
-
-    # chained off the checkpointed result, as the run loop does
-    with static_plan(spark):
-        nxt = _ppr_iteration(ew, state, 0.85, 0.0, 1.0, no_bcast).localCheckpoint(
-            eager=True
-        )
-    sh2, _bc2 = _exchanges(
-        _ppr_iteration(
-            ew, nxt.select("id", "rank", "tele", "non_dangling"),
-            0.85, 0.0, 1.0, no_bcast,
-        )
-    )
-    assert sh2 == 1, f"chained ppr iteration planned {sh2} exchanges, want 1"
-    ew.unpersist()
-
-
 def test_contract_graph_broadcasts_small_mapping(spark):
     """Below the vertex gate the host mapping joins broadcast (no shuffle
     of the O(E) edge side beyond the final group aggregation)."""
@@ -508,16 +455,20 @@ def test_paragraph_dedup_election_is_aggregate_not_window(spark):
     assert sh <= 3, f"paragraph dedup planned {sh} shuffles, want <= 3"
 
 
-def test_ppr_batch_iteration_single_exchange(spark):
-    """The K-topic batched iteration keeps the 1-shuffle/iter contract —
-    the whole point of batching: K topic vectors ride one edge join and
-    one contribution aggregation instead of K separate loops."""
-    from pagerank_spark.algorithms.linkanalysis import _ppr_batch_iteration
+@pytest.mark.parametrize("K", [1, 4])
+def test_ppr_batch_iteration_single_exchange(spark, K):
+    """The teleport iteration behind every personalized/weighted/batched
+    PageRank keeps the uniform path's 1-shuffle/iter contract for any K:
+    the contribution join consumes ew's hash(src) x the state checkpoint's
+    hash(id), the aggregation (K sums at once) is the only exchange, and
+    the rank-update left join consumes hash(id) x hash(dst) — K topic
+    vectors ride one edge join and one aggregation instead of K loops."""
+    from pagerank_spark.algorithms.linkanalysis import _teleport_iteration
     from pagerank_spark.sources.synthetic import synthetic_edges
     from pagerank_spark.util import static_plan
 
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n, K = 300, 4
+    n = 300
     edges = synthetic_edges(spark, n, 3000, seed=7, num_partitions=4)
     degrees = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     ew = (
@@ -545,8 +496,17 @@ def test_ppr_batch_iteration_single_exchange(spark):
 
     zeros = [0.0] * K
     ones = [1.0] * K
-    sh, _bc = _exchanges(_ppr_batch_iteration(ew, state, K, 0.85, zeros, ones, no_bcast))
-    assert sh == 1, f"batched ppr iteration planned {sh} shuffle exchanges, want 1"
+    sh, _bc = _exchanges(_teleport_iteration(ew, state, K, 0.85, zeros, ones, no_bcast))
+    assert sh == 1, f"K={K} ppr iteration planned {sh} shuffle exchanges, want 1"
+
+    # chained off the checkpointed result, as the run loop does
+    with static_plan(spark):
+        nxt = _teleport_iteration(
+            ew, state, K, 0.85, zeros, ones, no_bcast
+        ).localCheckpoint(eager=True)
+    nxt = nxt.drop(*[f"o{k}" for k in range(K)])
+    sh2, _bc2 = _exchanges(_teleport_iteration(ew, nxt, K, 0.85, zeros, ones, no_bcast))
+    assert sh2 == 1, f"K={K} chained ppr iteration planned {sh2} exchanges, want 1"
     ew.unpersist()
 
 
