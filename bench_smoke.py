@@ -492,6 +492,7 @@ def smoke_pagerank_df_10m(spark, n_vertices=10_000_000, n_edges=40_000_000,
     test pins at n=300)."""
     from pyspark.sql import functions as FF
 
+    from pagerank_spark.algorithms.linkanalysis import _teleport_iteration
     from pagerank_spark.algorithms.pagerank import PageRank
     from pagerank_spark.sources.synthetic import synthetic_edges
     from pagerank_spark.util import static_plan
@@ -523,28 +524,28 @@ def smoke_pagerank_df_10m(spark, n_vertices=10_000_000, n_edges=40_000_000,
         return acc[0]
 
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    pr = PageRank()
-    degrees = edges.groupBy("src").agg(FF.count(FF.lit(1)).alias("outdeg"))
+    out = edges.groupBy("src").agg(FF.count(FF.lit(1)).alias("out"))
     ew = (
-        edges.join(degrees.hint("shuffle_hash"), "src")
-        .select("src", "dst", (FF.lit(1.0) / FF.col("outdeg")).alias("w"))
+        edges.join(out.hint("shuffle_hash"), "src")
+        .select("src", "dst", (FF.lit(1.0) / FF.col("out")).alias("w"))
         .repartition(p, "src")
         .persist()
     )
     ew.count()  # materialize: the cache's own build exchanges are pack-time,
-    # not per-iteration — exactly as _run_dataframe amortizes them
+    # not per-iteration — exactly as _teleport_pagerank amortizes them
     state0 = (
         spark.range(0, n_vertices, 1, p)
-        .select("id", FF.lit(1.0 / n_vertices).alias("rank"),
-                FF.lit(True).alias("non_dangling"))
+        .select("id", FF.lit(True).alias("non_dangling"),
+                FF.lit(1.0 / n_vertices).alias("t0"),
+                FF.lit(1.0 / n_vertices).alias("r0"))
         .repartition(p, "id")
     )
     with static_plan(spark):
         state = state0.localCheckpoint(eager=True)
         # compile the audited plan non-adaptively: under AQE the walker sees
         # only an unexpanded AdaptiveSparkPlan root (0 exchanges, wrongly)
-        sh = exchanges(pr._df_iteration(
-            ew, state, n_vertices, 0.0, 1.0, lambda df: df.hint("shuffle_hash")
+        sh = exchanges(_teleport_iteration(
+            ew, state, 1, 0.85, [0.0], [1.0], lambda df: df.hint("shuffle_hash")
         ))
     ew.unpersist()
     edges.unpersist()

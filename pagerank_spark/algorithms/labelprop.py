@@ -36,8 +36,8 @@ def _lp_round(und: DataFrame, labels: DataFrame, big: bool) -> DataFrame:
     join with no exchange, one repartition("a") feeds BOTH aggregates
     (hash(a) satisfies groupBy(a, label) and groupBy(a)), and the label
     update join reuses hash(id) x the aggregate's hash(id). Requires the
-    labels checkpoint to be compiled under util.static_plan (see PageRank's
-    _df_iteration for the same contract). Audited by
+    labels checkpoint to be compiled under util.static_plan (see
+    linkanalysis._teleport_iteration for the same contract). Audited by
     tests/test_plans.py::test_labelprop_big_round_single_exchange."""
 
     def _hs(df: DataFrame) -> DataFrame:

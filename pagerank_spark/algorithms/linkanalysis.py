@@ -5,9 +5,10 @@ networks, co-citation pair scores and host link features.
 The reference engine (/root/reference/Pagerank/src/pagerank32c.c:893-946)
 computes only uniform-teleport PageRank. Its iteration with a general
 teleport vector runs here in ONE loop, :func:`_teleport_pagerank`, which
-steps K vectors at once: K=1 for :func:`personalized_pagerank`,
-:func:`trustrank` and :func:`spam_mass` (1/|S| on the seeds) and for
-:func:`weighted_pagerank` (uniform, weight-normalized edges), K topics for
+steps K vectors at once: K=1 for ``PageRank(mode="dataframe")`` (uniform
+1/n), for :func:`personalized_pagerank` and :func:`trustrank` (1/|S| on
+the seeds) and for :func:`weighted_pagerank` (uniform, weight-normalized
+edges); K=2 for :func:`spam_mass` (both of those teleports); K topics for
 :func:`personalized_pagerank_batch`. Every operator re-uses the execution
 discipline the audited PageRank/label-propagation loops established
 (PLANS.md "statically planned checkpoints"):
@@ -72,7 +73,7 @@ def hits(
     Physical plan per half-step: one shuffle (the aggregation). The edge
     cache is partitioned on the half-step's join key; the state checkpoint
     keeps hash(id) via ``util.static_plan``, so the score join and the
-    update join are exchange-free (same contract as PageRank._df_iteration).
+    update join are exchange-free (same contract as _teleport_iteration).
     """
     spark = edges.sparkSession
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -187,7 +188,9 @@ def salsa(
     return hits(edges, vertices, max_iter=max_iter, degree_normalized=True)
 
 
-def _teleport_iteration(ew, state, K: int, c: float, dmass, total, no_bcast):
+def _teleport_iteration(
+    ew, state, K: int, c: float, dmass, total, no_bcast, salt_partitions=None
+):
     """One teleport power-iteration step for K rank vectors at once::
 
         r_k' = c * (P^T r_k + dmass_k * t_k) + (1-c) * total_k * t_k
@@ -197,15 +200,26 @@ def _teleport_iteration(ew, state, K: int, c: float, dmass, total, no_bcast):
     and ONE shuffle — the contribution groupBy computes K sums at once
     (map-side partials for all K). The contribution join consumes ew's
     hash(src) x the state checkpoint's hash(id), and the rank-update left
-    join consumes hash(id) x hash(dst) (PageRank._df_iteration's contract).
+    join consumes hash(id) x hash(dst), PROVIDED the state checkpoint was
+    compiled under util.static_plan (an AQE-compiled one plans 3 exchanges).
+    ``salt_partitions`` swaps in the salted two-stage sum (graph/skew.py).
     Audited by tests/test_plans.py::test_ppr_batch_iteration_single_exchange."""
     joined = ew.join(
         no_bcast(state.select("id", *[f"r{k}" for k in range(K)])),
         ew.src == F.col("id"),
     )
-    contribs = joined.groupBy("dst").agg(
-        *[F.sum(F.col(f"r{k}") * F.col("w")).alias(f"c{k}") for k in range(K)]
-    )
+    products = [F.col(f"r{k}") * F.col("w") for k in range(K)]
+    outs = [f"c{k}" for k in range(K)]
+    if salt_partitions:
+        from pagerank_spark.graph.skew import salted_sum
+
+        contribs = salted_sum(
+            joined, "dst", products, salt_partitions, salt_source="src", out=outs
+        )
+    else:
+        contribs = joined.groupBy("dst").agg(
+            *[F.sum(p).alias(o) for p, o in zip(products, outs)]
+        )
     return state.join(no_bcast(contribs), state.id == contribs.dst, "left").select(
         state.id,
         "non_dangling",
@@ -225,6 +239,18 @@ def _teleport_iteration(ew, state, K: int, c: float, dmass, total, no_bcast):
     )
 
 
+@dataclass
+class TeleportRun:
+    """What :func:`_teleport_pagerank` returns. The per-iteration hook sees
+    the same object while the loop fills it in."""
+
+    m: int  # edge count: the rows the contribution join reads per iteration
+    iterations: int  # number of the last iteration run (start offset included)
+    deltas: list[float] = field(default_factory=list)  # max L1 delta over K
+    iter_seconds: list[float] = field(default_factory=list)
+    ranks: DataFrame | None = None  # (id, r0..r{K-1}), each L1-normalized
+
+
 def _teleport_pagerank(
     edges: DataFrame,
     n: int,
@@ -234,13 +260,17 @@ def _teleport_pagerank(
     eps: float,
     seeds: DataFrame | None = None,
     weight_col: str | None = None,
-) -> DataFrame:
-    """The one power-iteration loop behind :func:`personalized_pagerank`,
-    :func:`trustrank`, :func:`weighted_pagerank` and
-    :func:`personalized_pagerank_batch`: the engine's uniform iteration
-    (pagerank.py._df_iteration; reference
-    /root/reference/Pagerank/src/pagerank32c.c:907-917) with the uniform
-    vector 1/n replaced by K teleport vectors v_k::
+    start: DataFrame | None = None,
+    start_iter: int = 0,
+    salt_partitions: int | None = None,
+    on_iteration=None,
+) -> TeleportRun:
+    """The one DataFrame power-iteration loop: ``PageRank(mode="dataframe")``
+    (K=1, v = 1/n), :func:`personalized_pagerank`, :func:`trustrank`,
+    :func:`spam_mass`, :func:`weighted_pagerank` and
+    :func:`personalized_pagerank_batch` all run on it. It is the reference
+    engine's iteration (src/pagerank32c.c:907-917) with the uniform vector
+    1/n replaced by K teleport vectors v_k::
 
         r0_k = v_k
         r_k' = c * (P^T r_k + dangling_mass_k * v_k) + (1-c) * total_k * v_k
@@ -249,15 +279,21 @@ def _teleport_pagerank(
     Column per v_k, evaluated on every id in [0, n) after ``seeds`` (an
     id-keyed frame, optional) is left-joined on. P is 1/outdeg, or
     weight / sum-of-out-weights with ``weight_col``; dangling = no
-    out-edges. Returns (id, r0..r{K-1}), each vector L1-normalized.
+    out-edges.
+
+    ``start`` (id, rank), optional, gives r0's starting ranks (warm start
+    or resume; missing ids start at v_0). Iterations are numbered from
+    ``start_iter + 1`` up to ``max_iter``. ``on_iteration(run, state,
+    dmass, total)`` runs after each step with the :class:`TeleportRun` so
+    far, the new state (id, non_dangling, t0.., r0..) and the K scalars.
 
     Physical cost: ONE shuffle per iteration (the contribution
     aggregation) — the row-normalized edge cache carries hash(src), the
     state checkpoint keeps hash(id) (``util.static_plan``), and the
     teleport columns ride in the state so the update join needs no extra
     v lookup. The per-vector delta/dangling-mass/total scalars come from
-    one whole-state aggregate action (3K driver-side doubles); with
-    ``eps`` set, the loop stops when EVERY vector's L1 delta is below it.
+    one whole-state aggregate action (3K driver-side doubles); the loop
+    stops when EVERY vector's L1 delta is below ``eps``.
     """
     spark = edges.sparkSession
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -274,11 +310,16 @@ def _teleport_pagerank(
         .repartition(shuffle_p, "src")
         .persist()
     )
-    ew.count()
+    run = TeleportRun(m=ew.count(), iterations=start_iter)
 
-    # state: (id, non_dangling, t0.., r0..) with r = t to start
+    # state: (id, non_dangling, t0.., r0..) with r = t to start, except r0
+    # where ``start`` has a rank. NOTE: spark.range already emits `id: long`
+    # — a no-op cast here is NOT harmless: the optimizer collapses it and
+    # the checkpoint then records its partitioning against the pre-cast
+    # attribute, so every downstream join would re-exchange the state.
     ts = [f"t{k}" for k in range(K)]
     rs = [f"r{k}" for k in range(K)]
+    r_start = list(teleports)
     with _util.static_plan(spark):
         verts = spark.range(0, n, 1, shuffle_p).join(
             no_bcast(out.select(F.col("src").alias("id"), F.lit(True).alias("nd"))),
@@ -287,12 +328,15 @@ def _teleport_pagerank(
         )
         if seeds is not None:
             verts = verts.join(no_bcast(seeds), "id", "left")
+        if start is not None:
+            verts = verts.join(no_bcast(start.select("id", "rank")), "id", "left")
+            r_start[0] = F.coalesce(F.col("rank"), teleports[0])
         state = (
             verts.select(
                 "id",
                 F.coalesce(F.col("nd"), F.lit(False)).alias("non_dangling"),
                 *[v.alias(t) for v, t in zip(teleports, ts)],
-                *[v.alias(r) for v, r in zip(teleports, rs)],
+                *[v.alias(r) for v, r in zip(r_start, rs)],
             )
             .repartition(shuffle_p, "id")
             .localCheckpoint(eager=True)
@@ -317,27 +361,47 @@ def _teleport_pagerank(
         return F.sum(F.abs(F.col(f"r{k}")))
 
     dmass, total = sums(state, dangling, mass)
-    for _ in range(max_iter):
+    for it in range(start_iter + 1, max_iter + 1):
+        t0 = time.time()
         with _util.static_plan(spark):
             new_state = _teleport_iteration(
-                ew, state, K, c, dmass, total, no_bcast
+                ew, state, K, c, dmass, total, no_bcast, salt_partitions
             ).localCheckpoint(eager=True)
         dmass, total, deltas = sums(new_state, dangling, mass, delta)
         state = new_state.select("id", "non_dangling", *ts, *rs)
-        if max(deltas) < eps:
+        run.iterations = it
+        run.deltas.append(max(deltas))
+        run.iter_seconds.append(time.time() - t0)
+        if on_iteration is not None:
+            on_iteration(run, state, dmass, total)
+        if run.deltas[-1] < eps:
             break
 
     ew.unpersist()
     (norms,) = sums(state, l1)
-    return state.select(
+    run.ranks = state.select(
         "id", *[(F.col(r) / F.lit(norm)).alias(r) for r, norm in zip(rs, norms)]
     )
+    return run
 
 
-def _distinct_seeds(seeds: DataFrame) -> DataFrame:
-    # duplicates would both miscount |S| and duplicate state rows through
-    # the teleport's left join
-    return seeds.select(F.col("id").cast("long").alias("id")).distinct()
+def _seed_teleport(seeds: DataFrame, n: int) -> tuple[DataFrame, Column, int]:
+    """(distinct seeds as (id, s), the 1/|S| teleport Column, |S|).
+    Duplicates would miscount |S| and duplicate state rows; an empty set or
+    out-of-range ids would silently shrink the teleport sum (hard errors)."""
+    seeds = seeds.select(F.col("id").cast("long").alias("id")).distinct()
+    s_stats = seeds.agg(
+        F.count(F.lit(1)).alias("k"), F.min("id").alias("lo"), F.max("id").alias("hi")
+    ).first()
+    n_seeds = int(s_stats["k"])
+    if n_seeds == 0:
+        raise ValueError("personalized_pagerank needs a non-empty seed set")
+    if s_stats["lo"] < 0 or s_stats["hi"] >= n:
+        raise ValueError(
+            f"seed ids outside [0, {n}): saw [{s_stats['lo']}, {s_stats['hi']}]"
+        )
+    tele = F.when(F.col("s"), 1.0 / n_seeds).otherwise(0.0)
+    return seeds.withColumn("s", F.lit(True)), tele, n_seeds
 
 
 def personalized_pagerank(
@@ -358,22 +422,10 @@ def personalized_pagerank(
     once. Returns (id, rank) L1-normalized, for every vertex in [0, n);
     one shuffle per iteration.
     """
-    # out-of-range ids would silently shrink the teleport sum: hard error
-    seeds = _distinct_seeds(seeds)
-    s_stats = seeds.agg(
-        F.count(F.lit(1)).alias("k"), F.min("id").alias("lo"), F.max("id").alias("hi")
-    ).first()
-    n_seeds = int(s_stats["k"])
-    if n_seeds == 0:
-        raise ValueError("personalized_pagerank needs a non-empty seed set")
-    if s_stats["lo"] < 0 or s_stats["hi"] >= n:
-        raise ValueError(
-            f"seed ids outside [0, {n}): saw [{s_stats['lo']}, {s_stats['hi']}]"
-        )
-    tele = F.when(F.col("s"), 1.0 / n_seeds).otherwise(0.0)
+    seeds, tele, _ = _seed_teleport(seeds, n)
     return _teleport_pagerank(
-        edges, n, [tele], c, max_iter, eps, seeds=seeds.withColumn("s", F.lit(True))
-    ).select("id", F.col("r0").alias("rank"))
+        edges, n, [tele], c, max_iter, eps, seeds=seeds
+    ).ranks.select("id", F.col("r0").alias("rank"))
 
 
 def trustrank(
@@ -423,31 +475,26 @@ def spam_mass(
     neighborhood). pr(p) > 0 always holds under uniform teleport, so the
     division is safe; the guard is for callers passing degenerate graphs.
 
-    Returns (id, pagerank, trustrank, rel_mass) for every vertex in
-    [0, n). Cost: the two rank computations (each 1 shuffle/iter) plus
-    ONE O(V) join, size-gated like every other O(V) join here.
-    """
-    from pagerank_spark.algorithms.pagerank import PageRank
+    pr and tr are the two vectors of ONE :func:`_teleport_pagerank` loop
+    (K=2: teleports 1/n and 1/|S| on the core), read from the same rows.
+    With ``eps`` set the loop stops when BOTH L1 deltas are below it; the
+    default ``eps=0`` runs exactly ``max_iter`` iterations.
 
-    n_seeds = _distinct_seeds(trusted).count()
-    pr = (
-        PageRank(c=c, eps=eps, max_iter=max_iter, mode="dataframe")
-        .run(edges, n)
-        .ranks
-    )
-    tr = personalized_pagerank(
-        edges, n, trusted, c=c, max_iter=max_iter, eps=eps
-    )
-    no_bcast = _util.no_bcast_fn(n)
+    Returns (id, pagerank, trustrank, rel_mass) for every vertex in
+    [0, n).
+    """
+    seeds, tele, n_seeds = _seed_teleport(trusted, n)
+    ranks = _teleport_pagerank(
+        edges, n, [F.lit(1.0 / n), tele], c, max_iter, eps, seeds=seeds
+    ).ranks
     scale = float(n_seeds) / float(n)
-    t = tr.select("id", F.col("rank").alias("tr"))
-    return pr.join(no_bcast(t), "id").select(
+    return ranks.select(
         "id",
-        F.col("rank").alias("pagerank"),
-        F.col("tr").alias("trustrank"),
+        F.col("r0").alias("pagerank"),
+        F.col("r1").alias("trustrank"),
         F.when(
-            F.col("rank") > 0,
-            (F.col("rank") - F.lit(scale) * F.col("tr")) / F.col("rank"),
+            F.col("r0") > 0,
+            (F.col("r0") - F.lit(scale) * F.col("r1")) / F.col("r0"),
         )
         .otherwise(F.lit(0.0))
         .alias("rel_mass"),
@@ -611,10 +658,9 @@ def weighted_pagerank(
     weight_col: str = "weight",
 ) -> DataFrame:
     """PageRank over a weighted edge table (src, dst, weight > 0) — the
-    host-graph variant of the engine's uniform PageRank
-    (pagerank.py._df_iteration; reference semantics
-    /root/reference/Pagerank/src/pagerank32c.c:907-917, with 1/outdeg
-    replaced by weight / sum-of-out-weights)::
+    host-graph variant of the engine's uniform PageRank (reference
+    semantics src/pagerank32c.c:907-917, with 1/outdeg replaced by
+    weight / sum-of-out-weights)::
 
         P'[u][v]  = w(u,v) / sum_x w(u,x)
         r'        = c * (P'^T r + dangling_mass / n) + (1-c)/n * total
@@ -628,7 +674,7 @@ def weighted_pagerank(
     """
     return _teleport_pagerank(
         edges, n, [F.lit(1.0 / n)], c, max_iter, eps, weight_col=weight_col
-    ).select("id", F.col("r0").alias("rank"))
+    ).ranks.select("id", F.col("r0").alias("rank"))
 
 
 def co_citation(
@@ -840,7 +886,9 @@ def personalized_pagerank_batch(
         F.when(F.array_contains(F.col("ts"), t), 1.0 / sizes[t]).otherwise(0.0)
         for t in topics
     ]
-    ranks = _teleport_pagerank(edges, n, teleports, c, max_iter, eps, seeds=seed_sets)
+    ranks = _teleport_pagerank(
+        edges, n, teleports, c, max_iter, eps, seeds=seed_sets
+    ).ranks
     # melt via explode of literal structs — topic labels are user data, so
     # they must never be spliced into a SQL string (quotes/backslashes in a
     # label would break or alter an F.expr stack())

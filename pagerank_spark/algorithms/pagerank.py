@@ -21,19 +21,15 @@ Two physical strategies:
 - ``mode="dataframe"`` — the fully distributed path: the SpMV is the
   edges⋈ranks equi-join + groupBy(dst) sum (the distributed analog of the
   reference's column-strided `getVectorPik` kernel). Scales to any vertex
-  count; ONE shuffle per iteration: the per-iteration state checkpoint is
-  compiled with AQE disabled (util.static_plan) so the LogicalRDD records
-  its hash(id) partitioning — under AQE, localCheckpoint captures
-  UnknownPartitioning (the adaptive wrapper has no final plan yet), which
-  silently costs 2 extra O(V) exchanges per iteration. With the
-  partitioning kept, the contribution join reuses the edge cache's
-  hash(src) × the state checkpoint's hash(id), the rank-update left join
-  reuses hash(id) × the aggregate's hash(dst), and only the contribution
-  groupBy exchanges data (map-side-combined partials). Per-iteration
-  residual/dangling/total scalars come from ONE cheap scan over the
-  checkpointed state (delta, next dangling mass, and total mass are fused
-  into a single aggregate, mirroring the reference's fused `getDelta`
-  copy+residual kernel).
+  count. It is the K=1, uniform-teleport (v = 1/n) case of the one
+  DataFrame power-iteration loop, ``linkanalysis._teleport_pagerank``,
+  which personalized, weighted and topic-batched PageRank and spam mass
+  share: ONE shuffle per iteration (the contribution groupBy, map-side
+  combined; ``salt_partitions`` salts it), statically planned state
+  checkpoints that keep hash(id), and the residual/dangling/total scalars
+  fused into one aggregate over the checkpointed state (the reference's
+  fused `getDelta` copy+residual kernel). See ``_teleport_iteration`` for
+  the plan contract.
 
 - ``mode="csr"`` — the throughput path: edges are blocked by interleaved
   destination stripes (``dst % nblocks``; hubs further split by src), sorted
@@ -73,7 +69,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pagerank_spark import util as _util
+from pagerank_spark.algorithms.linkanalysis import _teleport_pagerank
 from pagerank_spark.lineage import LineageWriter
 
 
@@ -386,7 +382,7 @@ class PageRank:
         that vertex's mass."""
         ir = self.initial_ranks.select(
             F.col("id").cast("long").alias("id"),
-            F.col("rank").cast("double").alias("r0"),
+            F.col("rank").cast("double").alias("rank"),
         )
         st = ir.agg(
             F.count(F.lit(1)).alias("k"),
@@ -431,160 +427,62 @@ class PageRank:
         memory; dataframe (nothing driver-resident, 1 shuffle/iter) beyond."""
         return "csr" if n <= cls.AUTO_CSR_MAX_VERTICES else "dataframe"
 
-    # vertex count above which the O(n) sides of the setup/iteration joins
-    # (degrees, src_ids, contribs) must not be broadcast: their COMPRESSED
-    # shuffle size can pass autoBroadcastJoinThreshold while the in-memory
-    # hash relation blows the driver (reproduced at n=2e7 on 8g driver) —
-    # force shuffle-hash joins instead. 2M rows ~ 32MB hash relation.
-    # Shared gate with CC/LP/triangles (util.BROADCAST_SAFE_ROWS); kept as a
-    # class attribute so tests can monkeypatch it.
-    BROADCASTABLE_N = _util.BROADCAST_SAFE_ROWS
-
     # ------------------------------------------------------- dataframe path
-    def _df_iteration(
-        self, ew, state, n: int, dmass: float, total: float, no_bcast,
-    ):
-        """One power-iteration step as a DataFrame plan.
-
-        Physical cost is a SINGLE shuffle exchange (the contribution
-        aggregation): the contribution join consumes the edge cache's
-        hash(src) and the state checkpoint's hash(id) partitionings, and the
-        rank-update left join consumes hash(id) × the aggregation output's
-        hash(dst) — EnsureRequirements inserts no exchange for either,
-        PROVIDED the state checkpoint was compiled under util.static_plan
-        (AQE-compiled checkpoints record UnknownPartitioning and regress
-        this plan to 3 exchanges). Audited by
-        tests/test_plans.py::test_pagerank_df_iteration_single_exchange."""
-        c = self.c
-        ranks_in = no_bcast(state.select("id", "rank"))
-        joined = ew.join(ranks_in, ew.src == F.col("id"))
-        if self.salt_partitions:
-            from pagerank_spark.graph.skew import salted_sum
-
-            contribs = salted_sum(
-                joined, "dst", F.col("rank") * F.col("w"),
-                self.salt_partitions, salt_source="src", out="contrib",
-            )
-        else:
-            contribs = joined.groupBy("dst").agg(
-                F.sum(F.col("rank") * F.col("w")).alias("contrib")
-            )
-        return (
-            state.join(no_bcast(contribs), state.id == contribs.dst, "left")
-            .select(
-                state.id,
-                (
-                    F.lit(c)
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dmass / n))
-                    + F.lit((1.0 - c) / n * total)
-                ).alias("rank"),
-                state.rank.alias("old_rank"),
-                "non_dangling",
-            )
-        )
-
     def _run_dataframe(
         self, edges: DataFrame, n: int, run_id: str, resume: bool
     ) -> PageRankResult:
+        """The K=1, uniform-teleport case of the one DataFrame loop
+        (linkanalysis._teleport_pagerank). A resumed checkpoint, else the
+        warm-start ranks, seeds the start ranks; every step is checkpointed
+        and logged through the loop's per-iteration hook."""
         spark = edges.sparkSession
-        eps = self.eps
-        shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-        def no_bcast(df: DataFrame) -> DataFrame:
-            return df if n <= self.BROADCASTABLE_N else df.hint("shuffle_hash")
-
-        # outdegree + edge weights, built once, partitioned by src so the
-        # per-iteration contribution join only shuffles the (small) rank side
-        degrees = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        ew = (
-            edges.join(no_bcast(degrees), "src")
-            .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
-            .repartition(shuffle_p, "src")
-            .persist()
-        )
-        m = ew.count()  # materialize; also the per-iteration shuffle volume
-
-        # state: (id, rank, dangling). dangling carried as a column so the
-        # per-iteration stats need no join (fused like getDelta_*.nasm).
-        src_ids = degrees.select(F.col("src").alias("id"))
-        # every state checkpoint is compiled under static_plan so the
-        # LogicalRDD keeps the hash(id) partitioning — the 1-shuffle/iter
-        # contract (see _df_iteration and the module docstring)
-        # NOTE: spark.range already emits `id: long` — a no-op cast here is
-        # NOT harmless: the optimizer collapses it and the checkpoint then
-        # records its partitioning against the pre-cast attribute, which no
-        # longer matches the LogicalRDD output → every downstream join would
-        # re-exchange the state (guarded by the plan test).
-        base = spark.range(0, n, 1, shuffle_p).join(
-            no_bcast(src_ids.withColumn("nd", F.lit(True))), "id", "left"
-        )
-        if self.initial_ranks is not None:
-            # warm start: previous ranks ride in via one more size-gated
-            # O(V) join; ids absent from the table (new pages) start at 1/n
-            ir = self._validated_initial_ranks(n)
-            base = base.join(no_bcast(ir), "id", "left")
-            rank_col = F.coalesce(F.col("r0"), F.lit(1.0 / n))
-        else:
-            rank_col = F.lit(1.0 / n)
-        with _util.static_plan(spark):
-            state = (
-                base.select(
-                    "id",
-                    rank_col.alias("rank"),
-                    F.coalesce(F.col("nd"), F.lit(False)).alias("non_dangling"),
-                )
-                .repartition(shuffle_p, "id")
-                .localCheckpoint(eager=True)
-            )
-        start_iter = 0
-        init = state.agg(
-            F.sum(F.when(~F.col("non_dangling"), F.col("rank"))).alias("dmass"),
-            F.sum("rank").alias("total"),
-        ).first()
-        dmass = float(init["dmass"] or 0.0)
-        total = float(init["total"])
-
+        start, start_iter = None, 0
         if resume and self.catalog is not None:
-            resumed = self._try_resume(spark, run_id, shuffle_p)
-            if resumed is not None:
-                state, start_iter, dmass, total = resumed
+            start, start_iter = self._try_resume(spark, run_id) or (None, 0)
+        if start is None and self.initial_ranks is not None:
+            start = self._validated_initial_ranks(n)
 
-        deltas: list[float] = []
-        iter_secs: list[float] = []
-        it = start_iter
-        for it in range(start_iter + 1, self.max_iter + 1):
-            t0 = time.time()
-            # statically planned checkpoint: materializes the new state as a
-            # LogicalRDD that KEEPS hash(id) — the next iteration's joins and
-            # this iteration's rank-update join plan no state re-exchange
-            with _util.static_plan(spark):
-                new_state = self._df_iteration(
-                    ew, state, n, dmass, total, no_bcast
-                ).localCheckpoint(eager=True)
-            # single fused scan over the checkpoint: residual + next
-            # dangling/total mass (getDelta analog)
-            stats = new_state.agg(
-                F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta"),
-                F.sum(F.when(~F.col("non_dangling"), F.col("rank"))).alias("dmass"),
-                F.sum("rank").alias("total"),
-            ).first()
-            delta = float(stats["delta"])
-            dmass = float(stats["dmass"] or 0.0)
-            total = float(stats["total"])
-            state = new_state.select("id", "rank", "non_dangling")
-            deltas.append(delta)
-            wall = time.time() - t0
-            iter_secs.append(wall)
-            self._checkpoint_and_log(
-                spark, run_id, it, state, delta, dmass, total, m, wall
-            )
-            if delta < eps:
-                break
+        def checkpoint_and_log(run, state, dmass, total) -> None:
+            it, delta = run.iterations, run.deltas[-1]
+            dmass, total = dmass[0], total[0]
+            state = state.select("id", F.col("r0").alias("rank"), "non_dangling")
+            snap = None
+            if self.catalog is not None and it % self.checkpoint_interval == 0:
+                meta = self.catalog.write(
+                    state,
+                    f"pagerank_ckpt_{run_id}",
+                    summary={
+                        "iteration": it,
+                        "delta": delta,
+                        "dmass": dmass,
+                        "total": total,
+                    },
+                )
+                snap = meta.snapshot_id
+            if self.lineage is not None:
+                self.lineage.log_iteration(
+                    run_id, it, rows_shuffled=run.m, residual_l1=delta,
+                    wall_time_s=run.iter_seconds[-1],
+                    snapshot=str(snap) if snap is not None else None,
+                    extra={
+                        "dangling_mass": dmass, "total_mass": total, "mode": "dataframe",
+                    },
+                    partition_counts=self.lineage.partition_counts(state)
+                    if self.lineage.per_partition
+                    else None,
+                )
 
-        ranks = self._normalize(state.select("id", "rank"))
-        ew.unpersist()
-        tput = m / (sum(iter_secs) / len(iter_secs)) if iter_secs else 0.0
-        return PageRankResult(ranks, it, deltas, run_id, tput, iter_secs)
+        run = _teleport_pagerank(
+            edges, n, [F.lit(1.0 / n)], self.c, self.max_iter, self.eps,
+            start=start, start_iter=start_iter,
+            salt_partitions=self.salt_partitions, on_iteration=checkpoint_and_log,
+        )
+        secs = run.iter_seconds
+        tput = run.m / (sum(secs) / len(secs)) if secs else 0.0
+        return PageRankResult(
+            run.ranks.select("id", F.col("r0").alias("rank")),
+            run.iterations, run.deltas, run_id, tput, secs,
+        )
 
     # -------------------------------------------------------------- csr path
     def _run_csr(
@@ -997,8 +895,10 @@ class PageRank:
             if self.catalog is not None and it % self.checkpoint_interval == 0:
                 snap = self._checkpoint_vector(run_id, it, pi)
             if self.lineage is not None:
+                # an iteration is one map-only stage over the block-aligned
+                # pack: it shuffles nothing
                 self.lineage.log_iteration(
-                    run_id, it, rows_shuffled=m, residual_l1=delta, wall_time_s=wall,
+                    run_id, it, rows_shuffled=0, residual_l1=delta, wall_time_s=wall,
                     snapshot=str(snap) if snap is not None else None,
                     extra={"dangling_mass": dmass, "mode": "csr"},
                 )
@@ -1017,39 +917,10 @@ class PageRank:
         return PageRankResult(ranks, it, deltas, run_id, tput, iter_secs)
 
     # ------------------------------------------------------------- helpers
-    def _normalize(self, ranks: DataFrame) -> DataFrame:
-        total = float(ranks.agg(F.sum(F.abs(F.col("rank")))).first()[0])
-        return ranks.select("id", (F.col("rank") / F.lit(total)).alias("rank"))
-
-    def _checkpoint_and_log(
-        self, spark, run_id, it, state, delta, dmass, total, m, wall
-    ) -> None:
-        snap = None
-        if self.catalog is not None and it % self.checkpoint_interval == 0:
-            meta = self.catalog.write(
-                state,
-                f"pagerank_ckpt_{run_id}",
-                summary={
-                    "iteration": it,
-                    "delta": delta,
-                    "dmass": dmass,
-                    "total": total,
-                },
-            )
-            snap = meta.snapshot_id
-        if self.lineage is not None:
-            self.lineage.log_iteration(
-                run_id, it, rows_shuffled=m, residual_l1=delta, wall_time_s=wall,
-                snapshot=str(snap) if snap is not None else None,
-                extra={
-                    "dangling_mass": dmass, "total_mass": total, "mode": "dataframe",
-                },
-                partition_counts=self.lineage.partition_counts(state)
-                if self.lineage.per_partition
-                else None,
-            )
-
-    def _try_resume(self, spark: SparkSession, run_id: str, shuffle_p: int):
+    def _try_resume(self, spark: SparkSession, run_id: str):
+        """(id, rank) start ranks and the iteration number of the run's
+        last dataframe checkpoint, or None when there is none. The loop
+        recomputes dmass/total from these ranks."""
         table = f"pagerank_ckpt_{run_id}"
         meta = self.catalog.current_meta(table)
         if meta is None:
@@ -1058,8 +929,8 @@ class PageRank:
         # dataframe state is (id, rank, non_dangling) + dmass/total in the
         # summary; csr checkpoints are the bare vector (id, rank) with only
         # {iteration}. Resuming the wrong format used to surface as
-        # KeyError('dmass') / missing-column errors deep inside
-        # _df_iteration (round-4 ADVICE) — fail loud instead.
+        # KeyError('dmass') / missing-column errors deep inside the
+        # iteration (round-4 ADVICE) — fail loud instead.
         if "dmass" not in s or "total" not in s:
             raise ValueError(
                 f"checkpoint '{table}' was written by a vector-mode run "
@@ -1068,7 +939,7 @@ class PageRank:
                 "table) to use dataframe mode."
             )
         # schema check on the read plan (driver-side metadata, no job)
-        # BEFORE the O(V) repartition + eager checkpoint below
+        # BEFORE the loop joins the table into its O(V) state checkpoint
         df = self.catalog.read(spark, table)
         if "non_dangling" not in df.columns:
             raise ValueError(
@@ -1076,11 +947,7 @@ class PageRank:
                 "expected by dataframe state — it was written by a "
                 "vector-mode run; resume with mode='csr' or restart."
             )
-        # statically planned checkpoint keeps the hash(id) partitioning so
-        # the resumed iteration chain stays 1-shuffle (see _df_iteration)
-        with _util.static_plan(spark):
-            df = df.repartition(shuffle_p, "id").localCheckpoint(eager=True)
-        return df, int(s["iteration"]), float(s["dmass"]), float(s["total"])
+        return df.select("id", "rank"), int(s["iteration"])
 
     def _checkpoint_vector(self, run_id: str, it: int, pi: np.ndarray) -> int:
         """Commit the driver's rank vector (pyarrow writer, no Spark job);

@@ -10,9 +10,10 @@ salted two-stage aggregate bounds any reduce task's share of a hot key to
   stage 1: groupBy(dst, salt = pmod(hash(src), n_salts)) -> partial sums
   stage 2: groupBy(dst) -> final sum
 
-`top_hubs` identifies keys worth salting (degree threshold); `salted_sum`
-applies the pattern generically. PageRank uses it via
-PageRank(salt_partitions=n) ... the contrib aggregation swaps in salted_sum.
+`salted_sum` applies the pattern to one or several value columns at once.
+PageRank(mode="dataframe", salt_partitions=n) swaps it in for the K-sum
+contribution aggregation of the teleport iteration
+(linkanalysis._teleport_iteration).
 """
 
 from __future__ import annotations
@@ -21,35 +22,32 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def top_hubs(edges: DataFrame, min_indeg: int = 100_000) -> DataFrame:
-    """(id, indeg) for vertices whose in-degree exceeds the threshold."""
-    return (
-        edges.groupBy(F.col("dst").alias("id"))
-        .agg(F.count(F.lit(1)).alias("indeg"))
-        .filter(F.col("indeg") >= min_indeg)
-    )
-
-
 def salted_sum(
     df: DataFrame,
     key: str,
-    value: Column,
+    value: Column | list[Column],
     n_salts: int,
     salt_source: str,
-    out: str = "sum",
+    out: str | list[str] = "sum",
 ) -> DataFrame:
     """Two-stage sum of `value` grouped by `key`, salted by hash(salt_source).
 
-    Equivalent to df.groupBy(key).agg(sum(value)) for any n_salts >= 1
-    (tested); use n_salts ~ shuffle partitions for hot keys.
+    Equivalent to df.groupBy(key).agg(sum(value).alias(out)) for any
+    n_salts >= 1 (tested); use n_salts ~ shuffle partitions for hot keys.
+    A list of values (with a list of output names) sums them all in the
+    same two aggregations.
     """
+    values = value if isinstance(value, list) else [value]
+    outs = out if isinstance(out, list) else [out]
     salt = F.pmod(F.xxhash64(F.col(salt_source)), F.lit(n_salts)).alias("_salt")
     partial = (
-        df.select(F.col(key), value.alias("_v"), salt)
+        df.select(F.col(key), *[v.alias(f"_v{i}") for i, v in enumerate(values)], salt)
         .groupBy(key, "_salt")
-        .agg(F.sum("_v").alias("_partial"))
+        .agg(*[F.sum(f"_v{i}").alias(f"_p{i}") for i in range(len(values))])
     )
-    return partial.groupBy(key).agg(F.sum("_partial").alias(out))
+    return partial.groupBy(key).agg(
+        *[F.sum(f"_p{i}").alias(o) for i, o in enumerate(outs)]
+    )
 
 
 def partition_skew_report(

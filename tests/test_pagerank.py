@@ -309,14 +309,16 @@ def test_csr_contrib_chunked_merge(spark, storage, dtype):
 
 
 def test_dataframe_mode_hints_on_large_n(spark, monkeypatch):
-    """Above BROADCASTABLE_N the O(n) join sides (degrees, src_ids, contribs)
-    must be shuffle_hash-hinted inside _run_dataframe itself (reproduced
-    driver OOM at n=2e7 without them). Spied on the real code path by
-    lowering the threshold and recording DataFrame.hint calls."""
+    """Above util.BROADCAST_SAFE_ROWS the O(n) join sides (out-degrees,
+    non-dangling ids, ranks, contribs) must be shuffle_hash-hinted on the
+    dataframe-mode path itself (reproduced driver OOM at n=2e7 without
+    them). Spied on the real code path by lowering the threshold and
+    recording DataFrame.hint calls."""
     # Spark 4: runtime DataFrames are the classic subclass, which
     # overrides hint() — patch there, not on the abstract base
     from pyspark.sql.classic.dataframe import DataFrame as SparkDF
 
+    from pagerank_spark import util
     from pagerank_spark.sources.synthetic import synthetic_edges
 
     calls = []
@@ -327,7 +329,7 @@ def test_dataframe_mode_hints_on_large_n(spark, monkeypatch):
         return orig_hint(self, name, *params)
 
     monkeypatch.setattr(SparkDF, "hint", spy)
-    monkeypatch.setattr(PageRank, "BROADCASTABLE_N", 10)
+    monkeypatch.setattr(util, "BROADCAST_SAFE_ROWS", 10)
     n = 200
     edges = synthetic_edges(spark, n, 2000, seed=1, num_partitions=2)
     PageRank(mode="dataframe", max_iter=2, eps=0.0).run(edges, n)
@@ -337,7 +339,7 @@ def test_dataframe_mode_hints_on_large_n(spark, monkeypatch):
     # below the threshold the hints must NOT fire (small-graph plans keep
     # their broadcast joins)
     calls.clear()
-    monkeypatch.setattr(PageRank, "BROADCASTABLE_N", 10_000)
+    monkeypatch.setattr(util, "BROADCAST_SAFE_ROWS", 10_000)
     PageRank(mode="dataframe", max_iter=1, eps=0.0).run(edges, n)
     assert calls.count("shuffle_hash") == 0
 

@@ -50,21 +50,23 @@ def test_small_dim_join_broadcasts(spark):
 
 
 def test_pagerank_dataframe_no_broadcast_above_gate(spark, monkeypatch):
-    """Above BROADCASTABLE_N the dataframe-mode contrib join must not plan a
-    broadcast of the O(n) side (the driver-OOM class): the iteration plan
-    contains ShuffledHashJoin and no BroadcastHashJoin."""
-    from pagerank_spark.algorithms.pagerank import PageRank
+    """Above util.BROADCAST_SAFE_ROWS the dataframe-mode PageRank step (the
+    K=1, uniform-teleport case of _teleport_iteration) must not plan a
+    broadcast of an O(n) side (the driver-OOM class): the step's joins are
+    ShuffledHashJoin and there is no BroadcastHashJoin."""
+    from pagerank_spark import util
+    from pagerank_spark.algorithms.linkanalysis import _teleport_iteration
     from pagerank_spark.sources.synthetic import synthetic_edges
 
-    monkeypatch.setattr(PageRank, "BROADCASTABLE_N", 10)
+    monkeypatch.setattr(util, "BROADCAST_SAFE_ROWS", 10)
     n = 200
     edges = synthetic_edges(spark, n, 2000, seed=1, num_partitions=2)
-    # reproduce the setup join the iteration reuses: degrees ⋈ edges
-    degrees = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ew = edges.join(degrees.hint("shuffle_hash"), "src")
-    plan = _plan(ew)
-    assert "ShuffledHashJoin" in plan
-    assert "BroadcastHashJoin" not in plan
+    no_bcast = util.no_bcast_fn(n)
+    ew, state = _teleport_step_inputs(spark, edges, n, 1, no_bcast)
+    step = _teleport_iteration(ew, state, 1, 0.85, [0.0], [1.0], no_bcast)
+    assert "ShuffledHashJoin" in _node_names(step)  # the step's own joins
+    assert "BroadcastHashJoin" not in _plan(step)  # edge cache included
+    ew.unpersist()
 
 
 def test_textstats_stay_jvm_side(spark):
@@ -106,114 +108,36 @@ def test_signature_pass_parallel_on_single_file(spark):
     assert sig.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
-def _exchanges(df) -> tuple[int, int]:
-    """(shuffle, broadcast) Exchange counts in the physical plan, NOT
-    descending into cached subtrees (InMemoryTableScan is a leaf); unwraps
-    the AQE wrapper to its initial plan — ENSURE_REQUIREMENTS exchange
-    placement is decided there and AQE does not add shuffles."""
+def _node_names(df) -> list[str]:
+    """Physical plan node names, NOT descending into cached subtrees
+    (InMemoryTableScan is a leaf); unwraps the AQE wrapper to its initial
+    plan — ENSURE_REQUIREMENTS exchange placement and the join strategies
+    are decided there and AQE does not add shuffles."""
 
     def walk(jp, acc):
-        name = jp.nodeName()
-        if name == "AdaptiveSparkPlan":
+        if jp.nodeName() == "AdaptiveSparkPlan":
             for m in ("initialPlan", "inputPlan"):
                 try:
                     jp = getattr(jp, m)()
                     break
                 except Exception:
                     continue
-            name = jp.nodeName()
-        if "Exchange" in name:
-            acc[1 if "Broadcast" in name else 0] += 1
+        acc.append(jp.nodeName())
         ch = jp.children()
         for i in range(ch.size()):
             walk(ch.apply(i), acc)
 
-    acc = [0, 0]
+    acc: list[str] = []
     walk(df._jdf.queryExecution().executedPlan(), acc)
-    return acc[0], acc[1]
+    return acc
 
 
-def test_pagerank_df_iteration_single_exchange(spark, monkeypatch):
-    """Dataframe-mode PageRank iteration: exactly ONE shuffle exchange (the
-    contribution aggregation). The contribution join must reuse the edge
-    cache's hash(src) and the state checkpoint's hash(id); the rank-update
-    left join must reuse hash(id) x the aggregation's hash(dst). This is
-    the 1-shuffle/iter contract _run_dataframe keeps by compiling every
-    state checkpoint under util.static_plan (an AQE-compiled localCheckpoint
-    records UnknownPartitioning and regresses the same plan to 3
-    exchanges/iter — asserted below as the counterexample)."""
-    from pagerank_spark.algorithms.pagerank import PageRank
-    from pagerank_spark.sources.synthetic import synthetic_edges
-    from pagerank_spark.util import static_plan
-
-    monkeypatch.setattr(PageRank, "BROADCASTABLE_N", 10)  # at-scale hints on
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = 300
-    edges = synthetic_edges(spark, n, 3000, seed=7, num_partitions=4)
-    degrees = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ew = (
-        edges.join(degrees.hint("shuffle_hash"), "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
-        .repartition(p, "src")
-        .persist()
-    )
-    ew.count()
-    state0 = (
-        spark.range(0, n, 1, p)
-        .select(
-            "id",
-            F.lit(1.0 / n).alias("rank"),
-            F.lit(True).alias("non_dangling"),
-        )
-        .repartition(p, "id")
-    )
-    with static_plan(spark):
-        state = state0.localCheckpoint(eager=True)
-
-    pr = PageRank()
-
-    def no_bcast(df):
-        return df.hint("shuffle_hash")
-
-    sh, _bc = _exchanges(pr._df_iteration(ew, state, n, 0.0, 1.0, no_bcast))
-    assert sh == 1, f"iteration planned {sh} shuffle exchanges, want 1"
-
-    # chain property: the next iteration off the checkpointed result (what
-    # the run loop does) is single-exchange again. NOTE: checkpoint a FRESH
-    # plan object — a Dataset caches its QueryExecution on first access, so
-    # checkpointing the frame audited above would capture its AQE-compiled
-    # plan (UnknownPartitioning) instead of the static one (the
-    # static_plan docstring pitfall; exactly what the run loop avoids by
-    # checkpointing before any explain).
-    with static_plan(spark):
-        nxt = pr._df_iteration(ew, state, n, 0.0, 1.0, no_bcast).localCheckpoint(
-            eager=True
-        )
-    step2 = pr._df_iteration(
-        ew, nxt.select("id", "rank", "non_dangling"), n, 0.0, 1.0, no_bcast
-    )
-    sh2, _bc2 = _exchanges(step2)
-    assert sh2 == 1, f"chained iteration planned {sh2} shuffle exchanges, want 1"
-
-    # counterexample guard: an AQE-compiled checkpoint loses the partitioning
-    # and the same iteration pays 3 shuffles — if this starts passing with
-    # sh3 == 1, Spark fixed the AQE metadata and static_plan can be retired.
-    # (fresh plan object: state0's own QueryExecution is already the static
-    # one from above — the same caching pitfall in the other direction)
-    bad0 = (
-        spark.range(0, n, 1, p)
-        .select(
-            "id",
-            F.lit(1.0 / n).alias("rank"),
-            F.lit(True).alias("non_dangling"),
-        )
-        .repartition(p, "id")
-    )
-    bad_state = bad0.localCheckpoint(eager=True)  # AQE on (session default)
-    step3 = pr._df_iteration(ew, bad_state, n, 0.0, 1.0, no_bcast)
-    sh3, _bc3 = _exchanges(step3)
-    assert sh3 == 3, f"AQE checkpoint counterexample planned {sh3}, expected 3"
-    ew.unpersist()
+def _exchanges(df) -> tuple[int, int]:
+    """(shuffle, broadcast) Exchange counts in the physical plan (see
+    _node_names)."""
+    ex = [name for name in _node_names(df) if "Exchange" in name]
+    bc = sum("Broadcast" in name for name in ex)
+    return len(ex) - bc, bc
 
 
 def test_labelprop_big_round_single_exchange(spark):
@@ -455,30 +379,10 @@ def test_paragraph_dedup_election_is_aggregate_not_window(spark):
     assert sh <= 3, f"paragraph dedup planned {sh} shuffles, want <= 3"
 
 
-@pytest.mark.parametrize("K", [1, 4])
-def test_ppr_batch_iteration_single_exchange(spark, K):
-    """The teleport iteration behind every personalized/weighted/batched
-    PageRank keeps the uniform path's 1-shuffle/iter contract for any K:
-    the contribution join consumes ew's hash(src) x the state checkpoint's
-    hash(id), the aggregation (K sums at once) is the only exchange, and
-    the rank-update left join consumes hash(id) x hash(dst) — K topic
-    vectors ride one edge join and one aggregation instead of K loops."""
-    from pagerank_spark.algorithms.linkanalysis import _teleport_iteration
-    from pagerank_spark.sources.synthetic import synthetic_edges
-    from pagerank_spark.util import static_plan
-
+def _teleport_state(spark, n: int, K: int):
+    """A fresh, unexecuted (id, non_dangling, t0.., r0..) state plan."""
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = 300
-    edges = synthetic_edges(spark, n, 3000, seed=7, num_partitions=4)
-    degrees = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ew = (
-        edges.join(degrees.hint("shuffle_hash"), "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
-        .repartition(p, "src")
-        .persist()
-    )
-    ew.count()
-    state0 = (
+    return (
         spark.range(0, n, 1, p)
         .select(
             "id",
@@ -488,18 +392,63 @@ def test_ppr_batch_iteration_single_exchange(spark, K):
         )
         .repartition(p, "id")
     )
+
+
+def _teleport_step_inputs(spark, edges, n: int, K: int, no_bcast):
+    """The cached, src-partitioned (src, dst, w) edge table and a state
+    checkpoint compiled under static_plan, as _teleport_pagerank builds
+    them."""
+    from pagerank_spark.util import static_plan
+
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    out = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out"))
+    ew = (
+        edges.join(no_bcast(out), "src")
+        .select("src", "dst", (F.lit(1.0) / F.col("out")).alias("w"))
+        .repartition(p, "src")
+        .persist()
+    )
+    ew.count()
     with static_plan(spark):
-        state = state0.localCheckpoint(eager=True)
+        state = _teleport_state(spark, n, K).localCheckpoint(eager=True)
+    return ew, state
+
+
+@pytest.mark.parametrize("K", [1, 4])
+def test_ppr_batch_iteration_single_exchange(spark, K):
+    """The teleport iteration behind dataframe-mode PageRank (K=1) and every
+    personalized/weighted/batched PageRank: exactly ONE shuffle exchange
+    for any K. The contribution join consumes ew's hash(src) x the state
+    checkpoint's hash(id), the aggregation (K sums at once) is the only
+    exchange, and the rank-update left join consumes hash(id) x hash(dst) —
+    K topic vectors ride one edge join and one aggregation instead of K
+    loops. This holds because the run loop compiles every state checkpoint
+    under util.static_plan; an AQE-compiled localCheckpoint records
+    UnknownPartitioning and regresses the same step to 3 exchanges
+    (asserted below as the counterexample)."""
+    from pagerank_spark.algorithms.linkanalysis import _teleport_iteration
+    from pagerank_spark.sources.synthetic import synthetic_edges
+    from pagerank_spark.util import static_plan
 
     def no_bcast(df):
         return df.hint("shuffle_hash")
+
+    n = 300
+    edges = synthetic_edges(spark, n, 3000, seed=7, num_partitions=4)
+    ew, state = _teleport_step_inputs(spark, edges, n, K, no_bcast)
 
     zeros = [0.0] * K
     ones = [1.0] * K
     sh, _bc = _exchanges(_teleport_iteration(ew, state, K, 0.85, zeros, ones, no_bcast))
     assert sh == 1, f"K={K} ppr iteration planned {sh} shuffle exchanges, want 1"
 
-    # chained off the checkpointed result, as the run loop does
+    # chain property: the next iteration off the checkpointed result (what
+    # the run loop does) is single-exchange again. NOTE: checkpoint a FRESH
+    # plan object — a Dataset caches its QueryExecution on first access, so
+    # checkpointing the frame audited above would capture its AQE-compiled
+    # plan (UnknownPartitioning) instead of the static one (the
+    # static_plan docstring pitfall; exactly what the run loop avoids by
+    # checkpointing before any explain).
     with static_plan(spark):
         nxt = _teleport_iteration(
             ew, state, K, 0.85, zeros, ones, no_bcast
@@ -507,6 +456,15 @@ def test_ppr_batch_iteration_single_exchange(spark, K):
     nxt = nxt.drop(*[f"o{k}" for k in range(K)])
     sh2, _bc2 = _exchanges(_teleport_iteration(ew, nxt, K, 0.85, zeros, ones, no_bcast))
     assert sh2 == 1, f"K={K} chained ppr iteration planned {sh2} exchanges, want 1"
+
+    # counterexample guard: an AQE-compiled checkpoint loses the partitioning
+    # and the same iteration pays 3 shuffles — if this starts passing with
+    # sh3 == 1, Spark fixed the AQE metadata and static_plan can be retired
+    bad_state = _teleport_state(spark, n, K).localCheckpoint(eager=True)
+    sh3, _bc3 = _exchanges(
+        _teleport_iteration(ew, bad_state, K, 0.85, zeros, ones, no_bcast)
+    )
+    assert sh3 == 3, f"AQE checkpoint counterexample planned {sh3}, expected 3"
     ew.unpersist()
 
 

@@ -140,7 +140,7 @@ def test_resume_rejects_vector_checkpoint_with_clear_error(spark, cat, golden):
     """A checkpoint written by a vector-mode run (csr: bare (id, rank),
     summary={iteration}) must make a dataframe-mode resume fail
     LOUD with a mode-mismatch message — not a KeyError('dmass') deep inside
-    _df_iteration (round-4 ADVICE)."""
+    the iteration (round-4 ADVICE)."""
     arr, n, _ = golden
     edges = edges_from_numpy(spark, arr)
     PageRank(max_iter=2, mode="csr", catalog=cat).run(edges, n, run_id="mix")
@@ -153,7 +153,7 @@ def test_resume_rejects_vector_checkpoint_with_clear_error(spark, cat, golden):
 def test_resume_checks_columns_before_checkpoint(spark, cat, monkeypatch):
     """A checkpoint whose summary carries dmass/total but whose table lacks
     the non_dangling column must be rejected from the read plan's schema,
-    before the O(V) repartition + eager localCheckpoint runs."""
+    before any O(V) state checkpoint runs."""
     from pyspark.sql.classic.dataframe import DataFrame as SparkDF
 
     state = spark.createDataFrame([(0, 0.5), (1, 0.5)], "id long, rank double")
@@ -168,7 +168,7 @@ def test_resume_checks_columns_before_checkpoint(spark, cat, monkeypatch):
     monkeypatch.setattr(SparkDF, "localCheckpoint", boom)
     pr = PageRank(mode="dataframe", catalog=cat)
     with pytest.raises(ValueError, match="non_dangling"):
-        pr._try_resume(spark, "nocol", 2)
+        pr._try_resume(spark, "nocol")
 
 
 def test_resume_vector_uses_arrow_not_collect(spark, cat, golden):
@@ -243,7 +243,8 @@ def csr_runs(spark, golden, tmp_path_factory):
 
 def test_csr_lineage_rows_carry_checkpoint_snapshot(csr_runs):
     """Each csr lineage row names the snapshot its iteration's checkpoint
-    committed, so the row ties to a resumable state."""
+    committed, so the row ties to a resumable state, and reports no shuffled
+    rows."""
     cat, lin, _ = csr_runs
     rows = sorted(lin.read("csrlin").collect(), key=lambda r: r["iteration"])
     assert [r["iteration"] for r in rows] == list(range(1, 8))
@@ -252,6 +253,8 @@ def test_csr_lineage_rows_carry_checkpoint_snapshot(csr_runs):
     for r in rows:
         meta = cat.snapshot_meta("pagerank_ckpt_csrlin", int(r["snapshot"]))
         assert meta.summary["iteration"] == r["iteration"]
+    # a csr iteration is one map-only stage over the block-aligned pack
+    assert all(r["rows_shuffled"] == 0 for r in rows if r["partition_id"] == -1)
 
 
 def test_csr_commits_launch_no_spark_job(csr_runs):
@@ -262,6 +265,45 @@ def test_csr_commits_launch_no_spark_job(csr_runs):
     assert len(cat.snapshots("pagerank_ckpt_csrlin")) == 7
     assert jobs["ckpt"] > 0
     assert jobs["ckpt"] == jobs["bare"], jobs
+
+
+def test_csr_iterations_write_no_shuffle_bytes(spark):
+    """The status store confirms the csr lineage's rows_shuffled=0: a csr
+    run of 3 iterations writes exactly the shuffle bytes of a 1-iteration
+    run (the pack's one-time shuffles), so its iterations shuffle nothing."""
+    from py4j.protocol import Py4JJavaError
+
+    from tests.conftest import micro_graphs
+
+    arr, n = micro_graphs()["test1_mirror"]
+    edges = edges_from_numpy(spark, arr)
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    written = {}
+    for iters in (1, 3):
+        group = f"csr-shuffle-{iters}"
+        sc.setJobGroup(group, group)
+        try:
+            res = PageRank(mode="csr", max_iter=iters, eps=0.0).run(edges, n)
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        assert res.iterations == iters
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        stages = {
+            int(s)
+            for j in sc.statusTracker().getJobIdsForGroup(group)
+            for s in sc.statusTracker().getJobInfo(j).stageIds
+        }
+        written[iters] = 0
+        for sid in stages:
+            try:
+                sd = store.lastStageAttempt(sid)
+            except Py4JJavaError:  # skipped: its shuffle was written before
+                continue
+            written[iters] += int(sd.shuffleWriteBytes())
+    assert written[1] > 0  # the pack's block-aligning shuffle is counted
+    assert written[3] == written[1], written
 
 
 def test_expire_snapshots_keeps_referenced_data(spark, tmp_path):
