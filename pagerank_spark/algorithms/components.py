@@ -25,7 +25,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.lineage import LineageWriter
+from pagerank_spark.lineage import LineageWriter, commit_iteration, last_checkpoint
 
 
 def _dedup(e: DataFrame) -> DataFrame:
@@ -103,13 +103,13 @@ def connected_components(
     -> (id, component), component = min vertex id of the component. Exact."""
     run_id = run_id or uuid.uuid4().hex[:12]
     spark = edges.sparkSession
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    e = _dedup(e).localCheckpoint(eager=True)
-    start_iter = 0
-    if resume and catalog is not None and catalog.exists(f"cc_ckpt_{run_id}"):
-        meta = catalog.current_meta(f"cc_ckpt_{run_id}")
-        e = catalog.read(spark, f"cc_ckpt_{run_id}").localCheckpoint(eager=True)
-        start_iter = int(meta.summary.get("iteration", 0))
+    table = f"cc_ckpt_{run_id}"
+    last = last_checkpoint(spark, catalog, table) if resume and catalog is not None else None
+    if last is not None:
+        e, start_iter = last[0].localCheckpoint(eager=True), last[1]
+    else:
+        e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        e, start_iter = _dedup(e).localCheckpoint(eager=True), 0
     # no pre-loop checksum scan: the loop compares consecutive iterates, and
     # round 1's output is in star form while the input is not — prev=None
     # just means the first comparison can't fire (it couldn't have anyway)
@@ -125,13 +125,11 @@ def connected_components(
         cur = _checksum(e_next)
         e.unpersist()
         e = e_next
-        if lineage is not None:
-            lineage.log_iteration(
-                run_id, it, rows_shuffled=cur[0], residual_l1=float(cur != prev),
-                wall_time_s=time.time() - t0, extra={"algo": "cc"},
-            )
-        if catalog is not None:
-            catalog.write(e, f"cc_ckpt_{run_id}", summary={"iteration": it})
+        commit_iteration(
+            catalog, lineage, table, e, run_id, it, rows_shuffled=cur[0],
+            residual_l1=float(cur != prev), wall_time_s=time.time() - t0,
+            extra={"algo": "cc"},
+        )
         if cur == prev:
             break
         prev = cur

@@ -49,6 +49,13 @@ Two physical strategies:
 
 ``mode="auto"`` picks csr up to ``AUTO_CSR_MAX_VERTICES`` and dataframe
 beyond.
+
+π is the whole state of the iteration (dangling mass and total are
+recomputed from it), so both modes start from one ``(id, rank)`` frame and,
+with a catalog, commit one checkpoint format after every iteration:
+``pagerank_ckpt_<run_id>`` as ``(id long, rank double)`` with summary
+``{iteration}`` (``lineage.commit_iteration``). ``resume=True`` continues
+from either mode's checkpoint in either mode.
 """
 
 from __future__ import annotations
@@ -60,7 +67,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -70,7 +77,7 @@ from pyspark.sql.types import (
 )
 
 from pagerank_spark.algorithms.linkanalysis import _teleport_pagerank
-from pagerank_spark.lineage import LineageWriter
+from pagerank_spark.lineage import LineageWriter, commit_iteration, last_checkpoint
 
 
 # bump when the packed block-file layout changes: reuse_pack refuses to
@@ -268,7 +275,6 @@ class PageRank:
         eps: float = 1e-5,
         max_iter: int = 200,
         mode: str = "dataframe",
-        checkpoint_interval: int = 1,
         catalog=None,
         lineage: LineageWriter | None = None,
         num_blocks: int | None = None,
@@ -292,7 +298,6 @@ class PageRank:
         self.eps = eps
         self.max_iter = max_iter
         self.mode = mode
-        self.checkpoint_interval = checkpoint_interval
         self.catalog = catalog
         self.lineage = lineage
         self.num_blocks = num_blocks
@@ -332,9 +337,8 @@ class PageRank:
         # IDENTICAL to a cold start — warm starting only changes how many
         # iterations convergence takes (1 when the graph didn't change).
         # catalog resume, when it fires, takes precedence (it is a later
-        # snapshot of the same run). In the vector modes the table is
-        # pulled to the driver via Arrow — the same O(n) footprint as the
-        # rank vector those modes already hold.
+        # snapshot of the same run). Validated before any pack or edge-cache
+        # job (_start_ranks).
         self.initial_ranks = initial_ranks
         # rank_dtype="float32" (csr modes only): the per-iteration rank
         # broadcast, the SpMV gather source, AND the contribution partials
@@ -358,28 +362,19 @@ class PageRank:
             raise ValueError(f"rank_dtype must be float32|float64, got {rank_dtype!r}")
         self.rank_dtype = np.float32 if rank_dtype == "float32" else np.float64
 
-    def _init_vector(self, n: int) -> np.ndarray:
-        """Initial rank vector for the driver-vector modes: uniform, or
-        initial_ranks scattered over uniform (missing ids stay 1/n)."""
-        pi = np.full(n, 1.0 / n)
-        if self.initial_ranks is not None:
-            t = self.initial_ranks.select(
-                F.col("id").cast("long").alias("id"),
-                F.col("rank").cast("double").alias("rank"),
-            ).toArrow()
-            ids = t.column("id").to_numpy()
-            if len(ids) and (ids.min() < 0 or ids.max() >= n):
-                raise ValueError("initial_ranks ids outside [0, n)")
-            if len(ids) != len(np.unique(ids)):
-                raise ValueError("initial_ranks contains duplicate ids")
-            pi[ids] = t.column("rank").to_numpy()
-        return pi
-
-    def _validated_initial_ranks(self, n: int) -> DataFrame:
-        """initial_ranks with the same hard errors the vector modes raise
-        (out-of-range or duplicate ids) — a duplicate would silently emit
-        two state rows through the warm-start left join and double-count
-        that vertex's mass."""
+    def _start_ranks(self, spark, n: int, run_id: str, resume: bool):
+        """(id, rank) start ranks and the number of the iteration they come
+        from, for both modes: the run's last checkpoint when resuming (in
+        either mode, from either mode's checkpoint), else initial_ranks,
+        else (None, 0) for the uniform 1/n start. initial_ranks fails on
+        out-of-range or duplicate ids (a duplicate would double-count that
+        vertex's mass) before any pack or edge-cache job runs."""
+        if resume and self.catalog is not None:
+            last = last_checkpoint(spark, self.catalog, f"pagerank_ckpt_{run_id}")
+            if last is not None:
+                return last[0].select("id", "rank"), last[1]
+        if self.initial_ranks is None:
+            return None, 0
         ir = self.initial_ranks.select(
             F.col("id").cast("long").alias("id"),
             F.col("rank").cast("double").alias("rank"),
@@ -395,7 +390,7 @@ class PageRank:
                 raise ValueError("initial_ranks ids outside [0, n)")
             if st["k"] != st["kd"]:
                 raise ValueError("initial_ranks contains duplicate ids")
-        return ir
+        return ir, 0
 
     # ------------------------------------------------------------------ API
     def run(
@@ -410,9 +405,10 @@ class PageRank:
         mode = self.mode
         if mode == "auto":
             mode = self.dispatch_mode(n)
+        start = self._start_ranks(edges.sparkSession, n, run_id, resume)
         if mode == "csr":
-            return self._run_csr(edges, n, run_id, resume)
-        return self._run_dataframe(edges, n, run_id, resume)
+            return self._run_csr(edges, n, run_id, *start)
+        return self._run_dataframe(edges, n, run_id, *start)
 
     # vertices above which the driver-resident rank vector (8 B/vertex, plus
     # the same again broadcast per iteration) stops being sensible; beyond it
@@ -429,53 +425,27 @@ class PageRank:
 
     # ------------------------------------------------------- dataframe path
     def _run_dataframe(
-        self, edges: DataFrame, n: int, run_id: str, resume: bool
+        self, edges: DataFrame, n: int, run_id: str, start, start_iter: int
     ) -> PageRankResult:
         """The K=1, uniform-teleport case of the one DataFrame loop
-        (linkanalysis._teleport_pagerank). A resumed checkpoint, else the
-        warm-start ranks, seeds the start ranks; every step is checkpointed
-        and logged through the loop's per-iteration hook."""
-        spark = edges.sparkSession
-        start, start_iter = None, 0
-        if resume and self.catalog is not None:
-            start, start_iter = self._try_resume(spark, run_id) or (None, 0)
-        if start is None and self.initial_ranks is not None:
-            start = self._validated_initial_ranks(n)
+        (linkanalysis._teleport_pagerank), started from ``start`` and
+        committed every iteration through the loop's per-iteration hook."""
+        lin = self.lineage
 
-        def checkpoint_and_log(run, state, dmass, total) -> None:
-            it, delta = run.iterations, run.deltas[-1]
-            dmass, total = dmass[0], total[0]
-            state = state.select("id", F.col("r0").alias("rank"), "non_dangling")
-            snap = None
-            if self.catalog is not None and it % self.checkpoint_interval == 0:
-                meta = self.catalog.write(
-                    state,
-                    f"pagerank_ckpt_{run_id}",
-                    summary={
-                        "iteration": it,
-                        "delta": delta,
-                        "dmass": dmass,
-                        "total": total,
-                    },
-                )
-                snap = meta.snapshot_id
-            if self.lineage is not None:
-                self.lineage.log_iteration(
-                    run_id, it, rows_shuffled=run.m, residual_l1=delta,
-                    wall_time_s=run.iter_seconds[-1],
-                    snapshot=str(snap) if snap is not None else None,
-                    extra={
-                        "dangling_mass": dmass, "total_mass": total, "mode": "dataframe",
-                    },
-                    partition_counts=self.lineage.partition_counts(state)
-                    if self.lineage.per_partition
-                    else None,
-                )
+        def commit(run, state, dmass, total) -> None:
+            state = state.select("id", F.col("r0").alias("rank"))
+            commit_iteration(
+                self.catalog, lin, f"pagerank_ckpt_{run_id}", state, run_id,
+                run.iterations, rows_shuffled=run.m, residual_l1=run.deltas[-1],
+                wall_time_s=run.iter_seconds[-1],
+                extra={"dangling_mass": dmass[0], "total_mass": total[0], "mode": "dataframe"},
+                partition_counts=lin.partition_counts(state) if lin and lin.per_partition else None,
+            )
 
         run = _teleport_pagerank(
             edges, n, [F.lit(1.0 / n)], self.c, self.max_iter, self.eps,
             start=start, start_iter=start_iter,
-            salt_partitions=self.salt_partitions, on_iteration=checkpoint_and_log,
+            salt_partitions=self.salt_partitions, on_iteration=commit,
         )
         secs = run.iter_seconds
         tput = run.m / (sum(secs) / len(secs)) if secs else 0.0
@@ -486,7 +456,7 @@ class PageRank:
 
     # -------------------------------------------------------------- csr path
     def _run_csr(
-        self, edges: DataFrame, n: int, run_id: str, resume: bool
+        self, edges: DataFrame, n: int, run_id: str, start, start_iter: int
     ) -> PageRankResult:
         spark = edges.sparkSession
         sc = spark.sparkContext
@@ -508,17 +478,8 @@ class PageRank:
                 with open(man_path) as fh:
                     manifest = _json.load(fh)
                 if manifest.get("version") != PACK_FORMAT_VERSION:
-                    # stale layout: remove the old pack's artifacts before
-                    # falling through to re-pack, so a persistent scratch dir
-                    # (e.g. the bench cache) doesn't accumulate orphaned GBs
-                    import glob as _glob
-
-                    for pth in _glob.glob(_os.path.join(scratch, "b*.bin")):
-                        _os.remove(pth)
-                    for name in ("hub_ids.npy", "outdeg.npy", "manifest.json"):
-                        p_ = _os.path.join(scratch, name)
-                        if _os.path.exists(p_):
-                            _os.remove(p_)
+                    # stale layout: re-pack (the sweep below removes the old
+                    # block files, the pack rewrites the rest)
                     manifest = None
                 elif int(manifest["n"]) != n:
                     raise ValueError(
@@ -587,8 +548,8 @@ class PageRank:
                 eager=True
             )
             return self._iterate_csr(
-                spark, sc, run_id, resume, n, m, nblocks, block_size, n_hubs,
-                hub_ids, outdeg, idx_t, packed, scratch, keep_scratch=True,
+                spark, sc, run_id, start, start_iter, n, m, nblocks, block_size,
+                n_hubs, hub_ids, outdeg, idx_t, packed, scratch, keep_scratch=True,
             )
 
         nblocks = self.num_blocks or int(
@@ -762,25 +723,26 @@ class PageRank:
             _os.replace(tmp, man_path)
 
         return self._iterate_csr(
-            spark, sc, run_id, resume, n, m, nblocks, block_size, n_hubs,
-            hub_ids, outdeg, idx_t, packed, scratch,
+            spark, sc, run_id, start, start_iter, n, m, nblocks, block_size,
+            n_hubs, hub_ids, outdeg, idx_t, packed, scratch,
             keep_scratch=self.scratch_dir is not None,
         )
 
     def _iterate_csr(
-        self, spark, sc, run_id, resume, n, m, nblocks, block_size, n_hubs,
-        hub_ids, outdeg, idx_t, packed, scratch, keep_scratch,
+        self, spark, sc, run_id, start, start_iter, n, m, nblocks, block_size,
+        n_hubs, hub_ids, outdeg, idx_t, packed, scratch, keep_scratch,
     ) -> PageRankResult:
         """Power-iterate over an already-packed block layout (see _run_csr)."""
         c, eps = self.c, self.eps
         dangling = outdeg == 0.0
 
-        pi = self._init_vector(n)
-        start_iter = 0
-        if resume and self.catalog is not None:
-            resumed = self._try_resume_vector(spark, run_id, n)
-            if resumed is not None:
-                pi, start_iter = resumed
+        # Arrow batch pull, not collect(): the start ranks are O(n) and
+        # collect() would build n Row objects on the driver
+        pi = np.full(n, 1.0 / n)
+        if start is not None:
+            t = start.toArrow()
+            pi[t.column("id").to_numpy()] = t.column("rank").to_numpy()
+        ids = pa.array(np.arange(n, dtype=np.int64))
 
         out_schema = StructType(
             [
@@ -859,8 +821,8 @@ class PageRank:
             # Arrow batch pull, NOT collect(): the contribution payload is
             # O(V) (nblocks x ml values/iter — 240 MB fp64 at n=3e7) and Row
             # materialization of binary columns serializes it through the
-            # driver one object at a time. Same convention as
-            # _try_resume_vector / _checkpoint_vector.
+            # driver one object at a time. Same convention as the
+            # start-rank pull above.
             tbl = packed.mapInArrow(spmv, out_schema).toArrow()
             contrib = np.zeros(n)
             blk_col = tbl.column("block").to_pylist()
@@ -891,17 +853,15 @@ class PageRank:
             deltas.append(delta)
             wall = time.time() - t0
             iter_secs.append(wall)
-            snap = None
-            if self.catalog is not None and it % self.checkpoint_interval == 0:
-                snap = self._checkpoint_vector(run_id, it, pi)
-            if self.lineage is not None:
-                # an iteration is one map-only stage over the block-aligned
-                # pack: it shuffles nothing
-                self.lineage.log_iteration(
-                    run_id, it, rows_shuffled=0, residual_l1=delta, wall_time_s=wall,
-                    snapshot=str(snap) if snap is not None else None,
-                    extra={"dangling_mass": dmass, "mode": "csr"},
-                )
+            # the driver's vector commits with no Spark job; an iteration is
+            # one map-only stage over the block-aligned pack: it shuffles
+            # nothing
+            commit_iteration(
+                self.catalog, self.lineage, f"pagerank_ckpt_{run_id}",
+                pa.table({"id": ids, "rank": pi}), run_id, it, rows_shuffled=0,
+                residual_l1=delta, wall_time_s=wall,
+                extra={"dangling_mass": dmass, "mode": "csr"},
+            )
             if delta < eps:
                 break
 
@@ -911,60 +871,6 @@ class PageRank:
             import shutil
 
             shutil.rmtree(scratch, ignore_errors=True)
-        tbl = pa.table({"id": np.arange(n, dtype=np.int64), "rank": pi})
-        ranks = spark.createDataFrame(tbl.to_pandas())
+        ranks = spark.createDataFrame(pa.table({"id": ids, "rank": pi}).to_pandas())
         tput = m / (sum(iter_secs) / len(iter_secs)) if iter_secs else 0.0
         return PageRankResult(ranks, it, deltas, run_id, tput, iter_secs)
-
-    # ------------------------------------------------------------- helpers
-    def _try_resume(self, spark: SparkSession, run_id: str):
-        """(id, rank) start ranks and the iteration number of the run's
-        last dataframe checkpoint, or None when there is none. The loop
-        recomputes dmass/total from these ranks."""
-        table = f"pagerank_ckpt_{run_id}"
-        meta = self.catalog.current_meta(table)
-        if meta is None:
-            return None
-        s = meta.summary
-        # dataframe state is (id, rank, non_dangling) + dmass/total in the
-        # summary; csr checkpoints are the bare vector (id, rank) with only
-        # {iteration}. Resuming the wrong format used to surface as
-        # KeyError('dmass') / missing-column errors deep inside the
-        # iteration (round-4 ADVICE) — fail loud instead.
-        if "dmass" not in s or "total" not in s:
-            raise ValueError(
-                f"checkpoint '{table}' was written by a vector-mode run "
-                "(csr): its summary has no dmass/total. Resume it with "
-                "mode='csr', or restart the run (delete the checkpoint "
-                "table) to use dataframe mode."
-            )
-        # schema check on the read plan (driver-side metadata, no job)
-        # BEFORE the loop joins the table into its O(V) state checkpoint
-        df = self.catalog.read(spark, table)
-        if "non_dangling" not in df.columns:
-            raise ValueError(
-                f"checkpoint '{table}' is missing the non_dangling column "
-                "expected by dataframe state — it was written by a "
-                "vector-mode run; resume with mode='csr' or restart."
-            )
-        return df.select("id", "rank"), int(s["iteration"])
-
-    def _checkpoint_vector(self, run_id: str, it: int, pi: np.ndarray) -> int:
-        """Commit the driver's rank vector (pyarrow writer, no Spark job);
-        returns the committed snapshot id."""
-        tbl = pa.table({"id": np.arange(pi.shape[0], dtype=np.int64), "rank": pi})
-        meta = self.catalog.write(tbl, f"pagerank_ckpt_{run_id}", summary={"iteration": it})
-        return meta.snapshot_id
-
-    def _try_resume_vector(self, spark: SparkSession, run_id: str, n: int):
-        table = f"pagerank_ckpt_{run_id}"
-        meta = self.catalog.current_meta(table)
-        if meta is None:
-            return None
-        # Arrow batch transfer, not per-row Row materialization: the resumed
-        # vector is O(n) and collect() would build n Row objects on the
-        # driver (same convention as _checkpoint_vector's pa.table path).
-        tbl = self.catalog.read(spark, table).select("id", "rank").toArrow()
-        pi = np.zeros(n)
-        pi[tbl.column("id").to_numpy()] = tbl.column("rank").to_numpy()
-        return pi, int(meta.summary["iteration"])

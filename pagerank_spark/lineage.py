@@ -4,6 +4,11 @@ Schema (FIXTURES.md §5): one row per (run, iteration[, partition]) with rows
 shuffled, L1 residual, wall time, and the checkpoint snapshot id, so any run
 can be audited and resumed. Partition-level rows are optional (an extra small
 job per iteration) — aggregate rows (partition_id = -1) are always written.
+
+:func:`commit_iteration` and :func:`last_checkpoint` are the one commit and
+the one resume read of the iterative algorithms' state checkpoints
+(PageRank in both modes, connected components): one snapshot per
+iteration with summary ``{iteration}``.
 """
 
 from __future__ import annotations
@@ -71,3 +76,29 @@ class LineageWriter:
         if run_id is not None:
             df = df.filter(F.col("run_id") == run_id)
         return df
+
+
+def commit_iteration(
+    catalog, lineage: LineageWriter | None, table: str,
+    state: DataFrame | pa.Table, run_id: str, iteration: int, **log,
+) -> None:
+    """Commit one iteration: ``state`` as a snapshot of ``table`` with
+    summary ``{iteration}``, THEN the lineage row naming that snapshot, so
+    every row ties to a resumable state. A pyarrow ``state`` commits with no
+    Spark job. ``log`` holds the other ``log_iteration`` fields; either
+    writer may be None."""
+    snap = None
+    if catalog is not None:
+        snap = str(catalog.write(state, table, summary={"iteration": iteration}).snapshot_id)
+    if lineage is not None:
+        lineage.log_iteration(run_id, iteration, snapshot=snap, **log)
+
+
+def last_checkpoint(spark: SparkSession, catalog, table: str) -> tuple[DataFrame, int] | None:
+    """The current snapshot of a :func:`commit_iteration` table and the
+    iteration it committed, or None when the table has no snapshot."""
+    meta = catalog.current_meta(table)
+    if meta is None:
+        return None
+    df = catalog.read(spark, table, snapshot_id=meta.snapshot_id)
+    return df, int(meta.summary["iteration"])

@@ -106,8 +106,9 @@ def _capture_pack(spark, monkeypatch, edges, n, storage, tmp_path):
     (block, chunk bytes) pairs it holds, read before the run cleans up."""
     got = {}
 
-    def capture(self, spark, sc, run_id, resume, n, m, nblocks, block_size,
-                n_hubs, hub_ids, outdeg, idx_t, packed, scratch, keep_scratch):
+    def capture(self, spark, sc, run_id, start, start_iter, n, m, nblocks,
+                block_size, n_hubs, hub_ids, outdeg, idx_t, packed, scratch,
+                keep_scratch):
         rows = packed.collect()
         if storage == "files":
             pairs = []

@@ -384,7 +384,20 @@ def test_warm_start_partial_ranks_same_fixed_point(spark):
     assert max(abs(got[i] - want[i]) for i in range(n)) < 1e-6
 
 
-def test_warm_start_rejects_out_of_range_ids(spark):
+@pytest.fixture
+def no_pack(monkeypatch):
+    """Fail the csr pack (mapInArrow) and the edge caches (persist): bad
+    initial_ranks must be rejected before either runs."""
+    from pyspark.sql.classic.dataframe import DataFrame as SparkDF
+
+    def boom(self, *a, **k):
+        raise AssertionError("pack or edge-cache job before the initial_ranks check")
+
+    for attr in ("mapInArrow", "persist"):
+        monkeypatch.setattr(SparkDF, attr, boom)
+
+
+def test_warm_start_rejects_out_of_range_ids(spark, no_pack):
     from pagerank_spark.algorithms.pagerank import PageRank
 
     bad = spark.createDataFrame([(999999, 0.5)], "id long, rank double")
@@ -394,10 +407,10 @@ def test_warm_start_rejects_out_of_range_ids(spark):
         pr.run(edges, 2)
 
 
-def test_warm_start_dataframe_validates_ids(spark):
-    """dataframe mode raises the same hard errors as the vector modes:
-    out-of-range and duplicate initial_ranks ids (a duplicate would emit
-    two state rows and double-count that vertex's mass)."""
+def test_warm_start_dataframe_validates_ids(spark, no_pack):
+    """dataframe mode raises the same hard errors as csr mode, from the
+    same check: out-of-range and duplicate initial_ranks ids (a duplicate
+    would emit two state rows and double-count that vertex's mass)."""
     from pagerank_spark.algorithms.pagerank import PageRank
 
     edges = spark.createDataFrame([(0, 1)], "src long, dst long")

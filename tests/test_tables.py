@@ -136,66 +136,73 @@ def test_resume_matches_uninterrupted(spark, cat, golden):
     np.testing.assert_allclose(got, expected, atol=1e-6)
 
 
-def test_resume_rejects_vector_checkpoint_with_clear_error(spark, cat, golden):
-    """A checkpoint written by a vector-mode run (csr: bare (id, rank),
-    summary={iteration}) must make a dataframe-mode resume fail
-    LOUD with a mode-mismatch message — not a KeyError('dmass') deep inside
-    the iteration (round-4 ADVICE)."""
-    arr, n, _ = golden
+def _ranks(res, n) -> np.ndarray:
+    out = np.zeros(n)
+    for r in res.ranks.collect():
+        out[r["id"]] = r["rank"]
+    return out
+
+
+def _assert_one_checkpoint_format(spark, cat, table, iteration):
+    """(id long, rank double) with summary {iteration} (data_dirs is the
+    catalog's own bookkeeping)."""
+    meta = cat.current_meta(table)
+    assert {k: v for k, v in meta.summary.items() if k != "data_dirs"} == {
+        "iteration": iteration
+    }
+    schema = cat.read(spark, table).schema
+    assert [(f.name, f.dataType.typeName()) for f in schema] == [
+        ("id", "long"), ("rank", "double"),
+    ]
+
+
+@pytest.mark.parametrize(
+    "first,then", [("csr", "dataframe"), ("dataframe", "csr")],
+    ids=["csr_to_dataframe", "dataframe_to_csr"],
+)
+def test_resume_across_modes(spark, cat, golden, first, then):
+    """Both modes write one checkpoint format, so a run cut after 3
+    iterations in one mode resumes in the other: it still converges at
+    iteration 7, on the golden ranks, and lands on the uninterrupted run of
+    the resuming mode."""
+    arr, n, expected = golden
     edges = edges_from_numpy(spark, arr)
-    PageRank(max_iter=2, mode="csr", catalog=cat).run(edges, n, run_id="mix")
-    with pytest.raises(ValueError, match="vector-mode"):
-        PageRank(mode="dataframe", catalog=cat).run(
-            edges, n, run_id="mix", resume=True
-        )
+    PageRank(mode=first, max_iter=3, catalog=cat).run(edges, n, run_id="x")
+    _assert_one_checkpoint_format(spark, cat, "pagerank_ckpt_x", 3)
+    res = PageRank(mode=then, catalog=cat).run(edges, n, run_id="x", resume=True)
+    assert res.iterations == 7
+    _assert_one_checkpoint_format(spark, cat, "pagerank_ckpt_x", 7)
+    got = _ranks(res, n)
+    np.testing.assert_allclose(got, expected, atol=1e-6)
+    whole = _ranks(PageRank(mode=then).run(edges, n), n)
+    np.testing.assert_allclose(got, whole, rtol=0, atol=1e-12)
 
 
-def test_resume_checks_columns_before_checkpoint(spark, cat, monkeypatch):
-    """A checkpoint whose summary carries dmass/total but whose table lacks
-    the non_dangling column must be rejected from the read plan's schema,
-    before any O(V) state checkpoint runs."""
+def test_resume_vector_uses_arrow_not_collect(spark, cat, golden, monkeypatch):
+    """A csr resume pulls the checkpointed O(n) ranks with an Arrow batch
+    transfer, never a per-row collect() (n Row objects on the driver):
+    collect() of any (id, rank) frame is poisoned for the resumed run, which
+    must still continue from iteration 3 to the golden ranks."""
     from pyspark.sql.classic.dataframe import DataFrame as SparkDF
-
-    state = spark.createDataFrame([(0, 0.5), (1, 0.5)], "id long, rank double")
-    cat.write(
-        state, "pagerank_ckpt_nocol",
-        summary={"iteration": 2, "delta": 0.1, "dmass": 0.0, "total": 1.0},
-    )
-
-    def boom(self, *a, **k):
-        raise AssertionError("localCheckpoint ran before the column check")
-
-    monkeypatch.setattr(SparkDF, "localCheckpoint", boom)
-    pr = PageRank(mode="dataframe", catalog=cat)
-    with pytest.raises(ValueError, match="non_dangling"):
-        pr._try_resume(spark, "nocol")
-
-
-def test_resume_vector_uses_arrow_not_collect(spark, cat, golden):
-    """The csr/vector resume path must rebuild the rank vector via an Arrow
-    batch transfer, never a per-row collect() (O(n) Row objects on the
-    driver). collect() is poisoned for the duration; the resume must still
-    succeed and return the checkpointed vector."""
-    from pyspark.sql import DataFrame
 
     arr, n, expected = golden
     edges = edges_from_numpy(spark, arr)
-    pr = PageRank(max_iter=3, mode="csr", catalog=cat)
-    pr.run(edges, n, run_id="rv")
+    PageRank(max_iter=3, mode="csr", catalog=cat).run(edges, n, run_id="rv")
 
-    def boom(self):
-        raise AssertionError("per-row collect() on the resume path")
+    orig = SparkDF.collect
 
-    orig = DataFrame.collect
-    DataFrame.collect = boom
-    try:
-        resumed = pr._try_resume_vector(spark, "rv", n)
-    finally:
-        DataFrame.collect = orig
-    assert resumed is not None
-    pi, it = resumed
-    assert it == 3
-    assert pi.shape == (n,) and float(np.abs(pi).sum()) > 0.0
+    def guarded(self):
+        if self.columns == ["id", "rank"]:
+            raise AssertionError("per-row collect() of the start ranks")
+        return orig(self)
+
+    monkeypatch.setattr(SparkDF, "collect", guarded)
+    with pytest.raises(AssertionError, match="per-row"):  # the poison bites
+        cat.read(spark, "pagerank_ckpt_rv").collect()
+    res = PageRank(mode="csr", catalog=cat).run(edges, n, run_id="rv", resume=True)
+    monkeypatch.undo()
+    assert res.iterations == 7
+    np.testing.assert_allclose(_ranks(res, n), expected, atol=1e-6)
 
 
 def test_lineage_rows(spark, cat, golden):
@@ -304,6 +311,36 @@ def test_csr_iterations_write_no_shuffle_bytes(spark):
             written[iters] += int(sd.shuffleWriteBytes())
     assert written[1] > 0  # the pack's block-aligning shuffle is counted
     assert written[3] == written[1], written
+
+
+def test_cc_resume_and_lineage_snapshots(spark, cat):
+    """Connected components commit through the same path as PageRank: a run
+    cut after round 1 resumes from its cc_ckpt snapshot to the exact
+    components, and every lineage row names the snapshot its round
+    committed."""
+    from pagerank_spark.algorithms.components import connected_components
+    from pagerank_spark.oracle import connected_components_numpy
+    from pagerank_spark.sources.graphfile import vertices_df
+
+    # a path through scrambled ids plus one island: several star rounds
+    n = 12
+    path = np.random.default_rng(5).permutation(10)
+    arr = np.array([*zip(path[:-1], path[1:]), (10, 11)], dtype=np.int64)
+    edges, verts = edges_from_numpy(spark, arr), vertices_df(spark, n)
+    lin = LineageWriter(spark, cat)
+    kw = {"catalog": cat, "lineage": lin, "run_id": "cc"}
+    connected_components(edges, verts, max_iter=1, **kw)
+    comp = connected_components(edges, verts, resume=True, **kw)
+    exp = connected_components_numpy(arr, n)
+    assert {r["id"]: r["component"] for r in comp.collect()} == {
+        i: int(exp[i]) for i in range(n)
+    }
+    rows = sorted(lin.read("cc").collect(), key=lambda r: r["iteration"])
+    assert [r["iteration"] for r in rows] == list(range(1, len(rows) + 1))
+    assert len(rows) >= 3
+    for r in rows:
+        meta = cat.snapshot_meta("cc_ckpt_cc", int(r["snapshot"]))
+        assert meta.summary["iteration"] == r["iteration"]
 
 
 def test_expire_snapshots_keeps_referenced_data(spark, tmp_path):
