@@ -495,7 +495,7 @@ def smoke_pagerank_df_10m(spark, n_vertices=10_000_000, n_edges=40_000_000,
     from pagerank_spark.algorithms.linkanalysis import _teleport_iteration
     from pagerank_spark.algorithms.pagerank import PageRank
     from pagerank_spark.sources.synthetic import synthetic_edges
-    from pagerank_spark.util import static_plan
+    from pagerank_spark.util import pin_state
 
     edges = synthetic_edges(spark, n_vertices, n_edges, seed=13,
                             num_partitions=32).persist()
@@ -510,9 +510,13 @@ def smoke_pagerank_df_10m(spark, n_vertices=10_000_000, n_edges=40_000_000,
     med = secs[len(secs) // 2]
 
     # exchange count of one iteration plan at THIS scale (plan-only, not
-    # executed): same walker as tests/test_plans.py::_exchanges
+    # executed): same walker as tests/test_plans.py::_exchanges, which
+    # unwraps the AQE root to its initial plan (the exchanges are placed
+    # there; AQE adds none)
     def exchanges(df):
         def walk(jp, acc):
+            if jp.nodeName() == "AdaptiveSparkPlan":
+                jp = jp.initialPlan()
             name = jp.nodeName()
             if "Exchange" in name and "Reused" not in name:
                 acc[1 if "Broadcast" in name else 0] += 1
@@ -533,20 +537,16 @@ def smoke_pagerank_df_10m(spark, n_vertices=10_000_000, n_edges=40_000_000,
     )
     ew.count()  # materialize: the cache's own build exchanges are pack-time,
     # not per-iteration — exactly as _teleport_pagerank amortizes them
-    state0 = (
+    state = pin_state(
         spark.range(0, n_vertices, 1, p)
         .select("id", FF.lit(True).alias("non_dangling"),
                 FF.lit(1.0 / n_vertices).alias("t0"),
-                FF.lit(1.0 / n_vertices).alias("r0"))
-        .repartition(p, "id")
+                FF.lit(1.0 / n_vertices).alias("r0")),
+        "id",
     )
-    with static_plan(spark):
-        state = state0.localCheckpoint(eager=True)
-        # compile the audited plan non-adaptively: under AQE the walker sees
-        # only an unexpanded AdaptiveSparkPlan root (0 exchanges, wrongly)
-        sh = exchanges(_teleport_iteration(
-            ew, state, 1, 0.85, [0.0], [1.0], lambda df: df.hint("shuffle_hash")
-        ))
+    sh = exchanges(_teleport_iteration(
+        ew, state, 1, 0.85, [0.0], [1.0], lambda df: df.hint("shuffle_hash")
+    ))
     ew.unpersist()
     edges.unpersist()
     return {

@@ -20,11 +20,13 @@ killed run resumes from the last committed round.
 
 from __future__ import annotations
 
+import time
 import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark import util
 from pagerank_spark.lineage import LineageWriter, commit_iteration, last_checkpoint
 
 
@@ -83,13 +85,6 @@ def _small_star(e: DataFrame, big: bool) -> DataFrame:
     return _dedup(out.union(self_link))
 
 
-def _checksum(e: DataFrame) -> tuple[int, int]:
-    # set fingerprint of the dedup'ed edge set (shared helper; see util)
-    from pagerank_spark.util import set_checksum
-
-    return set_checksum(e, "u", "v")
-
-
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -114,15 +109,11 @@ def connected_components(
     # round 1's output is in star form while the input is not — prev=None
     # just means the first comparison can't fire (it couldn't have anyway)
     prev: tuple[int, int] | None = None
-    from pagerank_spark import util
-
     big = util.approx_vertex_count(e, "u", "v") > util.BROADCAST_SAFE_ROWS
-    import time
-
     for it in range(start_iter + 1, max_iter + 1):
         t0 = time.time()
         e_next = _small_star(_large_star(e, big), big).localCheckpoint(eager=True)
-        cur = _checksum(e_next)
+        cur = util.set_checksum(e_next, "u", "v")
         e.unpersist()
         e = e_next
         commit_iteration(

@@ -52,7 +52,7 @@ are asserted bit-equal to that simulation on the micro graphs.
 
 Physical plan per hop (audited in tests/test_plans.py): the edge cache
 (out-edges plus the per-vertex self-loop) carries hash(dst), the state
-checkpoint keeps hash(id) via ``util.static_plan``, so the ball-pull join
+checkpoint keeps hash(id) via ``util.pin_state``, so the ball-pull join
 is exchange-free; the ONE shuffle is an explicit repartition of the pulled
 PACKED rows by src feeding an exchange-free groupBy(src) lane-max merge.
 Raw packed rows beat Catalyst's default partial-aggregation exchange here
@@ -261,12 +261,7 @@ def hyperball(
         # hint adds sorts, never exchanges (plan-audited).
         return df if n_verts <= _util.BROADCAST_SAFE_ROWS else df.hint("merge")
 
-    with _util.static_plan(spark):
-        state = (
-            _init_registers(cached_verts)
-            .repartition(shuffle_p, "id")
-            .localCheckpoint(eager=True)
-        )
+    state = _util.pin_state(_init_registers(cached_verts), "id")
 
     def snapshot(st: DataFrame, t: int) -> DataFrame:
         # materialize the 4-column summary per hop (id, s_int, zero_regs,
@@ -309,9 +304,7 @@ def hyperball(
     t = 0
     for t in range(1, t_max + 1):
         t0 = time.time()
-        with _util.static_plan(spark):
-            new_state = _hop(e_dst, state, no_bcast).localCheckpoint(eager=True)
-        state = new_state
+        state = _util.pin_state(_hop(e_dst, state, no_bcast))
         snapshots.append(snapshot(state, t))
         nf_t, new_checksum = summarize(snapshots[-1])
         nf.append(nf_t)

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark import util
+
 
 def _lp_round(und: DataFrame, labels: DataFrame, big: bool) -> DataFrame:
     """One synchronous round as a DataFrame plan.
@@ -36,7 +38,7 @@ def _lp_round(und: DataFrame, labels: DataFrame, big: bool) -> DataFrame:
     join with no exchange, one repartition("a") feeds BOTH aggregates
     (hash(a) satisfies groupBy(a, label) and groupBy(a)), and the label
     update join reuses hash(id) x the aggregate's hash(id). Requires the
-    labels checkpoint to be compiled under util.static_plan (see
+    labels checkpoint to be pinned with util.pin_state (see
     linkanalysis._teleport_iteration for the same contract). Audited by
     tests/test_plans.py::test_labelprop_big_round_single_exchange."""
 
@@ -64,28 +66,21 @@ def label_propagation(
     check_convergence: bool = True,
 ) -> DataFrame:
     """edges(src,dst), vertices(id) -> (id, label). Exact at fixed rounds."""
-    from pagerank_spark import util
-    from pagerank_spark.util import set_checksum
-
-    spark = edges.sparkSession
     labels0 = vertices.select("id", F.col("id").alias("label"))
 
     # O(V) label/best tables must not be auto-broadcast on big graphs (the
     # driver-OOM class in PLANS.md); small graphs keep the broadcast plans.
     # The vertex count comes free from the convergence checksum when that is
     # on (one fewer action per call).
-    prev_sum = set_checksum(labels0, "id", "label") if check_convergence else None
+    prev_sum = util.set_checksum(labels0, "id", "label") if check_convergence else None
     n_vertices = prev_sum[0] if check_convergence else labels0.count()
     big = n_vertices > util.BROADCAST_SAFE_ROWS
 
-    # big graphs: hash(id)-partition the labels and checkpoint under
-    # static_plan so the LogicalRDD KEEPS the partitioning — every round's
-    # two labels joins then plan no O(V) re-exchange (AQE-compiled
-    # checkpoints record UnknownPartitioning; see util.static_plan)
-    with util.static_plan(spark):
-        labels = (labels0.repartition("id") if big else labels0).localCheckpoint(
-            eager=True
-        )
+    # big graphs: hash(id)-partition the labels and pin them with AQE off
+    # so the LogicalRDD KEEPS the partitioning — every round's two labels
+    # joins then plan no O(V) re-exchange (AQE-compiled checkpoints record
+    # UnknownPartitioning; see util.pin_state)
+    labels = util.pin_state(labels0, "id") if big else util.pin_state(labels0)
 
     # Build the undirected edge table with ONE exchange: mirror first, then
     # repartition on the round key and dedup — HashPartitioning(a) satisfies
@@ -113,12 +108,11 @@ def label_propagation(
     und.count()  # materialize eagerly, matching the old checkpoint behavior
 
     for _ in range(max_iter):
-        with util.static_plan(spark):
-            new_labels = _lp_round(und, labels, big).localCheckpoint(eager=True)
+        new_labels = util.pin_state(_lp_round(und, labels, big))
         labels.unpersist()
         labels = new_labels
         if check_convergence:
-            cur_sum = set_checksum(labels, "id", "label")
+            cur_sum = util.set_checksum(labels, "id", "label")
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum

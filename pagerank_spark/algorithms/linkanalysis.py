@@ -13,7 +13,7 @@ edges); K=2 for :func:`spam_mass` (both of those teleports); K topics for
 discipline the audited PageRank/label-propagation loops established
 (PLANS.md "statically planned checkpoints"):
 
-- state checkpoints are compiled under ``util.static_plan`` so the
+- state checkpoints are pinned with ``util.pin_state`` (AQE off) so the
   LogicalRDD keeps its hash(id) partitioning and each iteration plans ONE
   shuffle exchange (the contribution aggregation);
 - O(V)-sized join sides are broadcast below ``util.BROADCAST_SAFE_ROWS``
@@ -72,7 +72,7 @@ def hits(
 
     Physical plan per half-step: one shuffle (the aggregation). The edge
     cache is partitioned on the half-step's join key; the state checkpoint
-    keeps hash(id) via ``util.static_plan``, so the score join and the
+    keeps hash(id) via ``util.pin_state``, so the score join and the
     update join are exchange-free (same contract as _teleport_iteration).
     """
     spark = edges.sparkSession
@@ -103,16 +103,14 @@ def hits(
     e_dst = e_dst.repartition(shuffle_p, "dst").persist()
     e_src.count(), e_dst.count()
 
-    with _util.static_plan(spark):
-        state = (
-            vertices.select(
-                F.col("id").cast("long").alias("id"),
-                F.lit(1.0).alias("hub"),
-                F.lit(1.0).alias("auth"),
-            )
-            .repartition(shuffle_p, "id")
-            .localCheckpoint(eager=True)
-        )
+    state = _util.pin_state(
+        vertices.select(
+            F.col("id").cast("long").alias("id"),
+            F.lit(1.0).alias("hub"),
+            F.lit(1.0).alias("auth"),
+        ),
+        "id",
+    )
 
     iter_secs: list[float] = []
     for _ in range(max_iter):
@@ -128,8 +126,7 @@ def hits(
             "hub",
             F.coalesce(F.col("a_raw"), F.lit(0.0)).alias("a_raw"),
         )
-        with _util.static_plan(spark):
-            auth = auth.repartition(shuffle_p, "id").localCheckpoint(eager=True)
+        auth = _util.pin_state(auth, "id")
         a_sum = float(auth.agg(F.sum("a_raw")).first()[0] or 0.0)
         a_norm = a_sum if a_sum > 0 else 1.0
 
@@ -147,17 +144,14 @@ def hits(
             F.coalesce(F.col("h_raw"), F.lit(0.0)).alias("h_raw"),
             (F.col("a_raw") / a_norm).alias("auth"),
         )
-        with _util.static_plan(spark):
-            new_state = new_state.repartition(shuffle_p, "id").localCheckpoint(
-                eager=True
-            )
+        new_state = _util.pin_state(new_state, "id")
         h_sum = float(new_state.agg(F.sum("h_raw")).first()[0] or 0.0)
         h_norm = h_sum if h_sum > 0 else 1.0
+        # a projection of the checkpoint keeps its hash(id): the next
+        # iteration's joins consume it with no exchange and no re-pin
         state = new_state.select(
             "id", (F.col("h_raw") / h_norm).alias("hub"), "auth"
         )
-        with _util.static_plan(spark):
-            state = state.localCheckpoint(eager=True)
         iter_secs.append(time.time() - t0)
 
     e_src.unpersist()
@@ -201,7 +195,7 @@ def _teleport_iteration(
     (map-side partials for all K). The contribution join consumes ew's
     hash(src) x the state checkpoint's hash(id), and the rank-update left
     join consumes hash(id) x hash(dst), PROVIDED the state checkpoint was
-    compiled under util.static_plan (an AQE-compiled one plans 3 exchanges).
+    pinned with util.pin_state (an AQE-compiled one plans 3 exchanges).
     ``salt_partitions`` swaps in the salted two-stage sum (graph/skew.py).
     Audited by tests/test_plans.py::test_ppr_batch_iteration_single_exchange."""
     joined = ew.join(
@@ -289,7 +283,7 @@ def _teleport_pagerank(
 
     Physical cost: ONE shuffle per iteration (the contribution
     aggregation) — the row-normalized edge cache carries hash(src), the
-    state checkpoint keeps hash(id) (``util.static_plan``), and the
+    state checkpoint keeps hash(id) (``util.pin_state``), and the
     teleport columns ride in the state so the update join needs no extra
     v lookup. The per-vector delta/dangling-mass/total scalars come from
     one whole-state aggregate action (3K driver-side doubles); the loop
@@ -320,27 +314,25 @@ def _teleport_pagerank(
     ts = [f"t{k}" for k in range(K)]
     rs = [f"r{k}" for k in range(K)]
     r_start = list(teleports)
-    with _util.static_plan(spark):
-        verts = spark.range(0, n, 1, shuffle_p).join(
-            no_bcast(out.select(F.col("src").alias("id"), F.lit(True).alias("nd"))),
+    verts = spark.range(0, n, 1, shuffle_p).join(
+        no_bcast(out.select(F.col("src").alias("id"), F.lit(True).alias("nd"))),
+        "id",
+        "left",
+    )
+    if seeds is not None:
+        verts = verts.join(no_bcast(seeds), "id", "left")
+    if start is not None:
+        verts = verts.join(no_bcast(start.select("id", "rank")), "id", "left")
+        r_start[0] = F.coalesce(F.col("rank"), teleports[0])
+    state = _util.pin_state(
+        verts.select(
             "id",
-            "left",
-        )
-        if seeds is not None:
-            verts = verts.join(no_bcast(seeds), "id", "left")
-        if start is not None:
-            verts = verts.join(no_bcast(start.select("id", "rank")), "id", "left")
-            r_start[0] = F.coalesce(F.col("rank"), teleports[0])
-        state = (
-            verts.select(
-                "id",
-                F.coalesce(F.col("nd"), F.lit(False)).alias("non_dangling"),
-                *[v.alias(t) for v, t in zip(teleports, ts)],
-                *[v.alias(r) for v, r in zip(r_start, rs)],
-            )
-            .repartition(shuffle_p, "id")
-            .localCheckpoint(eager=True)
-        )
+            F.coalesce(F.col("nd"), F.lit(False)).alias("non_dangling"),
+            *[v.alias(t) for v, t in zip(teleports, ts)],
+            *[v.alias(r) for v, r in zip(r_start, rs)],
+        ),
+        "id",
+    )
 
     def sums(df: DataFrame, *per_vector) -> list[list[float]]:
         # K driver-side doubles per aggregate template, in one action
@@ -363,10 +355,11 @@ def _teleport_pagerank(
     dmass, total = sums(state, dangling, mass)
     for it in range(start_iter + 1, max_iter + 1):
         t0 = time.time()
-        with _util.static_plan(spark):
-            new_state = _teleport_iteration(
+        new_state = _util.pin_state(
+            _teleport_iteration(
                 ew, state, K, c, dmass, total, no_bcast, salt_partitions
-            ).localCheckpoint(eager=True)
+            )
+        )
         dmass, total, deltas = sums(new_state, dangling, mass, delta)
         state = new_state.select("id", "non_dangling", *ts, *rs)
         run.iterations = it
@@ -564,53 +557,64 @@ def bfs_distances(
     from ``sources`` (id) within ``max_hops`` directed (or undirected) hops;
     unreachable vertices are absent. dist = fewest edges from ANY source.
 
-    Frontier-based: per round, expand the frontier one hop, drop vertices
-    already settled (anti-join against the accumulated distance table), and
-    settle the rest. Each round costs one shuffle (the per-dst min) plus the
-    settled-set anti-join; the frontier and settled tables are checkpointed
-    under ``util.static_plan`` so both joins consume existing hash(id)
-    partitionings. State is O(reached vertices) — nothing driver-resident;
-    the loop stops on an empty frontier (count action per round) or at
-    ``max_hops``.
+    Runs :func:`_frontier_search` over a hash(src) edge cache (mirrored
+    when ``directed=False``); state is O(reached vertices), nothing
+    driver-resident.
     """
     spark = edges.sparkSession
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_verts = _util.approx_vertex_count(edges)
-
-    no_bcast = _util.no_bcast_fn(n_verts)
+    no_bcast = _util.no_bcast_fn(_util.approx_vertex_count(edges))
 
     e = edges.select("src", "dst")
     if not directed:
         e = e.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     e = e.repartition(shuffle_p, "src").persist()
     e.count()
+    dist = _frontier_search(e, sources, no_bcast, max_hops)
+    e.unpersist()
+    return dist
 
-    with _util.static_plan(spark):
-        dist = (
-            sources.select(F.col("id").cast("long").alias("id"))
-            .distinct()
-            .withColumn("dist", F.lit(0))
-            .repartition(shuffle_p, "id")
-            .localCheckpoint(eager=True)
-        )
+
+def _frontier_search(
+    e: DataFrame, seeds: DataFrame, no_bcast, max_hops: int | None = None
+) -> DataFrame:
+    """The engine's one frontier search: (id, dist) for every vertex
+    reachable from ``seeds`` (id) along ``e``'s (src, dst) edges within
+    ``max_hops`` hops (None: to the fixpoint), dist = fewest edges from
+    any seed; seeds have dist 0. ``e`` must arrive hash(src)-partitioned
+    (a persisted repartition or a pinned checkpoint).
+
+    Per round: expand the frontier one hop (the edge join consumes e's
+    hash(src) x the frontier's hash(id)), drop vertices already settled
+    (anti-join against the accumulated distance table), and settle the
+    rest. One shuffle (the per-dst aggregate) plus the settled-set
+    anti-join; both tables are pinned (``util.pin_state``) so the joins
+    consume existing hash(id) partitionings. Stops on an empty frontier
+    (one ``isEmpty`` action per round) or at ``max_hops``. The result is
+    checkpointed, so the caller may release ``e`` on return.
+    """
+    dist = _util.pin_state(
+        seeds.select(F.col("id").cast("long").alias("id"))
+        .distinct()
+        .withColumn("dist", F.lit(0)),
+        "id",
+    )
     frontier = dist.select("id")
-
-    for hop in range(1, max_hops + 1):
+    hop = 0
+    while max_hops is None or hop < max_hops:
+        hop += 1
         nxt = (
             e.join(no_bcast(frontier), e.src == frontier.id)
             .groupBy(F.col("dst").alias("id"))
             .agg(F.lit(hop).alias("dist"))
         )
-        fresh = nxt.join(no_bcast(dist.select("id")), "id", "left_anti")
-        with _util.static_plan(spark):
-            fresh = fresh.repartition(shuffle_p, "id").localCheckpoint(eager=True)
+        fresh = _util.pin_state(
+            nxt.join(no_bcast(dist.select("id")), "id", "left_anti"), "id"
+        )
         if fresh.isEmpty():
             break
-        with _util.static_plan(spark):
-            dist = dist.union(fresh).localCheckpoint(eager=True)
+        dist = _util.pin_state(dist.union(fresh))
         frontier = fresh.select("id")
-
-    e.unpersist()
     return dist
 
 
@@ -1007,7 +1011,7 @@ def katz_centrality(
     convention of the original formulation and NetworkX, making scores
     comparable across graphs). Same physical contract as the engine's
     other power iterations: edge cache hash(src), state checkpoints keep
-    hash(id) under static_plan, ONE shuffle per iteration (the
+    hash(id) via pin_state, ONE shuffle per iteration (the
     contribution aggregation); with ``eps`` set, stops when the L1 step
     delta falls below it.
     """
@@ -1025,13 +1029,10 @@ def katz_centrality(
         .persist()
     )
     e.count()
-    with _util.static_plan(spark):
-        state = (
-            spark.range(0, n, 1, shuffle_p)
-            .select("id", F.lit(float(beta)).alias("x"))
-            .repartition(shuffle_p, "id")
-            .localCheckpoint(eager=True)
-        )
+    state = _util.pin_state(
+        spark.range(0, n, 1, shuffle_p).select("id", F.lit(float(beta)).alias("x")),
+        "id",
+    )
     for _ in range(max_iter):
         contrib = (
             e.join(no_bcast(state.select(F.col("id").alias("src"), "x")), "src")
@@ -1044,8 +1045,7 @@ def katz_centrality(
              + F.lit(float(beta))).alias("x"),
             F.col("x").alias("old_x"),
         )
-        with _util.static_plan(spark):
-            new_state = new_state.localCheckpoint(eager=True)
+        new_state = _util.pin_state(new_state)
         delta = float(
             new_state.agg(F.sum(F.abs(F.col("x") - F.col("old_x")))).first()[0]
         )

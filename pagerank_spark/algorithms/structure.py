@@ -10,8 +10,10 @@ decomposition of the web, reciprocity/assortativity as corpus-level health
 metrics). Execution discipline matches the audited iterative loops
 (PLANS.md "statically planned checkpoints"):
 
-- iteration state is checkpointed under ``util.static_plan`` so the
+- iteration state is pinned with ``util.pin_state`` (AQE off) so the
   LogicalRDD keeps hash partitioning and each round plans one shuffle;
+- every reachability fixpoint (SCC backward reach, the four bow-tie
+  reaches) is the one frontier search, ``linkanalysis._frontier_search``;
 - O(V) join sides are broadcast below ``util.BROADCAST_SAFE_ROWS`` and
   forced to shuffle-hash joins above it;
 - nothing O(V) or O(E) is collected to the driver (convergence checks use
@@ -25,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pagerank_spark import util as _util
+from pagerank_spark.algorithms.linkanalysis import _frontier_search
 
 
 def coreness(edges: DataFrame, max_rounds: int = 100) -> DataFrame:
@@ -82,13 +85,10 @@ def coreness(edges: DataFrame, max_rounds: int = 100) -> DataFrame:
     nbrs_by_id = pairs.repartition(shuffle_p, "id").persist()
     nbrs_by_nb.count(), nbrs_by_id.count()
 
-    with _util.static_plan(spark):
-        state = (
-            nbrs_by_id.groupBy("id")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .repartition(shuffle_p, "id")
-            .localCheckpoint(eager=True)
-        )
+    state = _util.pin_state(
+        nbrs_by_id.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("c")),
+        "id",
+    )
     changed = state.select("id")  # round 0: everyone just got a value
 
     w = Window.partitionBy("id").orderBy(F.desc("cu"), F.asc("nb"))
@@ -122,8 +122,7 @@ def coreness(edges: DataFrame, max_rounds: int = 100) -> DataFrame:
             F.coalesce(F.col("c_new"), F.col("c")).alias("c"),
             (F.coalesce(F.col("c_new"), F.col("c")) != F.col("c")).alias("moved"),
         )
-        with _util.static_plan(spark):
-            merged = merged.localCheckpoint(eager=True)
+        merged = _util.pin_state(merged)
         state = merged.select("id", "c")
         changed = merged.filter(F.col("moved")).select("id")
         if changed.isEmpty():
@@ -132,6 +131,17 @@ def coreness(edges: DataFrame, max_rounds: int = 100) -> DataFrame:
     nbrs_by_nb.unpersist()
     nbrs_by_id.unpersist()
     return state.select("id", F.col("c").alias("coreness"))
+
+
+def _live_edges(live_e: DataFrame, live_v: DataFrame, no_bcast) -> DataFrame:
+    """``live_e`` restricted to edges with both endpoints in ``live_v``,
+    pinned hash(src)."""
+    return _util.pin_state(
+        live_e.join(no_bcast(live_v.select(F.col("id").alias("src"))), "src", "left_semi")
+        .join(no_bcast(live_v.select(F.col("id").alias("dst"))), "dst", "left_semi")
+        .select("src", "dst"),
+        "src",
+    )
 
 
 def strongly_connected_components(
@@ -154,10 +164,11 @@ def strongly_connected_components(
        forward edges to fixpoint (label-propagation-style rounds, so
        O(diameter) rounds, each one shuffle).
     3. **Backward reach**: from each color root r (``color(r) == r``),
-       walk reversed edges restricted to color-r vertices; every vertex
-       reached is in SCC(r) (it reaches r and r reaches it). Every vertex
-       on such a path provably carries color r, so the restriction loses
-       nothing.
+       walk reversed edges restricted to color-r vertices (one
+       ``linkanalysis._frontier_search`` over the reversed same-color edge
+       table from all roots at once); every vertex reached is in SCC(r)
+       (it reaches r and r reaches it). Every vertex on such a path
+       provably carries color r, so the restriction loses nothing.
     4. Assign those SCCs (labeled by their min member id), delete them
        from the live subgraph, repeat. Each phase removes at least the
        SCC of the max-id vertex of every weakly-connected remainder.
@@ -171,7 +182,6 @@ def strongly_connected_components(
     checkpointed unions.
     """
     spark = edges.sparkSession
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_verts = _util.approx_vertex_count(edges)
     no_bcast = _util.no_bcast_fn(n_verts)
 
@@ -186,13 +196,8 @@ def strongly_connected_components(
             .union(e.select(F.col("dst").alias("id")))
             .distinct()
         )
-    with _util.static_plan(spark):
-        live_v = (
-            vertices.select(F.col("id").cast("long"))
-            .repartition(shuffle_p, "id")
-            .localCheckpoint(eager=True)
-        )
-        live_e = e.repartition(shuffle_p, "src").localCheckpoint(eager=True)
+    live_v = _util.pin_state(vertices.select(F.col("id").cast("long")), "id")
+    live_e = _util.pin_state(e, "src")
 
     assigned = spark.createDataFrame([], "id long, scc long")
 
@@ -207,38 +212,16 @@ def strongly_connected_components(
             )
             if trimmed.isEmpty():
                 break
-            with _util.static_plan(spark):
-                assigned = assigned.union(trimmed).localCheckpoint(eager=True)
-                live_v = (
-                    live_v.join(no_bcast(core), "id", "left_semi")
-                    .repartition(shuffle_p, "id")
-                    .localCheckpoint(eager=True)
-                )
-                live_e = (
-                    live_e.join(
-                        no_bcast(live_v.select(F.col("id").alias("src"))),
-                        "src",
-                        "left_semi",
-                    )
-                    .join(
-                        no_bcast(live_v.select(F.col("id").alias("dst"))),
-                        "dst",
-                        "left_semi",
-                    )
-                    .select("src", "dst")
-                    .repartition(shuffle_p, "src")
-                    .localCheckpoint(eager=True)
-                )
+            assigned = _util.pin_state(assigned.union(trimmed))
+            live_v = _util.pin_state(
+                live_v.join(no_bcast(core), "id", "left_semi"), "id"
+            )
+            live_e = _live_edges(live_e, live_v, no_bcast)
         if live_v.isEmpty():
             break
 
         # ---- 2. forward max-color to fixpoint
-        with _util.static_plan(spark):
-            color = (
-                live_v.select("id", F.col("id").alias("color"))
-                .repartition(shuffle_p, "id")
-                .localCheckpoint(eager=True)
-            )
+        color = _util.pin_state(live_v.select("id", F.col("id").alias("color")), "id")
         prev_sum = _util.set_checksum(color, "id", "color")
         while True:
             incoming = (
@@ -254,17 +237,17 @@ def strongly_connected_components(
                     F.col("color"), F.coalesce(F.col("in_color"), F.lit(-1))
                 ).alias("color"),
             )
-            with _util.static_plan(spark):
-                color = new_color.repartition(shuffle_p, "id").localCheckpoint(
-                    eager=True
-                )
+            color = _util.pin_state(new_color, "id")
             cur_sum = _util.set_checksum(color, "id", "color")
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
 
-        # ---- 3. backward reach from color roots over same-color edges
-        ecol = (
+        # ---- 3. backward reach from color roots over same-color edges,
+        # reversed (dst -> src) so the frontier search walks them forward;
+        # every path in this table stays inside one color, so each reached
+        # vertex carries its root's color
+        rev = (
             live_e.join(
                 no_bcast(color.select(F.col("id").alias("src"), F.col("color").alias("c_src"))),
                 "src",
@@ -274,61 +257,23 @@ def strongly_connected_components(
                 "dst",
             )
             .filter(F.col("c_src") == F.col("c_dst"))
-            .select("src", "dst", F.col("c_src").alias("color"))
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        with _util.static_plan(spark):
-            ecol = ecol.repartition(shuffle_p, "dst").localCheckpoint(eager=True)
-
-        with _util.static_plan(spark):
-            reach = (
-                color.filter(F.col("id") == F.col("color"))
-                .repartition(shuffle_p, "id")
-                .localCheckpoint(eager=True)
-            )
-        frontier = reach
-        while True:
-            fresh = (
-                ecol.join(
-                    no_bcast(frontier.select(F.col("id").alias("dst"), "color")),
-                    ["dst", "color"],
-                )
-                .select(F.col("src").alias("id"), "color")
-                .distinct()
-                .join(no_bcast(reach.select("id")), "id", "left_anti")
-            )
-            with _util.static_plan(spark):
-                fresh = fresh.repartition(shuffle_p, "id").localCheckpoint(eager=True)
-            if fresh.isEmpty():
-                break
-            with _util.static_plan(spark):
-                reach = reach.union(fresh).localCheckpoint(eager=True)
-            frontier = fresh
+        reached = _frontier_search(
+            _util.pin_state(rev, "src"),
+            color.filter(F.col("id") == F.col("color")),
+            no_bcast,
+        )
+        reach = reached.join(no_bcast(color), "id").select("id", "color")
 
         # ---- 4. label by min member id, assign, delete
         labels = reach.groupBy("color").agg(F.min("id").alias("scc"))
         part = reach.join(no_bcast(labels), "color").select("id", "scc")
-        with _util.static_plan(spark):
-            assigned = assigned.union(part).localCheckpoint(eager=True)
-            live_v = (
-                live_v.join(no_bcast(reach.select("id")), "id", "left_anti")
-                .repartition(shuffle_p, "id")
-                .localCheckpoint(eager=True)
-            )
-            live_e = (
-                live_e.join(
-                    no_bcast(live_v.select(F.col("id").alias("src"))),
-                    "src",
-                    "left_semi",
-                )
-                .join(
-                    no_bcast(live_v.select(F.col("id").alias("dst"))),
-                    "dst",
-                    "left_semi",
-                )
-                .select("src", "dst")
-                .repartition(shuffle_p, "src")
-                .localCheckpoint(eager=True)
-            )
+        assigned = _util.pin_state(assigned.union(part))
+        live_v = _util.pin_state(
+            live_v.join(no_bcast(reach.select("id")), "id", "left_anti"), "id"
+        )
+        live_e = _live_edges(live_e, live_v, no_bcast)
         if live_v.isEmpty():
             break
     else:
@@ -452,60 +397,6 @@ def contract_graph(
     return out.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("weight"))
 
 
-def _reachable(
-    e: DataFrame,
-    seeds: DataFrame,
-    no_bcast,
-    shuffle_p: int,
-    include_seeds: bool = True,
-) -> DataFrame:
-    """Set of vertex ids reachable from ``seeds`` along directed edges —
-    frontier BFS as a DataFrame fixpoint: each round expands the frontier
-    through one hash(src) join, anti-joins the visited set, and checkpoints
-    (O(diameter) rounds, two shuffles per round, nothing driver-resident).
-    ``include_seeds=False`` returns only vertices reachable via >= 1 edge,
-    which may still contain seeds that sit on a cycle from another seed.
-    """
-    spark = e.sparkSession
-    with _util.static_plan(spark):
-        visited = (
-            seeds.select(F.col("id").cast("long"))
-            .distinct()
-            .repartition(shuffle_p, "id")
-            .localCheckpoint(eager=True)
-        )
-    frontier = visited
-    reached_only = None
-    while True:
-        nxt = (
-            e.join(no_bcast(frontier.select(F.col("id").alias("src"))), "src", "left_semi")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-        )
-        if not include_seeds:
-            reached_only = (
-                nxt
-                if reached_only is None
-                else reached_only.union(nxt).distinct()
-            )
-            with _util.static_plan(spark):
-                reached_only = reached_only.repartition(
-                    shuffle_p, "id"
-                ).localCheckpoint(eager=True)
-        frontier = nxt.join(no_bcast(visited), "id", "left_anti")
-        if frontier.isEmpty():
-            break
-        with _util.static_plan(spark):
-            frontier = frontier.repartition(shuffle_p, "id").localCheckpoint(
-                eager=True
-            )
-            visited = visited.union(frontier).localCheckpoint(eager=True)
-    if include_seeds:
-        return visited
-    # the loop body always assigns reached_only before its first exit check
-    return reached_only
-
-
 def bowtie(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -525,7 +416,7 @@ def bowtie(
 
     Returns (id, component: string) for every vertex (default universe:
     edge endpoints). Built entirely from the engine's existing fixpoint
-    discipline: one SCC run + four frontier-BFS reachability fixpoints
+    discipline: one SCC run + four frontier searches
     (forward/backward from CORE, forward from IN, backward from OUT), all
     O(diameter) rounds with size-gated joins and nothing O(V) on the
     driver — the same shape Broder ran over a 200M-page crawl, so the plan
@@ -543,8 +434,12 @@ def bowtie(
         .repartition(shuffle_p, "src")
         .persist()
     )
-    e.count()
-    et = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    et = (
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        .repartition(shuffle_p, "src")
+        .persist()
+    )
+    e.count(), et.count()
     if vertices is None:
         vertices = (
             e.select(F.col("src").alias("id"))
@@ -564,6 +459,7 @@ def bowtie(
     )
     if not top:
         e.unpersist()
+        et.unpersist()
         return verts.select("id", F.lit("DISCONNECTED").alias("component"))
     core_lbl = top[0]["scc"]
     core = (
@@ -572,15 +468,26 @@ def bowtie(
         .localCheckpoint(eager=True)
     )
 
-    fwd_core = _reachable(e, core, no_bcast, shuffle_p)
-    bwd_core = _reachable(et, core, no_bcast, shuffle_p)
-    out_s = fwd_core.join(no_bcast(core), "id", "left_anti").localCheckpoint(eager=True)
-    in_s = bwd_core.join(no_bcast(core), "id", "left_anti").localCheckpoint(eager=True)
+    def reach(edges_by_src: DataFrame, seeds: DataFrame) -> DataFrame:
+        return _frontier_search(edges_by_src, seeds, no_bcast).select("id")
+
+    def reach_by_edge(edges_by_src: DataFrame, seeds: DataFrame) -> DataFrame:
+        # strictly "via >= 1 edge": the dst of every edge whose src was
+        # reached, which may still hold seeds that sit on a cycle
+        visited = reach(edges_by_src, seeds).select(F.col("id").alias("src"))
+        return (
+            edges_by_src.join(no_bcast(visited), "src", "left_semi")
+            .select(F.col("dst").alias("id"))
+            .distinct()
+        )
+
+    out_s = reach(e, core).join(no_bcast(core), "id", "left_anti").localCheckpoint(eager=True)
+    in_s = reach(et, core).join(no_bcast(core), "id", "left_anti").localCheckpoint(eager=True)
     # TUBES/TENDRILS probes: strictly "via >= 1 edge" so an IN vertex is not
     # its own witness; membership tests below only consult these for
     # vertices outside CORE/IN/OUT, where any overlap is harmless
-    fwd_in = _reachable(e, in_s, no_bcast, shuffle_p, include_seeds=False)
-    bwd_out = _reachable(et, out_s, no_bcast, shuffle_p, include_seeds=False)
+    fwd_in = reach_by_edge(e, in_s)
+    bwd_out = reach_by_edge(et, out_s)
 
     def flag(df: DataFrame, name: str) -> DataFrame:
         return df.select("id", F.lit(True).alias(name))
@@ -612,6 +519,7 @@ def bowtie(
     )
     labeled = labeled.localCheckpoint(eager=True)
     e.unpersist()
+    et.unpersist()
     return labeled
 
 

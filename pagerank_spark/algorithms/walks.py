@@ -68,8 +68,7 @@ def random_walks(
         )
         .select("start_id", "walk", F.col("start_id").alias("cur"))
     )
-    with _util.static_plan(spark):
-        frontier = frontier.repartition(shuffle_p, "cur").localCheckpoint(eager=True)
+    frontier = _util.pin_state(frontier, "cur")
 
     out_rows = [
         frontier.select(
@@ -92,8 +91,7 @@ def random_walks(
             .agg(F.min("pick").alias("pick"))
             .select("start_id", "walk", F.col("pick.nb").alias("cur"))
         )
-        with _util.static_plan(spark):
-            frontier = nxt.repartition(shuffle_p, "cur").localCheckpoint(eager=True)
+        frontier = _util.pin_state(nxt, "cur")
         out_rows.append(
             frontier.select(
                 "start_id", "walk", F.lit(t).cast("int").alias("step"),
@@ -175,8 +173,7 @@ def node2vec_walks(
             F.col("start_id").alias("cur"),
         )
     )
-    with _util.static_plan(spark):
-        frontier = frontier.repartition(shuffle_p, "cur").localCheckpoint(eager=True)
+    frontier = _util.pin_state(frontier, "cur")
 
     out_rows = [
         frontier.select(
@@ -259,8 +256,7 @@ def node2vec_walks(
                     F.col("dst").alias("cur"),
                 )
             )
-        with _util.static_plan(spark):
-            frontier = nxt.repartition(shuffle_p, "cur").localCheckpoint(eager=True)
+        frontier = _util.pin_state(nxt, "cur")
         out_rows.append(
             frontier.select(
                 "start_id", "walk", F.lit(t).cast("int").alias("step"),

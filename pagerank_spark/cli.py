@@ -14,6 +14,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -36,9 +37,12 @@ def _catalog(args, default_durable: bool = False):
     loss, so cluster runs need a durable warehouse to resume from. The
     default location is `<output>_warehouse` (a sibling of --output, so
     overwrite of the output dir cannot wipe it) or a fresh temp dir when no
-    --output is given; the resolved path is echoed in the result JSON.
-    Pass `--warehouse none` to opt out (fastest, but a killed run restarts
-    from iteration 0)."""
+    --output is given; the resolved path and the run id are echoed in the
+    result JSON. `pagerank --run-id ... --resume` picks a killed run back
+    up; `components` has no resume flag, so its echoed run id is resumed
+    through the library (`connected_components(..., catalog=Catalog(wh),
+    run_id=..., resume=True)`). Pass `--warehouse none` to opt out
+    (fastest, but a killed run restarts from iteration 0)."""
     wh = args.warehouse
     if wh == "none":
         return None
@@ -136,12 +140,20 @@ def cmd_components(args) -> int:
     from pagerank_spark.sources.graphfile import vertices_df
 
     edges, n = _load_edges(spark, args)
-    comp = connected_components(
-        edges, vertices_df(spark, n), catalog=_catalog(args, default_durable=True)
-    )
+    cat = _catalog(args, default_durable=True)
+    run_id = uuid.uuid4().hex[:12]
+    comp = connected_components(edges, vertices_df(spark, n), catalog=cat, run_id=run_id)
     if args.output:
         comp.write.mode("overwrite").parquet(args.output)
-    print(json.dumps({"n_components": comp.select("component").distinct().count()}))
+    print(
+        json.dumps(
+            {
+                "n_components": comp.select("component").distinct().count(),
+                "run_id": run_id,
+                "warehouse": cat.warehouse if cat else None,
+            }
+        )
+    )
     return 0
 
 
@@ -516,7 +528,9 @@ def main(argv: list[str] | None = None) -> int:
         "--warehouse", default=None,
         help="catalog dir for durable checkpoints/lineage. Iterative jobs "
         "(pagerank, components) default to <output>_warehouse (or a temp "
-        "dir) so killed runs resume; pass 'none' to opt out",
+        "dir); pagerank --resume restarts a killed run from it, a killed "
+        "components run resumes through the library from its echoed "
+        "run_id; pass 'none' to opt out",
     )
     sub = p.add_subparsers(dest="cmd", required=True)
 

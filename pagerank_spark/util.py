@@ -2,9 +2,7 @@
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Row count above which an O(V)-sized join side must never be auto-broadcast:
@@ -29,9 +27,10 @@ def no_bcast_fn(n_rows: int):
     return no_bcast
 
 
-@contextmanager
-def static_plan(spark: SparkSession):
-    """Compile and execute the wrapped queries with AQE disabled.
+def pin_state(df: DataFrame, *keys: str) -> DataFrame:
+    """Pin one round of an iterative loop's state: hash-repartition ``df``
+    on ``keys`` to ``spark.sql.shuffle.partitions`` (when keys are given)
+    and run an eager ``localCheckpoint``, compiled with AQE disabled.
 
     ``localCheckpoint(eager=True)`` under AQE records UnknownPartitioning in
     the resulting LogicalRDD (AdaptiveSparkPlanExec reports no partitioning
@@ -39,20 +38,24 @@ def static_plan(spark: SparkSession):
     so every downstream join against the checkpoint re-exchanges it. A
     statically planned checkpoint keeps the real hash partitioning, letting
     iterative algorithms chain checkpoints at one shuffle per iteration.
-    The previous AQE setting is restored on exit.
+    The previous AQE setting is restored on return.
 
-    Pitfall: a Dataset caches its QueryExecution on first access, so the
-    frame being checkpointed must have its plan FIRST compiled inside this
-    context — explaining/auditing it beforehand (with AQE on) poisons the
-    later checkpoint with the adaptive plan. Audit a separately built copy
-    of the plan instead (see tests/test_plans.py)."""
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
+    Pitfall: a Dataset caches its QueryExecution on first access, so a frame
+    pinned without ``keys`` must not have had its plan compiled before this
+    call — explaining/auditing it beforehand (with AQE on) poisons the
+    checkpoint with the adaptive plan. Audit a separately built copy of the
+    plan instead (see tests/test_plans.py)."""
+    spark = df.sparkSession
+    aqe = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
     try:
-        yield
+        if keys:
+            n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            df = df.repartition(n, *keys)
+        return df.localCheckpoint(eager=True)
     finally:
-        spark.conf.set(key, prev)
+        spark.conf.set(aqe, prev)
 
 
 def approx_vertex_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> int:

@@ -38,7 +38,9 @@ def test_parquet_filter_pushdown_and_pruning(spark):
 
 def test_small_dim_join_broadcasts(spark):
     """orders ⋈ customer with an aggregated left side: the small dimension
-    must arrive via BroadcastHashJoin (no full shuffle of customer)."""
+    must arrive via BroadcastHashJoin (no full shuffle of customer). Checked
+    on the query's own nodes: a cached input's build plan must not be able
+    to supply the match."""
     orders = spark.read.parquet(f"{SF}/orders.parquet")
     cust = spark.read.parquet(f"{SF}/customer.parquet")
     q = (
@@ -46,7 +48,7 @@ def test_small_dim_join_broadcasts(spark):
         .agg(F.sum("o_totalprice").alias("total"))
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
     )
-    assert "BroadcastHashJoin" in _plan(q)
+    assert "BroadcastHashJoin" in _node_names(q)
 
 
 def test_pagerank_dataframe_no_broadcast_above_gate(spark, monkeypatch):
@@ -146,9 +148,8 @@ def test_labelprop_big_round_single_exchange(spark):
     the edge cache's hash(b) x the statically-checkpointed labels' hash(id);
     the label-update join must reuse hash(id) x the aggregate's hash(id)."""
     from pagerank_spark.algorithms.labelprop import _lp_round
-    from pagerank_spark.util import static_plan
+    from pagerank_spark.util import pin_state
 
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = spark.range(2000, numPartitions=4).select(
         (F.col("id") % 100).alias("a"), ((F.col("id") * 13) % 100).alias("b")
     )
@@ -163,15 +164,13 @@ def test_labelprop_big_round_single_exchange(spark):
     labels0 = spark.range(100, numPartitions=4).select(
         "id", F.col("id").alias("label")
     )
-    with static_plan(spark):
-        labels = labels0.repartition("id").localCheckpoint(eager=True)
+    labels = pin_state(labels0, "id")
 
     sh, _bc = _exchanges(_lp_round(und, labels, big=True))
     assert sh == 1, f"big LP round planned {sh} shuffle exchanges, want 1"
 
-    # chained round off a fresh statically-checkpointed result: still 1
-    with static_plan(spark):
-        nxt = _lp_round(und, labels, big=True).localCheckpoint(eager=True)
+    # chained round off a fresh pinned result: still 1
+    nxt = pin_state(_lp_round(und, labels, big=True))
     sh2, _bc2 = _exchanges(_lp_round(und, nxt, big=True))
     assert sh2 == 1, f"chained big LP round planned {sh2} exchanges, want 1"
     und.unpersist()
@@ -223,7 +222,7 @@ def test_coreness_round_exchanges_move_only_candidates(spark):
     subset: candidate distinct + value re-key + h-index clustering. The
     state merge consumes the checkpoint's hash(id) without an exchange."""
     from pagerank_spark.sources.synthetic import synthetic_edges
-    from pagerank_spark.util import static_plan
+    from pagerank_spark.util import pin_state
 
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = synthetic_edges(spark, 300, 3000, seed=7, num_partitions=4)
@@ -238,13 +237,9 @@ def test_coreness_round_exchanges_move_only_candidates(spark):
     nbrs_by_nb = pairs.repartition(p, "nb").persist()
     nbrs_by_id = pairs.repartition(p, "id").persist()
     nbrs_by_nb.count(), nbrs_by_id.count()
-    with static_plan(spark):
-        state = (
-            nbrs_by_id.groupBy("id")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .repartition(p, "id")
-            .localCheckpoint(eager=True)
-        )
+    state = pin_state(
+        nbrs_by_id.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("c")), "id"
+    )
     changed = state.select("id")
 
     def no_bcast(df):
@@ -271,8 +266,7 @@ def test_coreness_round_exchanges_move_only_candidates(spark):
     merged = state.join(no_bcast(fresh), "id", "left").select(
         "id", F.coalesce(F.col("c_new"), F.col("c")).alias("c")
     )
-    with static_plan(spark):
-        sh, _bc = _exchanges(merged)
+    sh, _bc = _exchanges(merged)
     # candidate distinct (1) + value-join re-key of the candidate subset (1)
     # + h-index clustering back to hash(id) (1); everything else reuses the
     # persisted layouts / checkpoint partitioning
@@ -290,7 +284,7 @@ def test_hyperball_hop_single_exchange(spark):
     no exchange on top of it."""
     from pagerank_spark.algorithms.hyperball import _hop, _init_registers
     from pagerank_spark.sources.synthetic import synthetic_edges
-    from pagerank_spark.util import static_plan
+    from pagerank_spark.util import pin_state
 
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = synthetic_edges(spark, 300, 3000, seed=7, num_partitions=4)
@@ -308,10 +302,7 @@ def test_hyperball_hop_single_exchange(spark):
         .persist()
     )
     e_dst.count()
-    with static_plan(spark):
-        state = (
-            _init_registers(verts).repartition(p, "id").localCheckpoint(eager=True)
-        )
+    state = pin_state(_init_registers(verts), "id")
 
     def no_bcast(df):
         return df.hint("shuffle_hash")
@@ -320,8 +311,7 @@ def test_hyperball_hop_single_exchange(spark):
     assert sh == 1, f"hyperball hop planned {sh} shuffle exchanges, want 1"
 
     # chained off the previous hop's checkpoint, as the run loop does
-    with static_plan(spark):
-        state2 = _hop(e_dst, state, no_bcast).localCheckpoint(eager=True)
+    state2 = pin_state(_hop(e_dst, state, no_bcast))
     sh2, _ = _exchanges(_hop(e_dst, state2, no_bcast))
     assert sh2 == 1, f"chained hyperball hop planned {sh2} exchanges, want 1"
 
@@ -363,11 +353,14 @@ def test_co_citation_pair_join_plan(spark):
 
 
 def test_paragraph_dedup_election_is_aggregate_not_window(spark):
-    """The first-occurrence election must compile to partial+final
-    HashAggregates (map-side combine absorbs boilerplate-hot paragraph
-    keys) and NEVER to a Window over the hash — a window sorts every copy
-    of the hot key on one reducer, the exact skew this operator exists to
-    survive."""
+    """The first-occurrence election must compile to a partial + final
+    SortAggregate (a min over the (doc id, paragraph index) struct has no
+    fixed-width hash buffer; the partial still combines per map partition,
+    absorbing boilerplate-hot paragraph keys) and NEVER to a Window over
+    the hash — a window sorts every copy of the hot key on one reducer, the
+    exact skew this operator exists to survive. The per-doc rebuild is the
+    two ObjectHashAggregates (collect_list); the node names are exact, so
+    they cannot stand in for the election."""
     from pagerank_spark.pipeline.dedup import paragraph_dedup
 
     docs = spark.createDataFrame(
@@ -376,7 +369,8 @@ def test_paragraph_dedup_election_is_aggregate_not_window(spark):
     df = paragraph_dedup(docs)
     plan = _plan(df)
     assert "Window" not in plan
-    assert plan.count("HashAggregate") >= 2  # partial + final for the min
+    nodes = _node_names(df)
+    assert nodes.count("SortAggregate") == 2  # partial + final for the min
     sh, _ = _exchanges(df)
     assert sh <= 3, f"paragraph dedup planned {sh} shuffles, want <= 3"
 
@@ -384,23 +378,19 @@ def test_paragraph_dedup_election_is_aggregate_not_window(spark):
 def _teleport_state(spark, n: int, K: int):
     """A fresh, unexecuted (id, non_dangling, t0.., r0..) state plan."""
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        spark.range(0, n, 1, p)
-        .select(
-            "id",
-            F.lit(True).alias("non_dangling"),
-            *[F.when(F.col("id") < 5, 0.2).otherwise(0.0).alias(f"t{k}") for k in range(K)],
-            *[F.lit(1.0 / n).alias(f"r{k}") for k in range(K)],
-        )
-        .repartition(p, "id")
+    return spark.range(0, n, 1, p).select(
+        "id",
+        F.lit(True).alias("non_dangling"),
+        *[F.when(F.col("id") < 5, 0.2).otherwise(0.0).alias(f"t{k}") for k in range(K)],
+        *[F.lit(1.0 / n).alias(f"r{k}") for k in range(K)],
     )
 
 
 def _teleport_step_inputs(spark, edges, n: int, K: int, no_bcast):
     """The cached, src-partitioned (src, dst, w) edge table and a state
-    checkpoint compiled under static_plan, as _teleport_pagerank builds
+    checkpoint pinned with util.pin_state, as _teleport_pagerank builds
     them."""
-    from pagerank_spark.util import static_plan
+    from pagerank_spark.util import pin_state
 
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     out = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out"))
@@ -411,9 +401,7 @@ def _teleport_step_inputs(spark, edges, n: int, K: int, no_bcast):
         .persist()
     )
     ew.count()
-    with static_plan(spark):
-        state = _teleport_state(spark, n, K).localCheckpoint(eager=True)
-    return ew, state
+    return ew, pin_state(_teleport_state(spark, n, K), "id")
 
 
 @pytest.mark.parametrize("K", [1, 4])
@@ -424,13 +412,13 @@ def test_ppr_batch_iteration_single_exchange(spark, K):
     checkpoint's hash(id), the aggregation (K sums at once) is the only
     exchange, and the rank-update left join consumes hash(id) x hash(dst) —
     K topic vectors ride one edge join and one aggregation instead of K
-    loops. This holds because the run loop compiles every state checkpoint
-    under util.static_plan; an AQE-compiled localCheckpoint records
+    loops. This holds because the run loop pins every state checkpoint
+    with util.pin_state (AQE off); an AQE-compiled localCheckpoint records
     UnknownPartitioning and regresses the same step to 3 exchanges
     (asserted below as the counterexample)."""
     from pagerank_spark.algorithms.linkanalysis import _teleport_iteration
     from pagerank_spark.sources.synthetic import synthetic_edges
-    from pagerank_spark.util import static_plan
+    from pagerank_spark.util import pin_state
 
     def no_bcast(df):
         return df.hint("shuffle_hash")
@@ -449,20 +437,22 @@ def test_ppr_batch_iteration_single_exchange(spark, K):
     # plan object — a Dataset caches its QueryExecution on first access, so
     # checkpointing the frame audited above would capture its AQE-compiled
     # plan (UnknownPartitioning) instead of the static one (the
-    # static_plan docstring pitfall; exactly what the run loop avoids by
+    # pin_state docstring pitfall; exactly what the run loop avoids by
     # checkpointing before any explain).
-    with static_plan(spark):
-        nxt = _teleport_iteration(
-            ew, state, K, 0.85, zeros, ones, no_bcast
-        ).localCheckpoint(eager=True)
+    nxt = pin_state(_teleport_iteration(ew, state, K, 0.85, zeros, ones, no_bcast))
     nxt = nxt.drop(*[f"o{k}" for k in range(K)])
     sh2, _bc2 = _exchanges(_teleport_iteration(ew, nxt, K, 0.85, zeros, ones, no_bcast))
     assert sh2 == 1, f"K={K} chained ppr iteration planned {sh2} exchanges, want 1"
 
-    # counterexample guard: an AQE-compiled checkpoint loses the partitioning
+    # counterexample guard: an AQE-compiled checkpoint (the same repartition
+    # and checkpoint, hand-built without pin_state) loses the partitioning
     # and the same iteration pays 3 shuffles — if this starts passing with
-    # sh3 == 1, Spark fixed the AQE metadata and static_plan can be retired
-    bad_state = _teleport_state(spark, n, K).localCheckpoint(eager=True)
+    # sh3 == 1, Spark fixed the AQE metadata and pin_state's AQE switch can
+    # be retired
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    bad_state = (
+        _teleport_state(spark, n, K).repartition(p, "id").localCheckpoint(eager=True)
+    )
     sh3, _bc3 = _exchanges(
         _teleport_iteration(ew, bad_state, K, 0.85, zeros, ones, no_bcast)
     )

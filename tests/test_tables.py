@@ -343,6 +343,46 @@ def test_cc_resume_and_lineage_snapshots(spark, cat):
         assert meta.summary["iteration"] == r["iteration"]
 
 
+def test_cli_components_run_resumes_through_library(spark, tmp_path, capsys):
+    """The `components` subcommand echoes its run id and warehouse (run in
+    this process on the test session; no subprocess), and the library picks
+    that run back up from its last cc_ckpt round instead of round 1."""
+    from pagerank_spark import cli
+    from pagerank_spark.algorithms.components import connected_components
+    from pagerank_spark.oracle import connected_components_numpy
+    from pagerank_spark.sources.graphfile import vertices_df
+
+    n = 12
+    path = np.random.default_rng(5).permutation(10)
+    arr = np.array([*zip(path[:-1], path[1:]), (10, 11)], dtype=np.int64)
+    edges = edges_from_numpy(spark, arr)
+    edges.write.parquet(str(tmp_path / "edges"))
+    wh = str(tmp_path / "wh")
+    argv = [
+        "--master", spark.sparkContext.master,
+        "--shuffle-partitions", spark.conf.get("spark.sql.shuffle.partitions"),
+        "--warehouse", wh,
+        "components", "--edges", str(tmp_path / "edges"), "--n", str(n),
+    ]
+    assert cli.main(argv) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["warehouse"] == wh
+    cat = Catalog(wh)
+    table = f"cc_ckpt_{out['run_id']}"
+    rounds = len(cat.snapshots(table))
+    assert rounds >= 3
+    comp = connected_components(
+        edges, vertices_df(spark, n), catalog=cat, run_id=out["run_id"], resume=True
+    )
+    exp = connected_components_numpy(arr, n)
+    assert {r["id"]: r["component"] for r in comp.collect()} == {
+        i: int(exp[i]) for i in range(n)
+    }
+    resumed = cat.snapshots(table)[rounds:]
+    assert resumed
+    assert cat.snapshot_meta(table, resumed[0]).summary["iteration"] == rounds + 1
+
+
 def test_expire_snapshots_keeps_referenced_data(spark, tmp_path):
     """Expiry deletes old manifests + unreferenced data dirs (including a
     planted crashed-commit orphan) but never anything a retained snapshot
