@@ -192,6 +192,38 @@ def _hop(e_dst: DataFrame, state: DataFrame, no_bcast) -> DataFrame:
     return merged.select(F.col("src").alias("id"), *repacked)
 
 
+def _edge_cache(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The ball-pull edge cache every hop joins on dst == state.id, built and
+    materialized once, plus its vertex table (id). The per-vertex self-loop
+    folds "union own ball" into the same pull (no per-hop own-ball join)."""
+    shuffle_p = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    vertices = (
+        edges.select(F.col("src").alias("id"))
+        .union(edges.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    e_dst = (
+        edges.select("src", "dst")
+        .filter(F.col("src") != F.col("dst"))
+        .union(vertices.select(F.col("id").alias("src"), F.col("id").alias("dst")))
+        # repartition BEFORE dedup: hash(dst) clusters (src, dst), so the
+        # dropDuplicates aggregate reuses the exchange — one O(E) shuffle
+        # for the whole setup instead of distinct-then-repartition's two
+        .repartition(shuffle_p, "dst")
+        .dropDuplicates(["src", "dst"])
+        # sort the cache by the join key ONCE: the per-hop sort-merge pull
+        # join then reuses the cached ordering instead of re-sorting the
+        # O(E) side every hop (InMemoryTableScan preserves outputOrdering)
+        .sortWithinPartitions("dst")
+        .persist()
+    )
+    e_dst.count()
+    # the cache holds EXACTLY one self-loop per vertex: reuse it as the
+    # vertex table (exact count, no second O(E) distinct scan)
+    verts = e_dst.filter(F.col("src") == F.col("dst")).select(F.col("src").alias("id"))
+    return e_dst, verts
+
+
 @dataclass
 class HyperBallResult:
     balls: DataFrame  # (id, t, s_int, zero_regs, ball_est) for t = 0..T
@@ -216,42 +248,11 @@ def hyperball(
     """
     import time
 
-    spark = edges.sparkSession
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if reverse:
         edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    # ball-pull joins on dst == state.id every hop: cache that layout once.
-    # The per-vertex self-loop folds "union own ball" into the same merge,
-    # deleting the old per-hop own-ball join (and its O(V) sorts at scale).
-    e_dst = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .union(vertices.select(F.col("id").alias("src"), F.col("id").alias("dst")))
-        # repartition BEFORE dedup: hash(dst) clusters (src, dst), so the
-        # dropDuplicates aggregate reuses the exchange — one O(E) shuffle
-        # for the whole setup instead of distinct-then-repartition's two
-        .repartition(shuffle_p, "dst")
-        .dropDuplicates(["src", "dst"])
-        # sort the cache by the join key ONCE: the per-hop sort-merge pull
-        # join then reuses the cached ordering instead of re-sorting the
-        # O(E) side every hop (InMemoryTableScan preserves outputOrdering)
-        .sortWithinPartitions("dst")
-        .persist()
-    )
-    e_dst.count()
-    # the cache holds EXACTLY one self-loop per vertex: reuse it as the
-    # vertex table (exact count, no second O(E) distinct scan) for both the
-    # broadcast gate and register init
-    cached_verts = e_dst.filter(F.col("src") == F.col("dst")).select(
-        F.col("src").alias("id")
-    )
-    n_verts = cached_verts.count()
+    e_dst, verts = _edge_cache(edges)
+    n_verts = verts.count()
 
     def no_bcast(df: DataFrame) -> DataFrame:
         # above the gate: MERGE, not shuffle_hash — even packed (9 fields,
@@ -261,7 +262,7 @@ def hyperball(
         # hint adds sorts, never exchanges (plan-audited).
         return df if n_verts <= _util.BROADCAST_SAFE_ROWS else df.hint("merge")
 
-    state = _util.pin_state(_init_registers(cached_verts), "id")
+    state = _util.pin_state(_init_registers(verts), "id")
 
     def snapshot(st: DataFrame, t: int) -> DataFrame:
         # materialize the 4-column summary per hop (id, s_int, zero_regs,

@@ -78,6 +78,7 @@ from pyspark.sql.types import (
 
 from pagerank_spark.algorithms.linkanalysis import _teleport_pagerank
 from pagerank_spark.lineage import LineageWriter, commit_iteration, last_checkpoint
+from pagerank_spark.util import task_slots
 
 
 # bump when the packed block-file layout changes: reuse_pack refuses to
@@ -208,6 +209,35 @@ def spmv_chunk(
     return k
 
 
+# nblocks -> {block b: smallest x with pmod(hash(x), nblocks) == b}. Spark's
+# hash() has a fixed seed, so the mapping depends on nblocks alone and holds
+# for every session in the process.
+_PREIMAGES: dict[int, dict[int, int]] = {}
+
+# Largest block_size (accumulator values per task, 128 MiB of float64) the
+# default block count allows: past it, blocks come in further waves.
+MAX_BLOCK_VALUES = 1 << 24
+
+
+def _preimages(spark, nblocks: int) -> dict[int, int]:
+    """For each block b, a key x_b with pmod(hash(x_b), nblocks) == b, found
+    by probing Spark's own Murmur3 (one job), memoized per nblocks."""
+    remap = _PREIMAGES.get(nblocks)
+    if remap is None:
+        probe = (
+            spark.range(0, max(4096, nblocks * 64))
+            .select(
+                F.col("id").alias("x"),
+                F.pmod(F.hash(F.col("id")), F.lit(nblocks)).alias("p"),
+            )
+            .groupBy("p")
+            .agg(F.min("x").alias("x"))
+            .collect()
+        )
+        remap = _PREIMAGES[nblocks] = {int(r["p"]): int(r["x"]) for r in probe}
+    return remap
+
+
 def _block_aligned(df: DataFrame, nblocks: int, spark) -> DataFrame:
     """Repartition (block, ...) rows so partition i holds EXACTLY block i.
 
@@ -215,21 +245,10 @@ def _block_aligned(df: DataFrame, nblocks: int, spark) -> DataFrame:
     small key domain (several blocks on one task, others empty — iteration
     latency = the worst task), and repartitionByRange SAMPLES its child to
     pick boundaries, re-executing it — the pack stage writes block files as
-    a side effect and must run exactly once. Instead, probe Spark's own
-    Murmur3 to find, for each block b, a preimage key x_b with
-    pmod(hash(x_b), nblocks) == b, and hash-repartition on the remapped key:
-    one shuffle, no sampling, perfect one-block-per-task placement."""
-    probe = (
-        spark.range(0, max(4096, nblocks * 64))
-        .select(
-            F.col("id").alias("x"),
-            F.pmod(F.hash(F.col("id")), F.lit(nblocks)).alias("p"),
-        )
-        .groupBy("p")
-        .agg(F.min("x").alias("x"))
-        .collect()
-    )
-    remap = {int(r["p"]): int(r["x"]) for r in probe}
+    a side effect and must run exactly once. Instead, hash-repartition on
+    each block's Murmur3 preimage key (``_preimages``): one shuffle, no
+    sampling, perfect one-block-per-task placement."""
+    remap = _preimages(spark, nblocks)
     if len(remap) < nblocks:  # astronomically unlikely at 64x oversampling;
         return df.repartition(nblocks, "block")  # degrade to collisions
     mapping = F.create_map(
@@ -300,6 +319,12 @@ class PageRank:
         self.mode = mode
         self.catalog = catalog
         self.lineage = lineage
+        # csr block count, one Spark task per block per iteration. Default:
+        # the scheduler's task slots (util.task_slots), so an iteration is
+        # ONE task wave whatever spark.sql.shuffle.partitions says; a
+        # multiple of them only when n / slots would pass MAX_BLOCK_VALUES.
+        # An explicit value is the only override; a pack reused from a
+        # manifest keeps the count it was packed with.
         self.num_blocks = num_blocks
         # hub-skew mitigation: when set, the per-iteration contrib aggregation
         # runs as a salted two-stage sum (graph/skew.py) so no reduce task
@@ -552,8 +577,11 @@ class PageRank:
                 n_hubs, hub_ids, outdeg, idx_t, packed, scratch, keep_scratch=True,
             )
 
-        nblocks = self.num_blocks or int(
-            spark.conf.get("spark.sql.shuffle.partitions")
+        # one block per task slot, so an iteration runs in one task wave; as
+        # many waves as keep block_size <= MAX_BLOCK_VALUES
+        slots = task_slots(sc)
+        nblocks = self.num_blocks or slots * max(
+            1, -(-n // (slots * MAX_BLOCK_VALUES))
         )
         block_size = (n + nblocks - 1) // nblocks
 

@@ -58,6 +58,18 @@ def pin_state(df: DataFrame, *keys: str) -> DataFrame:
         spark.conf.set(aqe, prev)
 
 
+def task_slots(sc) -> int:
+    """Tasks the scheduler can run at once under the default resource
+    profile: the count Spark's barrier mode checks a stage against. Falls
+    back to ``sc.defaultParallelism`` while no executor has registered (the
+    scheduler then reports 0). Unlike ``defaultParallelism`` and
+    ``spark.sql.shuffle.partitions``, which ``get_spark`` raises to at least
+    8, it is the real slot count: 4 on ``local[4]``."""
+    jsc = sc._jsc.sc()
+    profile = jsc.resourceProfileManager().defaultResourceProfile()
+    return int(jsc.maxNumConcurrentTasks(profile)) or sc.defaultParallelism
+
+
 def approx_vertex_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> int:
     """HLL estimate (±~2%) of the number of distinct endpoints in an edge
     DataFrame — one scan with map-side partials and a 1-row shuffle, cheap

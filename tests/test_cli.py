@@ -278,11 +278,6 @@ def test_cli_bowtie_adamic_adar_graph_diff(spark, capsys, tmp_path):
                      "--max-src-fanout", "1000000")
     assert r["pairs"] == GOLDEN_FACTS["cocite_pairs"] and r["max_score"] > 0
 
-    # get_spark hands back the live test session and applies these runtime
-    # settings to it: every later test in the run sees 2 shuffle partitions
-    from pagerank_spark.session import get_spark
-
-    spark = get_spark("cli_diff_fixture", master="local[2]", shuffle_partitions=2)
     old = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
     new = spark.createDataFrame([(0, 1), (2, 3)], "src long, dst long")
     po, pn = str(tmp_path / "old"), str(tmp_path / "new")

@@ -255,7 +255,7 @@ def test_block_aligned_exact_placement(spark):
 
     from pagerank_spark.algorithms.pagerank import _block_aligned
 
-    for nblocks in (2, 7, 32):
+    for nblocks in (2, 4, 7, 32):
         df = spark.range(0, nblocks * 5).select(
             (F.col("id") % nblocks).alias("block"), F.col("id").alias("v")
         )
@@ -265,6 +265,59 @@ def test_block_aligned_exact_placement(spark):
         rows = out.collect()
         assert len(rows) == nblocks * 5
         assert all(r["block"] == r["pid"] for r in rows), nblocks
+
+
+def test_csr_one_task_wave_per_iteration(spark, golden, monkeypatch):
+    """By default a csr iteration is ONE task wave: one block per scheduler
+    task slot, whatever spark.sql.shuffle.partitions says (200 here, the
+    setting of a bare spark-submit session). Only a block past
+    MAX_BLOCK_VALUES adds waves, and an explicit num_blocks still wins."""
+    from pagerank_spark.algorithms import pagerank as pr
+    from pagerank_spark.util import task_slots
+
+    _arr, n, expected = golden
+    edges, _ = read_graph_file(spark, GOLDEN_GRAPH)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    slots = task_slots(sc)
+    assert slots == 8  # the conftest's local[8]
+
+    def iteration_tasks(storage, **kw):
+        """The run's result and, per iteration job, the task counts of the
+        stages that ran tasks (a cells job skips the cached pack stage)."""
+        group = f"csr-wave-{storage}-{len(kw)}"
+        sc.setJobGroup(group, group)
+        try:
+            res = PageRank(mode="csr", csr_storage=storage, **kw).run(edges, n)
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        # a run without a catalog ends with its iteration jobs
+        jobs = sorted(tracker.getJobIdsForGroup(group))[-res.iterations :]
+        tasks = []
+        for j in jobs:
+            stages = map(tracker.getStageInfo, tracker.getJobInfo(j).stageIds)
+            tasks.append([s.numTasks for s in stages if s and s.numCompletedTasks])
+        return res, tasks
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        for storage in ("cells", "files"):
+            res, tasks = iteration_tasks(storage)
+            assert res.iterations == 7
+            assert tasks == [[slots]] * 7, (storage, tasks)
+            got = ranks_to_numpy(res.ranks, n)
+            np.testing.assert_allclose(got, expected, atol=1e-6)
+        res, tasks = iteration_tasks("files", num_blocks=3, max_iter=2)
+        assert tasks == [[3]] * 2, tasks
+        # 2319 vertices over 8 slots at <= 128 values a block: 3 waves
+        monkeypatch.setattr(pr, "MAX_BLOCK_VALUES", 128)
+        res, tasks = iteration_tasks("cells", max_iter=1)
+        assert tasks == [[3 * slots]], tasks
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @pytest.mark.parametrize("storage", ["cells", "files"])

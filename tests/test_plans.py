@@ -282,26 +282,17 @@ def test_hyperball_hop_single_exchange(spark):
     pull — no fold join exists), and the ONE shuffle is the explicit
     repartition of the packed 9-field rows by src; the lane-max groupBy adds
     no exchange on top of it."""
-    from pagerank_spark.algorithms.hyperball import _hop, _init_registers
+    from pagerank_spark.algorithms.hyperball import (
+        _edge_cache,
+        _hop,
+        _init_registers,
+    )
     from pagerank_spark.sources.synthetic import synthetic_edges
     from pagerank_spark.util import pin_state
 
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = synthetic_edges(spark, 300, 3000, seed=7, num_partitions=4)
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    e_dst = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .union(verts.select(F.col("id").alias("src"), F.col("id").alias("dst")))
-        .distinct()
-        .repartition(p, "dst")
-        .persist()
-    )
-    e_dst.count()
+    # hyperball's own cache layout and vertex table, not a hand copy
+    e_dst, verts = _edge_cache(edges)
     state = pin_state(_init_registers(verts), "id")
 
     def no_bcast(df):

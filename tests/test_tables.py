@@ -277,14 +277,19 @@ def test_csr_commits_launch_no_spark_job(csr_runs):
 def test_csr_iterations_write_no_shuffle_bytes(spark):
     """The status store confirms the csr lineage's rows_shuffled=0: a csr
     run of 3 iterations writes exactly the shuffle bytes of a 1-iteration
-    run (the pack's one-time shuffles), so its iterations shuffle nothing."""
+    run (the pack's one-time shuffles), so its iterations shuffle nothing.
+    The block-alignment probe's shuffle is memoized per block count, so the
+    memo is filled first: otherwise only the first run would pay it."""
     from py4j.protocol import Py4JJavaError
 
+    from pagerank_spark.algorithms.pagerank import _preimages
+    from pagerank_spark.util import task_slots
     from tests.conftest import micro_graphs
 
     arr, n = micro_graphs()["test1_mirror"]
     edges = edges_from_numpy(spark, arr)
     sc = spark.sparkContext
+    _preimages(spark, task_slots(sc))
     store = sc._jsc.sc().statusStore()
     written = {}
     for iters in (1, 3):
