@@ -23,3 +23,8 @@ engine — see SURVEY.md):
 """
 
 __version__ = "0.1.0"
+
+from pagerank_spark import _zipimport_cache
+
+# every Python UDF task of the package runs in a worker that imported it
+_zipimport_cache.install()
